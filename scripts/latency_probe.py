@@ -2,7 +2,9 @@
 "Request latency" table.
 
 Times the server-shaped ops (1-row TS/KV writes, api-edge reads,
-namespace rewrites, log riders) on a throwaway store: first a COLD
+namespace rewrites, log riders) on a throwaway store, plus
+``post_ts_wire``: a 1-row POST /ts round trip through ``ZestServer``
+and a ``ZestReqClient`` over the ZMTP socket on loopback. First a COLD
 pass (fresh session pays JVM/codegen warm-up — what serve --warm
 absorbs), then N warm iterations, reporting the median.
 
@@ -13,22 +15,34 @@ Prints one JSON line: {"cold": {...}, "warm_median": {...}, "n": N}.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     n = max(1, int(sys.argv[1])) if len(sys.argv) > 1 else 10
 
+    from zestdb_spark import protocol
     from zestdb_spark.api import ZestEngine
     from zestdb_spark.session import get_spark
+    from zestdb_spark.transport import ZestReqClient, ZestServer
 
     spark = get_spark("latency_probe")
     eng = ZestEngine(spark, tempfile.mkdtemp(prefix="latprobe_"))
+    srv = ZestServer(eng).start()
+    cli = ZestReqClient(srv.rep.endpoint, timeout_s=60.0)
+
+    def post_wire(i: int) -> None:
+        body = json.dumps({"value": 1.0 * i}).encode()
+        req = protocol.request_post(f"/ts/w{i}/at/{1000 + i}", body)
+        resp = protocol.decode(cli.request(req))
+        if resp.code != protocol.ACK_CREATED:
+            raise RuntimeError(f"POST over the wire answered {resp.code}")
 
     def ops(i: int) -> "dict[str, float]":
         out: dict[str, float] = {}
@@ -39,6 +53,7 @@ def main() -> None:
             out[label] = round(time.monotonic() - t0, 4)
 
         t("post_ts", lambda: eng.post(f"/ts/s{i}/at/{1000 + i}", {"value": 1.0 * i}))
+        t("post_ts_wire", lambda: post_wire(i))
         t("get_ts_latest", lambda: eng.get(f"/ts/s{i}/latest"))
         t("post_kv", lambda: eng.post(f"/kv/ns{i}/k", json.dumps({"v": i})))
         t("get_kv_keys", lambda: eng.get(f"/kv/ns{i}/keys"))
@@ -46,8 +61,12 @@ def main() -> None:
         t("get_empty_ns", lambda: eng.get(f"/kv/ns{i}/keys"))
         return out
 
-    cold = ops(0)
-    warm = [ops(i) for i in range(1, n + 1)]
+    try:
+        cold = ops(0)
+        warm = [ops(i) for i in range(1, n + 1)]
+    finally:
+        cli.close()
+        srv.stop()
     medians = {
         k: round(statistics.median(w[k] for w in warm), 4) for k in warm[0]
     }

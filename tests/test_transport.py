@@ -13,11 +13,14 @@ from __future__ import annotations
 import json
 import os
 import socket
+import statistics
 import struct
+import threading
+import time
 
 import pytest
 
-from zestdb_spark import protocol
+from zestdb_spark import curve, protocol
 from zestdb_spark.api import ZestEngine
 from zestdb_spark.transport import (
     TransportError,
@@ -392,3 +395,151 @@ def test_serve_warm_is_traceless_and_phased(spark, tmp_path):
     assert args.warm is False
     args = serve.build_parser().parse_args(["--store-root", str(tmp_path / "x")])
     assert args.warm is True
+
+
+# ------------------------------------------------- per-message stall
+
+
+class _RecordingSock:
+    """Socket wrapper recording every ``sendall`` payload."""
+
+    def __init__(self, sock):
+        self._sock = sock
+        self.writes: list[bytes] = []
+
+    def sendall(self, data):
+        self.writes.append(bytes(data))
+        self._sock.sendall(data)
+
+    def __getattr__(self, name):
+        return getattr(self._sock, name)
+
+
+def _nodelay(sock) -> bool:
+    return sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY) != 0
+
+
+def test_tcp_nodelay_on_server_and_client_sockets():
+    """Every TCP socket a _Conn wraps disables Nagle — accepted server
+    sockets, REQ clients and DEALER clients — so a small second frame
+    never waits for the peer's delayed ACK."""
+    rep = ZestRepServer(lambda b: b).start()
+    router = ZestRouterServer().start()
+    try:
+        req = ZestReqClient(rep.endpoint)
+        dealer = ZestDealerClient(router.endpoint, identity="nodelay")
+        try:
+            assert req.request(b"x") == b"x"  # accept has surely landed
+            assert _nodelay(req._conn.sock)
+            assert _nodelay(dealer._conn.sock)
+            assert [_nodelay(c.sock) for c in rep._conns] == [True]
+            deadline = time.time() + 5
+            while not router._conns and time.time() < deadline:
+                time.sleep(0.01)
+            assert [_nodelay(c.sock) for c in router._conns] == [True]
+        finally:
+            req.close()
+            dealer.close()
+    finally:
+        rep.stop()
+        router.stop()
+
+
+def test_multi_frame_message_is_one_write_null():
+    """A message reaches the socket as exactly one ``sendall`` carrying
+    the same bytes the spec/23 frame-by-frame encoding gives."""
+    a, b = socket.socketpair()
+    try:
+        rec = _RecordingSock(a)
+        ca, cb = _Conn(rec, "DEALER"), _Conn(b, "DEALER")
+        frames = [b"", b"x" * 300, b"y"]
+        ca.send_message(frames)
+        assert rec.writes == [
+            b"\x01\x00"
+            + b"\x03" + struct.pack(">Q", 300) + b"x" * 300
+            + b"\x00\x01y"
+        ]
+        assert cb.recv_message() == frames
+    finally:
+        a.close()
+        b.close()
+
+
+def _curve_pair(a, b):
+    """Two _Conns over a socketpair, CURVE handshake completed."""
+    s_pk, s_sk = curve.keypair()
+    c_pk, c_sk = curve.keypair()
+    server = _Conn(a, "ROUTER", curve_server=(s_sk, s_pk, None))
+    client = _Conn(b, "DEALER", curve_client=(s_pk, c_pk, c_sk))
+    t = threading.Thread(target=server.handshake)
+    t.start()
+    client.handshake()
+    t.join(timeout=10)
+    assert not t.is_alive()
+    return server, client
+
+
+@pytest.mark.skipif(not curve.available(), reason="libsodium not available")
+def test_multi_frame_message_is_one_write_curve():
+    """Under CURVE the encrypted MESSAGE commands of one message are
+    concatenated into one ``sendall``."""
+    a, b = socket.socketpair()
+    try:
+        rec = _RecordingSock(b)
+        server, client = _curve_pair(a, rec)
+        rec.writes.clear()
+        frames = [b"", b"x" * 300, b"y"]
+        client.send_message(frames)
+        assert len(rec.writes) == 1
+        # three MESSAGE commands: 33 octets of overhead each, the
+        # 333-octet one LONG-framed, the others short-framed
+        w = rec.writes[0]
+        assert w[:2] == bytes([0x04, 33]) and w[2:10] == b"\x07MESSAGE"
+        assert w[35] == 0x06 and struct.unpack(">Q", w[36:44])[0] == 333
+        assert w[44 + 333] == 0x04 and w[44 + 333 + 1] == 34
+        assert len(w) == 2 + 33 + 9 + 333 + 2 + 34
+        assert server.recv_message() == frames
+    finally:
+        a.close()
+        b.close()
+
+
+def test_recv_exact_long_frame_byte_exact():
+    """An 8 MiB frame survives the receive path byte-exact."""
+    a, b = socket.socketpair()
+    try:
+        ca, cb = _Conn(a, "DEALER"), _Conn(b, "DEALER")
+        big = os.urandom(8 << 20)
+        t = threading.Thread(target=ca.send_message, args=([big],))
+        t.start()
+        assert cb.recv_message() == [big]
+        t.join(timeout=10)
+        assert not t.is_alive()
+    finally:
+        a.close()
+        b.close()
+
+
+@pytest.mark.parametrize("mechanism", ["NULL", "CURVE"])
+def test_req_rep_round_trip_has_no_ack_stall(mechanism):
+    """Loose latency guard: with a handler that returns at once, the
+    median REQ/REP round trip on loopback stays far below the ~80 ms
+    that delayed ACKs add to frame-by-frame writes."""
+    if mechanism == "CURVE" and not curve.available():
+        pytest.skip("libsodium not available")
+    secret = curve.keypair()[1] if mechanism == "CURVE" else None
+    srv = ZestRepServer(lambda b: b, curve_secret=secret).start()
+    try:
+        cli = ZestReqClient(srv.endpoint, server_key=srv.public_key or None)
+        try:
+            cli.request(b"warm")
+            rtts = []
+            for i in range(30):
+                t0 = time.perf_counter()
+                assert cli.request(b"%d" % i) == b"%d" % i
+                rtts.append(time.perf_counter() - t0)
+        finally:
+            cli.close()
+    finally:
+        srv.stop()
+    assert statistics.median(rtts) < 0.020

@@ -606,12 +606,9 @@ def _mg_fold(batches, capacity: int) -> tuple[list, list, int]:
         if acc is None:
             acc = t
         else:
-            acc = (
-                pa.concat_tables([acc, t])
-                .group_by("item")
-                .aggregate([("w", "sum")])
-                .rename_columns(["item", "w"])
-            )
+            g = pa.concat_tables([acc, t]).group_by("item").aggregate([("w", "sum")])
+            # by name: group_by's output column order varies by pyarrow version
+            acc = pa.table({"item": g.column("item"), "w": g.column("w_sum")})
         if acc.num_rows > capacity:
             # batched MG compression: decrement everything by the
             # (capacity+1)-th largest count and drop the <= 0 —

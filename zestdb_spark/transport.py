@@ -34,7 +34,12 @@ Scale posture: the transport is the engine's CONTROL-PLANE edge — one
 driver-side thread per connection, request payloads are API-sized
 (path + small JSON), and every data-plane operation behind it stays a
 distributed DataFrame job. Bulk data never rides this socket (the
-reference is the same: its server loop is one Lwt thread).
+reference is the same: its server loop is one Lwt thread). Each
+message goes out as ONE write on a socket with ``TCP_NODELAY`` set, as
+libzmq does for every TCP socket: a REQ request and a REP reply are
+both two small frames, and written frame by frame Nagle's algorithm
+holds the second until the peer's delayed ACK (~40 ms on Linux) — a
+stall paid twice per round trip.
 """
 
 from __future__ import annotations
@@ -89,6 +94,13 @@ def _parse_endpoint(endpoint: str) -> tuple[str, int]:
     if not host or not port:
         raise ValueError(f"endpoint {endpoint!r} is not tcp://host:port")
     return host, int(port)
+
+
+def _frame_head(flags: int, size: int) -> bytes:
+    """Flags octet + size: one octet up to 255, else LONG + 8 octets."""
+    if size > 255:
+        return bytes([flags | _F_LONG]) + struct.pack(">Q", size)
+    return bytes([flags, size])
 
 
 def _greeting(mechanism: bytes = b"NULL", as_server: bool = False) -> bytes:
@@ -152,28 +164,31 @@ class _Conn:
         self._curve_client = curve_client
         self._session: "curve_mod._Session | None" = None
         self._send_lock = threading.Lock()
+        if sock.family in (socket.AF_INET, socket.AF_INET6):
+            # AF_UNIX socketpairs (framing tests) have no TCP options
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
 
     # ------------------------------------------------------------- bytes
 
     def _recv_exact(self, n: int) -> bytes:
-        buf = b""
-        while len(buf) < n:
-            chunk = self.sock.recv(n - len(buf))
-            if not chunk:
+        # fill one preallocated buffer: linear in n even for frames
+        # near the 1 GiB cap, where growing a bytes object is quadratic
+        buf = bytearray(n)
+        view = memoryview(buf)
+        got = 0
+        while got < n:
+            k = self.sock.recv_into(view[got:])
+            if not k:
                 raise ConnectionError("peer closed")
-            buf += chunk
-        return buf
+            got += k
+        return bytes(buf)
 
     # ------------------------------------------------------------ frames
 
     def _send_frame(self, body: bytes, more: bool = False, command: bool = False) -> None:
         flags = (_F_MORE if more else 0) | (_F_COMMAND if command else 0)
-        if len(body) > 255:
-            head = bytes([flags | _F_LONG]) + struct.pack(">Q", len(body))
-        else:
-            head = bytes([flags, len(body)])
         with self._send_lock:
-            self.sock.sendall(head + body)
+            self.sock.sendall(_frame_head(flags, len(body)) + body)
 
     def _recv_frame(self) -> tuple[int, bytes]:
         flags = self._recv_exact(1)[0]
@@ -188,31 +203,22 @@ class _Conn:
     def send_message(self, frames: list[bytes]) -> None:
         """One logical message = frames chained with MORE. Under CURVE
         each frame becomes one encrypted MESSAGE command whose inner
-        flags byte carries the MORE bit (spec/26)."""
-        if self._session is not None:
-            bodies = [
-                self._session.encrypt(
-                    _F_MORE if i < len(frames) - 1 else 0, body
-                )
-                for i, body in enumerate(frames)
-            ]
-            with self._send_lock:
-                for cmd in bodies:
-                    head = (
-                        bytes([_F_COMMAND | _F_LONG]) + struct.pack(">Q", len(cmd))
-                        if len(cmd) > 255
-                        else bytes([_F_COMMAND, len(cmd)])
-                    )
-                    self.sock.sendall(head + cmd)
-            return
+        flags byte carries the MORE bit (spec/26). The whole message
+        leaves in a single ``sendall`` (see the module's scale posture);
+        encryption runs under the send lock so nonce counters reach the
+        wire in the order the peer's replay floor requires."""
+        last = len(frames) - 1
+        parts: list[bytes] = []
         with self._send_lock:
             for i, body in enumerate(frames):
-                flags = _F_MORE if i < len(frames) - 1 else 0
-                if len(body) > 255:
-                    head = bytes([flags | _F_LONG]) + struct.pack(">Q", len(body))
+                more = _F_MORE if i < last else 0
+                if self._session is not None:
+                    body = self._session.encrypt(more, body)
+                    flags = _F_COMMAND
                 else:
-                    head = bytes([flags, len(body)])
-                self.sock.sendall(head + body)
+                    flags = more
+                parts += (_frame_head(flags, len(body)), body)
+            self.sock.sendall(b"".join(parts))
 
     def recv_message(self) -> list[bytes]:
         """Next complete message (command frames in between are
