@@ -405,6 +405,37 @@ def test_compact_target_bytes_sizing(spark, tmp_path):
     )
 
 
+def test_scoped_compact_sizes_only_in_scope_leaves(spark, tmp_path, monkeypatch):
+    """A scoped target_bytes compact decides scope from the leaf's
+    partition values BEFORE sizing it: the nightly job must not stat
+    every file of the cold rest of the table."""
+    import os as _os
+
+    eng = ZestEngine(spark, str(tmp_path / "scstat"))
+    for series in ("a", "b"):
+        for i in range(3):  # 3 files per leaf
+            eng.post(f"/ts/{series}/at/{i * 1000}", {"value": 1.0})
+    real_getsize = _os.path.getsize
+    statted: list[str] = []
+
+    def spy(path):
+        statted.append(str(path))
+        return real_getsize(path)
+
+    monkeypatch.setattr(_os.path, "getsize", spy)
+    done = eng.store.compact("ts_numeric", series={"a"}, target_bytes=1 << 30)
+    monkeypatch.undo()
+    assert done == 1
+    table_files = [p for p in statted if "ts_numeric" in p]
+    assert any("series_id=a" in p for p in table_files)
+    assert not any("series_id=b" in p for p in table_files), table_files
+    by_leaf: dict = {}
+    for rel in eng.store._live_files("ts_numeric"):
+        by_leaf.setdefault(rel.rsplit("/", 1)[0], []).append(rel)
+    assert len(by_leaf["series_id=a/time_bucket=0"]) == 1
+    assert len(by_leaf["series_id=b/time_bucket=0"]) == 3
+
+
 def test_log_append_crash_is_invisible_and_recoverable(spark, tmp_path, monkeypatch):
     """Round 8: the logs (audit, write_log) are manifested like every
     other table — a crash between staging a log batch and its commit

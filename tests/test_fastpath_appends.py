@@ -219,6 +219,31 @@ def test_kv_local_rewrite_budget_fallback(spark, store, monkeypatch):
     ]
 
 
+def test_kv_local_rewrite_commit_failure_unlinks_replacement(spark, store, monkeypatch):
+    """A driver-side namespace rewrite whose commit fails leaves the
+    namespace fully old and unlinks its uncommitted rw-* file (no
+    manifest references it and no observer glob matches it)."""
+    store.kv_upsert("json", "NS", "a", '"1"')
+
+    def boom(self, *a, **k):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(ZestStore, "_commit", boom)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        store.kv_upsert("json", "NS", "b", '"2"')
+    monkeypatch.undo()
+    kv = store.load("kv_json").filter("id = 'NS'")
+    assert [(r.key, r.value) for r in kv.collect()] == [("a", '"1"')]
+    ns_dir = os.path.join(store._path("kv_json"), "id=NS")
+    on_disk = {f for f in os.listdir(ns_dir) if f.lstrip(".").startswith("rw-")}
+    live = {
+        rel.split("/", 1)[1]
+        for rel in store._live_files("kv_json")
+        if rel.startswith("id=NS/")
+    }
+    assert on_disk == live and len(live) == 1
+
+
 def test_kv_binary_roundtrips_through_fast_path(store):
     payload = bytes(range(256))
     store.kv_upsert("binary", "B", "blob", payload)
@@ -248,6 +273,52 @@ def test_catalog_local_upsert_matches_render(spark, store):
     assert set(by_href) == {"/ts/a", "/ts/b"}
     cvals = [p["val"] for p in by_href["/ts/a"] if p["rel"] == "c"]
     assert cvals == ["42"]  # JSON form, replaced not duplicated
+
+
+def test_catalog_local_upsert_budget_fallback(spark, store, tmp_path, monkeypatch):
+    """Past the driver budget catalog_upsert takes the distributed
+    _overwrite rewrite — and renders the same catalog as the fast path
+    for the same three upserts."""
+    import json
+
+    from zestdb_spark.operators import catalog as cat_ops
+
+    base_md = [
+        {"rel": "urn:X-hypercat:rels:hasDescription:en", "val": "d"},
+        {"rel": "urn:X-hypercat:rels:isContentType", "val": "application/json"},
+    ]
+    items = [
+        {"href": "/ts/a", "item-metadata": base_md + [{"rel": "c", "val": True}]},
+        {"href": "/ts/b", "item-metadata": base_md},
+        {"href": "/ts/a", "item-metadata": base_md + [{"rel": "c", "val": 42}]},
+    ]
+    fast = ZestStore(spark, str(tmp_path / "fast"))
+    for item in items:
+        fast.catalog_upsert(item)
+
+    monkeypatch.setattr(ZestStore, "_KV_LOCAL_MAX_BYTES", 0)
+    overwrites: list[str] = []
+    real_overwrite = ZestStore._overwrite
+
+    def spy(self, table, df):
+        overwrites.append(table)
+        return real_overwrite(self, table, df)
+
+    monkeypatch.setattr(ZestStore, "_overwrite", spy)
+    for item in items:
+        store.catalog_upsert(item)
+    # the first upsert folds an EMPTY table (0 bytes, within budget);
+    # both later ones exceed it
+    assert overwrites == ["catalog_items", "catalog_items"]
+
+    def rendered(st):
+        cat = json.loads(cat_ops.render(st.load("catalog_items")))
+        cat["items"].sort(key=lambda i: i["href"])
+        return cat
+
+    got = rendered(store)
+    assert got == rendered(fast)
+    assert [i["href"] for i in got["items"]] == ["/ts/a", "/ts/b"]
 
 
 def test_vacuum_reclaims_crashed_fastpath_dotfiles(spark, store):

@@ -134,6 +134,38 @@ def test_impl_validated(spark, docs):
         corpus_ops.bm25_topk(docs, ["spark"], 5, impl="Arrow")
     with pytest.raises(ValueError, match="impl"):
         corpus_ops.tf_idf(docs, impl="ARROW")
+    with pytest.raises(ValueError, match="impl"):
+        corpus_ops.dsir_select(docs, docs, 5, impl="ARROW")
+
+
+@pytest.mark.parametrize("broadcast_vocab", [True, False])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_dsir_impls_agree(spark, id_type, broadcast_vocab):
+    """dsir_select's arrow (tf-kernel) and expr (explode) paths select
+    the same docs with the same counts, weights and scores on the
+    token-shape adversaries (NULL/empty/space-only text, multi-byte
+    tokens), for long and string doc_ids, with and without the vocab
+    broadcast."""
+    raw = spark.createDataFrame(
+        [(i if id_type == "long" else f"d{i}", t) for i, t in ROWS],
+        f"doc_id {id_type}, text string",
+    )
+    target = spark.createDataFrame(
+        [("spark query héllo",), ("spark spark",)], "text string"
+    )
+    a, e = (
+        corpus_ops.dsir_select(
+            raw, target, len(ROWS), broadcast_vocab=broadcast_vocab, impl=impl
+        )
+        for impl in ("arrow", "expr")
+    )
+    # names+types equal (nullability differs by construction: the
+    # arrow path's n_tokens sums a nullable kernel column, count() is
+    # non-null)
+    assert a.schema.simpleString() == e.schema.simpleString()
+    rows = a.collect()
+    assert rows == e.collect()
+    assert len(rows) == 6  # the three zero-token docs carry no evidence
 
 
 def test_doc_id_type_follows_input_schema(spark):

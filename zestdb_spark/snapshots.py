@@ -530,8 +530,8 @@ def vacuum(
                     orphans += 1
     if reclaim_orphans:
         # fast-path staging litter: a crash between a driver-side
-        # dot-file write and its rename (storage._append_log /
-        # _append_ts_local / _kv_local_rewrite) leaves `.part-*` /
+        # dot-file write and its rename (storage._write_local, which
+        # every driver-side append and fold goes through) leaves `.part-*` /
         # `.rw-*` parquet dotfiles. The `.`-prefix contract makes them
         # invisible to every reader forever, so they reclaim
         # unconditionally past the orphan age floor.

@@ -23,6 +23,14 @@ of deleting them, so overlapping readers keep their pinned file set
 format-agnostic — swap the stage/commit seam for table-format calls
 without touching callers.
 
+Every row-level rewrite (``merge_table``, ``merge_rows``,
+``delete_table_rows``) goes through ``_rewrite_hits``: prune, find the
+hit files, stage their survivors plus any inserts, one commit. Every
+driver-side (pyarrow) file write goes through ``_write_local``, and the
+single-row MERGE fast paths (KV namespaces, catalog) share
+``_local_fold_rewrite``. Whole-set rewrites (compaction, OPTIMIZE,
+namespace swaps) are ``_stage_move`` plus ``_commit`` directly.
+
 Ingest validation enforces the reference's numeric-TS schema
 (src/numeric_timeseries.re:5-13): exactly ``{"value": <number>}`` plus
 at most one string tag → BadRequest (CoAP 128) otherwise
@@ -374,27 +382,33 @@ class ZestStore:
 
     # ------------------------------------------- generic manifested tables
 
-    def _discover_generic(self) -> None:
+    def _read_meta(self, name: str) -> "dict | None":
+        """Registry entry parsed from ``<name>/_zest_meta.json``; None
+        when the dir has no meta or it is unreadable (the dir is then
+        left untouched — not a generic table)."""
         from pyspark.sql import types as T
 
+        try:
+            with open(os.path.join(self.root, name, "_zest_meta.json")) as f:
+                meta = json.load(f)
+            return {
+                "schema": T.StructType.fromJson(meta["schema"]),
+                "stats_cols": tuple(meta.get("stats_cols", ())),
+                "mapping": dict(meta.get("column_mapping", {})),
+                "retired": tuple(meta.get("retired_physicals", ())),
+            }
+        except (OSError, ValueError, KeyError):
+            return None
+
+    def _discover_generic(self) -> None:
         try:
             names = os.listdir(self.root)
         except OSError:
             return
         for name in names:
-            meta_path = os.path.join(self.root, name, "_zest_meta.json")
-            if name in _TABLES or not os.path.isfile(meta_path):
-                continue
-            try:
-                meta = json.load(open(meta_path))
-                self._generic[name] = {
-                    "schema": T.StructType.fromJson(meta["schema"]),
-                    "stats_cols": tuple(meta.get("stats_cols", ())),
-                    "mapping": dict(meta.get("column_mapping", {})),
-                    "retired": tuple(meta.get("retired_physicals", ())),
-                }
-            except (OSError, ValueError, KeyError):
-                continue  # unreadable meta: leave the dir untouched
+            entry = None if name in _TABLES else self._read_meta(name)
+            if entry is not None:
+                self._generic[name] = entry
 
     def _generic_entry(self, name: str) -> "dict | None":
         """Registry lookup with LAZY re-discovery: ``_discover_generic``
@@ -407,22 +421,9 @@ class ZestStore:
         entry = self._generic.get(name)
         if entry is not None or name in _TABLES:
             return entry
-        meta_path = os.path.join(self.root, name, "_zest_meta.json")
-        if not os.path.isfile(meta_path):
-            return None
-        from pyspark.sql import types as T
-
-        try:
-            meta = json.load(open(meta_path))
-            entry = {
-                "schema": T.StructType.fromJson(meta["schema"]),
-                "stats_cols": tuple(meta.get("stats_cols", ())),
-                "mapping": dict(meta.get("column_mapping", {})),
-                "retired": tuple(meta.get("retired_physicals", ())),
-            }
-        except (OSError, ValueError, KeyError):
-            return None
-        self._generic[name] = entry
+        entry = self._read_meta(name)
+        if entry is not None:
+            self._generic[name] = entry
         return entry
 
     def _column_mapping(self, table: str) -> "dict[str, str] | None":
@@ -925,7 +926,7 @@ class ZestStore:
             statable = [
                 k for k in key_cols if k in self._generic[name]["stats_cols"]
             ]
-            bounds: dict[str, tuple] = {}
+            terms: list[tuple[str, str, object]] = []
             if statable:
                 aggs = []
                 for k in statable:
@@ -934,56 +935,19 @@ class ZestStore:
                         F.max(k).alias(f"__hi_{k}"),
                     ]
                 row = updates.agg(*aggs).collect()[0]
-                bounds = {
-                    k: (row[f"__lo_{k}"], row[f"__hi_{k}"]) for k in statable
-                }
-
-            def may(rel: str, st) -> bool:
-                st = st or {}
-                for k, (lo, hi) in bounds.items():
-                    if lo is None or hi is None:
-                        continue
-                    pk = self._phys(name, k)  # stats are keyed physical
-                    fmin = (st.get("min") or {}).get(pk)
-                    fmax = (st.get("max") or {}).get(pk)
-                    try:
-                        if fmin is not None and fmax is not None and (
-                            fmax < lo or fmin > hi
-                        ):
-                            return False
-                    except TypeError:
-                        continue  # incomparable stats: never prune blind
-                return True
-
-            real = self._path(name)
-            with self._rewrite_lock(name):
-                live = self._live_files(name)
-                snap = self._snapshot(name)
-                stats = snap.stats if snap is not None else {}
-                candidates = [f for f in live if may(f, stats.get(f))]
-                touched: list[str] = []
-                if candidates:
-                    cand = self._read_files(name, candidates).withColumn(
-                        "_zest_file", F.input_file_name()
-                    )
-                    hit = (
-                        cand.join(keys, key_cols, "semi")
-                        .select("_zest_file")
-                        .distinct()
-                        .collect()
-                    )
-                    touched = sorted(
-                        self._rel_of_uri(real, r[0]) for r in hit
-                    )
-                adds: list[str] = []
-                if touched:
-                    survivors = self._read_files(name, touched).join(
-                        keys, key_cols, "left_anti"
-                    )
-                    adds += self._stage_move(name, survivors, rewrite=True)
-                adds += self._stage_move(name, updates)
-                self._commit(name, adds=adds, removes=touched, op="merge")
-            return len(touched)
+                for k in statable:
+                    lo, hi = row[f"__lo_{k}"], row[f"__hi_{k}"]
+                    if lo is not None and hi is not None:
+                        pk = self._phys(name, k)  # stats are keyed physical
+                        terms += [(pk, ">=", lo), (pk, "<=", hi)]
+            return self._rewrite_hits(
+                name,
+                "merge",
+                lambda rel, st: self._stats_may_match(st, terms),
+                lambda df: df.join(keys, key_cols, "semi"),
+                lambda df: df.join(keys, key_cols, "left_anti"),
+                inserts=updates,
+            )
         finally:
             updates.unpersist()
 
@@ -1102,41 +1066,22 @@ class ZestStore:
         if self._generic_entry(name) is None:
             raise KeyError(f"{name!r} is not a generic manifested table")
         cond = F.expr(predicate)
-        real = self._path(name)
-        with self._rewrite_lock(name):
-            live = self._live_files(name)
-            if not live:
-                return 0
-            terms = self._predicate_terms(predicate)
-            if terms:
-                # predicate columns are LOGICAL; stats keys are
-                # PHYSICAL (stable across renames)
-                terms = [
-                    (self._phys(name, col), op, v) for col, op, v in terms
-                ]
-                snap = self._snapshot(name)
-                stats = snap.stats if snap is not None else {}
-                live = [
-                    f for f in live if self._stats_may_match(stats.get(f), terms)
-                ]
-                if not live:
-                    return 0
-            scan = self._read_files(name, live).withColumn(
-                "_zest_file", F.input_file_name()
-            )
-            hit = scan.filter(cond).select("_zest_file").distinct().collect()
-            touched = sorted(self._rel_of_uri(real, r[0]) for r in hit)
-            if not touched:
-                return 0
+        # predicate columns are LOGICAL; stats keys are PHYSICAL
+        # (stable across renames)
+        terms = [
+            (self._phys(name, col), op, v)
+            for col, op, v in self._predicate_terms(predicate) or ()
+        ]
+        return self._rewrite_hits(
+            name,
+            "delete",
+            lambda rel, st: self._stats_may_match(st, terms),
+            lambda df: df.filter(cond),
             # survivors = rows where the predicate is NOT TRUE: a NULL
             # predicate must KEEP the row (Delta's DELETE semantics),
             # and a bare ~cond would silently drop NULL-valued rows
-            survivors = self._read_files(name, touched).filter(
-                F.coalesce(~cond, F.lit(True))
-            )
-            adds = self._stage_move(name, survivors, rewrite=True)
-            self._commit(name, adds=adds, removes=touched, op="delete")
-        return len(touched)
+            lambda df: df.filter(F.coalesce(~cond, F.lit(True))),
+        )
 
     def optimize_table(
         self,
@@ -1254,6 +1199,31 @@ class ZestStore:
                 return False
         return True
 
+    def _pinned(
+        self, table: str, version: int, verb: str
+    ) -> "snapshots.Snapshot":
+        """Manifest of past ``version`` for a time-travel read, restore
+        or clone — refused loudly (``verb`` names the use) when the
+        version was never committed, its manifest was pruned, or any of
+        its files were reclaimed by vacuum, never deep in a scan."""
+        if not self._is_manifested(table):
+            raise BadRequest(f"{table!r} is not under snapshot control")
+        path = self._path(table)
+        snap = snapshots.read_version(path, version)
+        if snap is None:
+            raise BadRequest(
+                f"{table!r} has no {verb} version {version} "
+                "(never committed, or pruned by vacuum)"
+            )
+        gone = [f for f in snap.files if not os.path.exists(os.path.join(path, f))]
+        if gone:
+            raise BadRequest(
+                f"version {version} of {table!r} is no longer {verb}: "
+                f"{len(gone)} of its files were reclaimed by vacuum "
+                f"(first: {gone[0]!r})"
+            )
+        return snap
+
     def _read_table(
         self,
         table: str,
@@ -1277,21 +1247,7 @@ class ZestStore:
         path = self._path(table)
         schema = self._read_schema(table)
         if version is not None:
-            if not self._is_manifested(table):
-                raise BadRequest(f"{table!r} is not under snapshot control")
-            snap = snapshots.read_version(path, version)
-            if snap is None:
-                raise BadRequest(
-                    f"{table!r} has no readable version {version} "
-                    "(never committed, or pruned by vacuum)"
-                )
-            gone = [f for f in snap.files if not os.path.exists(os.path.join(path, f))]
-            if gone:
-                raise BadRequest(
-                    f"version {version} of {table!r} is no longer readable: "
-                    f"{len(gone)} of its files were reclaimed by vacuum "
-                    f"(first: {gone[0]!r})"
-                )
+            snap = self._pinned(table, version, "readable")
         else:
             snap = self._snapshot(table)
         if snap is not None:
@@ -1696,6 +1652,69 @@ class ZestStore:
                     out[rel] = s
         return out or None
 
+    def _rewrite_hits(
+        self, table: str, op: str, may, hit, keep, inserts=None, partition_cols=()
+    ) -> int:
+        """The table format's one row-level rewrite (MERGE, DELETE — the
+        Delta recipe, cost ∝ touched files + batch, never table size).
+        Under the rewrite lock:
+        1. ``may(rel, stat)`` prunes the live files to CANDIDATES from
+           manifest stats / relpath partitions (False only on proof);
+        2. an ``input_file_name`` scan of the candidates keeps the files
+           holding a row ``hit(frame)`` selects — only those are
+           rewritten;
+        3. the hit files' ``keep(frame)`` rows stage as ``rw-*``
+           (maintenance — observers stay quiet) and ``inserts`` as
+           ``part-*`` (a genuine append observers should see), both
+           under ``partition_cols``, and ONE commit swaps them for the
+           hit files. A crash anywhere before it leaves the table fully
+           OLD (staged files are unreferenced until the manifest swap).
+        Every unhit file stays live and byte-identical. Nothing commits
+        when nothing is hit and there is nothing to insert. Returns the
+        number of files rewritten."""
+        real = self._path(table)
+        with self._rewrite_lock(table):
+            live = self._live_files(table)
+            snap = self._snapshot(table)
+            stats = snap.stats if snap is not None else {}
+            candidates = [f for f in live if may(f, stats.get(f))]
+            touched: list[str] = []
+            if candidates:
+                scan = self._read_files(table, candidates).withColumn(
+                    "_zest_file", F.input_file_name()
+                )
+                rows = hit(scan).select("_zest_file").distinct().collect()
+                touched = sorted(self._rel_of_uri(real, r[0]) for r in rows)
+            if not touched and inserts is None:
+                return 0
+            adds: list[str] = []
+            if touched:
+                survivors = keep(self._read_files(table, touched))
+                adds += self._stage_move(
+                    table, survivors, partition_cols, rewrite=True
+                )
+            if inserts is not None:
+                adds += self._stage_move(table, inserts, partition_cols)
+            self._commit(table, adds=adds, removes=touched, op=op)
+        return len(touched)
+
+    def _write_local(self, table: str, rel_dir: str, tbl, prefix: str) -> str:
+        """Driver-side parquet write of pyarrow table ``tbl`` into the
+        table tree: staged as an invisible dot-file (never matched by
+        readers' globs or Spark's file index), then renamed into place
+        as ``<rel_dir>/<prefix>-<uuid>.snappy.parquet``. Returns the
+        relpath for the caller's commit; until then the file is an
+        unreferenced orphan that vacuum reclaims."""
+        import pyarrow.parquet as pq
+
+        dirpath = os.path.join(self._path(table), rel_dir)
+        os.makedirs(dirpath, exist_ok=True)
+        base = f"{prefix}-{uuid.uuid4().hex}.snappy.parquet"
+        staged = os.path.join(dirpath, f".{base}")
+        pq.write_table(tbl, staged, compression="snappy")
+        os.rename(staged, os.path.join(dirpath, base))
+        return f"{rel_dir}/{base}" if rel_dir else base
+
     def _append_log(self, table: str, rows: "list[tuple]") -> None:
         """Append to a LOG table (audit, write_log): one DRIVER-side
         pyarrow file write, staged invisibly (dot-prefixed name — never
@@ -1719,24 +1738,16 @@ class ZestStore:
         the audit stream reads by glob); the BULK paths (data tables,
         compaction) stay distributed Spark writes."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         schema = _arrow_log_schema(table)
         cols = [
             pa.array([r[i] for r in rows], type=schema.field(i).type)
             for i in range(len(schema))
         ]
-        real = self._path(table)
-        os.makedirs(real, exist_ok=True)
-        base = f"part-{uuid.uuid4().hex}.snappy.parquet"
-        staged = os.path.join(real, f".{base}")
-        pq.write_table(
-            pa.Table.from_arrays(cols, schema=schema),
-            staged,
-            compression="snappy",
+        rel = self._write_local(
+            table, "", pa.Table.from_arrays(cols, schema=schema), "part"
         )
-        os.rename(staged, os.path.join(real, base))
-        self._commit(table, adds=[base], op="append")
+        self._commit(table, adds=[rel], op="append")
 
     def _live_files(self, table: str) -> list[str]:
         """The table's live file set, bootstrapping the manifest from
@@ -1789,23 +1800,8 @@ class ZestStore:
         rewrites like any other rewrite."""
         if not self._is_manifested(table):
             raise KeyError(f"{table!r} is not under snapshot control")
-        path = self._path(table)
         with self._rewrite_lock(table):
-            target = snapshots.read_version(path, version)
-            if target is None:
-                raise BadRequest(
-                    f"{table!r} has no restorable version {version} "
-                    "(never committed, or pruned by vacuum)"
-                )
-            gone = [
-                f for f in target.files if not os.path.exists(os.path.join(path, f))
-            ]
-            if gone:
-                raise BadRequest(
-                    f"version {version} of {table!r} is no longer restorable: "
-                    f"{len(gone)} of its files were reclaimed by vacuum "
-                    f"(first: {gone[0]!r})"
-                )
+            target = self._pinned(table, version, "restorable")
             live = set(self._live_files(table))
             want = set(target.files)
             snap = self._commit(
@@ -1844,23 +1840,7 @@ class ZestStore:
             )
         src_dir = self._path(table)
         if version is not None:
-            if not self._is_manifested(table):
-                raise BadRequest(f"{table!r} is not under snapshot control")
-            snap = snapshots.read_version(src_dir, version)
-            if snap is None:
-                raise BadRequest(
-                    f"{table!r} has no clonable version {version} "
-                    "(never committed, or pruned by vacuum)"
-                )
-            gone = [
-                f for f in snap.files if not os.path.exists(os.path.join(src_dir, f))
-            ]
-            if gone:
-                raise BadRequest(
-                    f"version {version} of {table!r} is no longer clonable: "
-                    f"{len(gone)} of its files were reclaimed by vacuum "
-                    f"(first: {gone[0]!r})"
-                )
+            snap = self._pinned(table, version, "clonable")
         else:
             self._live_files(table)  # bootstrap pre-manifest layouts
             snap = self._snapshot(table)
@@ -2196,7 +2176,6 @@ class ZestStore:
         Bulk ingest stays on the distributed path — this is for
         control-plane-sized batches only."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if any(not r[0] for r in rows):
             # an empty partition value has NO faithful physical form:
@@ -2209,7 +2188,6 @@ class ZestStore:
         fields = _TABLES[table].fields
         assert fields[0].name == "series_id" and fields[1].name == "timestamp"
         schema = _arrow_ts_local_schema(table)
-        real = self._path(table)
         groups: dict[tuple, list[tuple]] = {}
         for r in rows:
             sid = r[0]
@@ -2219,8 +2197,6 @@ class ZestStore:
         adds = []
         for (sid, bucket), grp in sorted(groups.items()):
             rel_dir = f"series_id={_escape_part(sid)}/time_bucket={bucket}"
-            os.makedirs(os.path.join(real, rel_dir), exist_ok=True)
-            base = f"part-{uuid.uuid4().hex}.snappy.parquet"
             # data columns = canonical schema minus the partition
             # columns (they live in the dir name, exactly like a
             # Spark partitioned write), plus the write_id stamp
@@ -2229,15 +2205,8 @@ class ZestStore:
                 for i in range(1, len(fields))
             ]
             cols.append(pa.array([wid] * len(grp), type=pa.int64()))
-            staged = os.path.join(real, rel_dir, f".{base}")
-            pq.write_table(
-                pa.Table.from_arrays(cols, schema=schema),
-                staged,
-                compression="snappy",
-            )
-            final_rel = f"{rel_dir}/{base}"
-            os.rename(staged, os.path.join(real, rel_dir, base))
-            adds.append(final_rel)
+            tbl = pa.Table.from_arrays(cols, schema=schema)
+            adds.append(self._write_local(table, rel_dir, tbl, "part"))
         # a failed commit leaves the renamed part-* files as ORPHANS for
         # vacuum — never unlink them here: they are already visible to
         # the data-observe stream's part-* glob (the documented
@@ -2342,49 +2311,25 @@ class ZestStore:
                 if len(sample) <= self._MERGE_SERIES_HINT_CAP
                 else None
             )
-            keys = updates.select("series_id", "timestamp").distinct()
-            real = self._path(table)
-            with self._rewrite_lock(table):
-                live = self._live_files(table)
-                snap = self._snapshot(table)
-                stats = snap.stats if snap is not None else {}
-                candidates = [
-                    f
-                    for f in live
-                    if self._file_may_match(f, stats.get(f), lo, hi, series)
-                ]
-                touched: list[str] = []
-                if candidates:
-                    cand = self._read_files(table, candidates).withColumn(
-                        "_zest_file", F.input_file_name()
-                    )
-                    hit = (
-                        cand.join(keys, ["series_id", "timestamp"], "semi")
-                        .select("_zest_file")
-                        .distinct()
-                        .collect()
-                    )
-                    touched = sorted(self._rel_of_uri(real, r[0]) for r in hit)
-                adds: list[str] = []
-                if touched:
-                    survivors = self._read_files(table, touched).join(
-                        keys, ["series_id", "timestamp"], "left_anti"
-                    )
-                    adds += self._stage_move(
-                        table, survivors, ("series_id", "time_bucket"), rewrite=True
-                    )
-                wid = self._next_write_id()
-                stamped = (
-                    updates.withColumn(
-                        "time_bucket", (F.col("timestamp") / _DAY_MS).cast("long")
-                    ).withColumn("write_id", F.lit(wid))
-                )
-                adds += self._stage_move(
-                    table, stamped, ("series_id", "time_bucket")
-                )
-                self._commit(table, adds=adds, removes=touched, op="merge")
+            key_cols = ["series_id", "timestamp"]
+            keys = updates.select(*key_cols).distinct()
+            # an id taken here but never committed only leaves a gap in
+            # write_log, which _log_write's invariant already allows
+            wid = self._next_write_id()
+            stamped = updates.withColumn(
+                "time_bucket", (F.col("timestamp") / _DAY_MS).cast("long")
+            ).withColumn("write_id", F.lit(wid))
+            n_files = self._rewrite_hits(
+                table,
+                "merge",
+                lambda rel, st: self._file_may_match(rel, st, lo, hi, series),
+                lambda df: df.join(keys, key_cols, "semi"),
+                lambda df: df.join(keys, key_cols, "left_anti"),
+                inserts=stamped,
+                partition_cols=("series_id", "time_bucket"),
+            )
             self._log_write(table, None, wid)
-            return len(touched)
+            return n_files
         finally:
             updates.unpersist()
 
@@ -2456,39 +2401,61 @@ class ZestStore:
         the semantics are MERGE INTO — this fast path is the
         single-row MERGE special case every table format special-cases
         the same way (Delta's low-shuffle merge)."""
-        live = self._live_files(table)
         old = []
-        for rel in live:
+        for rel in self._live_files(table):
             parts = self._rel_parts(rel)
             if "id" not in parts:
                 return False  # legacy un-partitioned file: Spark path reads it
             if parts["id"] == id_:
                 old.append(rel)
+        return self._local_fold_rewrite(
+            table,
+            f"id={_escape_part(id_)}",
+            old,
+            _arrow_kv_local_schema(table),
+            mutate,
+            op,
+        )
+
+    def _local_fold_rewrite(
+        self, table: str, rel_dir: str, files, schema, mutate, op: str
+    ) -> bool:
+        """Shared body of the driver-side single-row MERGE fast paths
+        (KV namespaces, catalog): LWW-fold ``files``' two columns (the
+        key and value of pyarrow ``schema``) into a dict, let ``mutate``
+        edit it, and publish the result — sorted by key, one ``rw-*``
+        file under ``rel_dir``, or no file for an emptied target — in
+        ONE atomic commit that removes ``files``. On commit failure the
+        replacement file is unlinked — safe because an uncommitted
+        ``rw-*`` file is referenced by no manifest and excluded from
+        every observer glob (unlike appends' ``part-*`` orphans, which
+        must be left for vacuum).
+
+        Returns False, touching nothing, when ``files`` exceed the
+        driver budget or one vanished (racing maintenance): the caller
+        takes its distributed rewrite instead."""
         real = self._path(table)
         total = 0
-        for rel in old:
+        for rel in files:
             try:
                 total += os.path.getsize(os.path.join(real, rel))
             except OSError:
-                return False  # racing maintenance; take the locked slow path
+                return False
         if total > self._KV_LOCAL_MAX_BYTES:
             return False
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        current: dict[str, Any] = {}
-        for rel in old:
-            t = pq.read_table(
-                os.path.join(real, rel), columns=["key", "value"]
+        key, value = schema.names
+        current: dict = {}
+        for rel in files:
+            t = pq.read_table(os.path.join(real, rel), columns=[key, value])
+            current.update(
+                zip(t.column(key).to_pylist(), t.column(value).to_pylist())
             )
-            for k, v in zip(
-                t.column("key").to_pylist(), t.column("value").to_pylist()
-            ):
-                current[k] = v
         mutate(current)
-        tbl = None
+        adds: list[str] = []
         if current:
-            schema = _arrow_kv_local_schema(table)
             items = sorted(current.items())  # deterministic file layout
             tbl = pa.Table.from_arrays(
                 [
@@ -2497,43 +2464,15 @@ class ZestStore:
                 ],
                 schema=schema,
             )
-        self._local_rewrite_publish(
-            table, f"id={_escape_part(id_)}", tbl, removes=old, op=op
-        )
-        return True
-
-    def _local_rewrite_publish(
-        self, table: str, rel_dir: str, tbl, removes, op: str
-    ) -> None:
-        """Shared tail of the driver-side rewrite fast paths (KV
-        namespaces, catalog): stage ``tbl`` (a pyarrow table, or None
-        for an emptied target) as an invisible dot-file, rename to its
-        ``rw-*`` name, publish adds+removes in ONE atomic commit. On
-        commit failure the replacement file is unlinked — safe because
-        an uncommitted ``rw-*`` file is referenced by no manifest and
-        excluded from every observer glob (unlike appends' ``part-*``
-        orphans, which must be left for vacuum)."""
-        import pyarrow.parquet as pq
-
-        real = self._path(table)
-        adds: list[str] = []
-        final = None
-        if tbl is not None:
-            dirpath = os.path.join(real, rel_dir) if rel_dir else real
-            os.makedirs(dirpath, exist_ok=True)
-            base = f"rw-{uuid.uuid4().hex}.snappy.parquet"
-            staged = os.path.join(dirpath, f".{base}")
-            pq.write_table(tbl, staged, compression="snappy")
-            final = os.path.join(dirpath, base)
-            os.rename(staged, final)
-            adds = [f"{rel_dir}/{base}" if rel_dir else base]
+            adds.append(self._write_local(table, rel_dir, tbl, "rw"))
         try:
-            self._commit(table, adds=adds, removes=removes, op=op)
+            self._commit(table, adds=adds, removes=files, op=op)
         except BaseException:
-            if final is not None:
+            for rel in adds:
                 with contextlib.suppress(OSError):
-                    os.unlink(final)
+                    os.unlink(os.path.join(real, rel))
             raise
+        return True
 
     def kv_upsert(self, kind: str, id_: str, key: str, value: Any) -> None:
         """S4: LWW upsert at (id, key) — src/keyvalue/keyvalue.re:14-20.
@@ -2636,44 +2575,20 @@ class ZestStore:
     def _catalog_local_upsert(self, row: "tuple[str, list]") -> bool:
         """Driver-side catalog upsert-by-href: fold the live files into
         an href-keyed dict, replace one entry, publish ONE rw-* file in
-        an atomic whole-table overwrite commit (the catalog equivalent
-        of _kv_local_rewrite; same crash contract and budget/legacy
-        fallbacks)."""
+        an atomic whole-table overwrite commit (``_local_fold_rewrite``,
+        shared with the KV namespaces: same crash contract and budget
+        fallback)."""
         table = "catalog_items"
-        live = self._live_files(table)
-        real = self._path(table)
-        total = 0
-        for rel in live:
-            try:
-                total += os.path.getsize(os.path.join(real, rel))
-            except OSError:
-                return False
-        if total > self._KV_LOCAL_MAX_BYTES:
-            return False
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        current: dict[str, list] = {}
-        for rel in live:
-            t = pq.read_table(os.path.join(real, rel))
-            for href, md in zip(
-                t.column("href").to_pylist(),
-                t.column("item_metadata").to_pylist(),
-            ):
-                current[href] = md
         href, pairs = row
-        current[href] = [{"rel": r, "val": v} for r, v in pairs]
-        schema = _arrow_log_schema(table)
-        items = sorted(current.items())
-        tbl = pa.Table.from_arrays(
-            [
-                pa.array([h for h, _ in items], type=schema.field(0).type),
-                pa.array([m for _, m in items], type=schema.field(1).type),
-            ],
-            schema=schema,
+        md = [{"rel": r, "val": v} for r, v in pairs]
+        return self._local_fold_rewrite(
+            table,
+            "",
+            self._live_files(table),
+            _arrow_log_schema(table),
+            lambda cur: cur.__setitem__(href, md),
+            "overwrite",
         )
-        self._local_rewrite_publish(table, "", tbl, removes=live, op="overwrite")
-        return True
 
     def ts_delete(self, plan, compat_collateral: bool = False) -> None:
         """D1: partition-scoped delete. Only the (series_id, time_bucket)
@@ -2792,25 +2707,7 @@ class ZestStore:
         one giant one, and already-well-packed leaves are skipped."""
         if table not in ("ts_numeric", "ts_blob"):
             raise KeyError(f"compact targets TS tables, not {table!r}")
-        from_bucket = None if since_ms is None else _bucket_of(since_ms)
-        to_bucket = None if until_ms is None else _bucket_of(until_ms)
         series = None if series is None else set(series)
-
-        def in_scope(leaf_rel: str) -> bool:
-            parts = self._rel_parts(leaf_rel + "/x")
-            sid, tb = parts.get("series_id"), parts.get("time_bucket")
-            if series is not None and sid is not None and sid not in series:
-                return False
-            try:
-                b = int(tb) if tb is not None else None
-            except ValueError:
-                b = None
-            if b is not None:
-                if from_bucket is not None and b < from_bucket:
-                    return False
-                if to_bucket is not None and b > to_bucket:
-                    return False
-            return True
         if not self._exists(table):
             return 0
         from pyspark.sql import types as T
@@ -2834,7 +2731,11 @@ class ZestStore:
             adds: list[str] = []
             removes: list[str] = []
             for leaf_rel, files in sorted(leaves.items()):
-                if not leaf_rel:
+                # scope first: a scoped run never stats out-of-scope
+                # leaves (the leaf's partition values decide, no stats)
+                if not leaf_rel or not self._file_may_match(
+                    f"{leaf_rel}/x", None, since_ms, until_ms, series
+                ):
                     continue
                 n_out = target_files
                 if target_bytes is not None:
@@ -2843,8 +2744,6 @@ class ZestStore:
                     )
                     n_out = max(1, -(-leaf_bytes // target_bytes))
                 if len(files) <= n_out:
-                    continue
-                if not in_scope(leaf_rel):
                     continue
                 # CLUSTER while merging: range-partition + sort by
                 # timestamp, so the output files carry tight, DISJOINT
