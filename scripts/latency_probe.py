@@ -1,7 +1,8 @@
 """Per-request latency probe — the measurements behind SCALE.md's
 "Request latency" table.
 
-Times the server-shaped ops (1-row TS/KV writes, api-edge reads,
+Times the server-shaped ops (1-row TS/KV writes, api-edge reads —
+last-family ``latest`` and ``last/50/filter``, full-window ``length`` —
 namespace rewrites, log riders) on a throwaway store, plus
 ``post_ts_wire``: a 1-row POST /ts round trip through ``ZestServer``
 and a ``ZestReqClient`` over the ZMTP socket on loopback. First a COLD
@@ -55,6 +56,8 @@ def main() -> None:
         t("post_ts", lambda: eng.post(f"/ts/s{i}/at/{1000 + i}", {"value": 1.0 * i}))
         t("post_ts_wire", lambda: post_wire(i))
         t("get_ts_latest", lambda: eng.get(f"/ts/s{i}/latest"))
+        t("get_ts_last_filter", lambda: eng.get(f"/ts/s{i}/last/50/filter/k/equals/{i}"))
+        t("get_ts_length", lambda: eng.get(f"/ts/s{i}/length"))
         t("post_kv", lambda: eng.post(f"/kv/ns{i}/k", json.dumps({"v": i})))
         t("get_kv_keys", lambda: eng.get(f"/kv/ns{i}/keys"))
         t("delete_kv", lambda: eng.delete(f"/kv/ns{i}/k"))

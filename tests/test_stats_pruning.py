@@ -23,6 +23,7 @@ through the public table-format recipe.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -31,6 +32,7 @@ from zestdb_spark import snapshots
 from zestdb_spark.api import ZestEngine
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.storage import _DAY_MS
+from tests.engine_reference import unhinted_get
 
 
 def _mk_rows(spark, spec):
@@ -270,3 +272,252 @@ def test_compact_clusters_by_time(spark, tmp_path):
     # and a narrow hint now isolates one file within the leaf
     hinted = eng.store.load("ts_numeric", since_ms=5000)
     assert len(hinted.inputFiles()) == 1
+
+
+def test_tail_hint_reads_only_the_newest_file(spark, tmp_path):
+    """After K one-row posts to a series, the last/1 tail hint plans
+    exactly the newest post's file — the reference's newest-shard walk
+    from manifest stats, before Spark lists anything."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for t in range(1, 7):
+        eng.post(f"/ts/s/at/{t * 1000}", {"value": float(t)})
+    store = eng.store
+    hinted = store.load("ts_numeric", series={"s"}, tail=("last", 1))
+    (f,) = hinted.inputFiles()
+    snap = store._snapshot("ts_numeric")
+    (rel,) = [r for r in snap.files if f.endswith(os.path.basename(r))]
+    assert snap.stats[rel]["max"]["timestamp"] == 6000
+    assert len(store.load("ts_numeric", tail=("first", 2)).inputFiles()) == 2
+    # every live file of the series, unhinted
+    assert len(store.load("ts_numeric").inputFiles()) == 6
+
+
+def test_tail_files_decision():
+    """snapshots.tail_files, no Spark: inclusive edges, loosest bound
+    over series, never counting a file that may hold null timestamps,
+    and no pruning at all when any file lacks evidence."""
+    def st(rows, lo, hi, nulls=0):
+        return {
+            "rows": rows,
+            "min": {"timestamp": lo},
+            "max": {"timestamp": hi},
+            "nulls": {"timestamp": nulls},
+        }
+
+    stats = {
+        "series_id=a/time_bucket=0/f1.parquet": st(10, 0, 9),
+        "series_id=a/time_bucket=0/f2.parquet": st(10, 9, 19),
+        "series_id=a/time_bucket=0/f3.parquet": st(1, 20, 20),
+        "series_id=b/time_bucket=0/g1.parquet": st(5, 0, 4),
+        "series_id=b/time_bucket=0/g2.parquet": st(5, 100, 104),
+    }
+    files = sorted(stats)
+    a1, a2, a3, b1, b2 = files
+    assert snapshots.tail_files(files, stats, "last", 1) == ([a3, b2], 20)
+    # f2 ends on 9, f1 starts on 9: the tie at the edge keeps f1
+    assert snapshots.tail_files(files, stats, "last", 2) == ([a1, a2, a3, b2], 9)
+    assert snapshots.tail_files(files, stats, "first", 3) == ([a1, a2, b1], 9)
+    # n beyond a series: all of it, and no row bound
+    assert snapshots.tail_files(files, stats, "last", 11)[1] is None
+    # a file with nulls is kept and not counted
+    stats[b1] = st(5, 0, 4, nulls=1)
+    assert snapshots.tail_files(files, stats, "first", 1) == ([a1, a2, b1, b2], 104)
+    # no null count recorded: same treatment
+    del stats[b1]["nulls"]
+    assert snapshots.tail_files(files, stats, "last", 1) == ([a3, b1, b2], 20)
+    # a file without stats, or outside a series partition: prune nothing
+    statless = {k: v for k, v in stats.items() if k != b1}
+    assert snapshots.tail_files(files, statless, "last", 1) == (files, None)
+    odd = files + ["part-0.parquet"]
+    odd_stats = {**stats, "part-0.parquet": st(1, 0, 0)}
+    assert snapshots.tail_files(odd, odd_stats, "last", 1) == (odd, None)
+
+
+def _mk_tail_engine(spark, root):
+    """A store whose last/first reads exercise every tail-pruning edge:
+    a tie on the boundary timestamp split across two files of one leaf,
+    two series with very different bounds, multi-bucket series."""
+    eng = ZestEngine(spark, root)
+    # a: two bulk files in ONE leaf sharing timestamp 1000 at their edge
+    # (one input partition each, so each ingest writes one file)
+    eng.ingest_bulk(
+        _mk_rows(spark, [("a", t, t % 7) for t in range(100, 1001, 100)]).coalesce(1),
+        path="/ts/bulk/a1",
+        client="t",
+    )
+    eng.ingest_bulk(
+        _mk_rows(
+            spark,
+            [("a", 1000, 50), ("a", 1000, 60)]
+            + [("a", t, t % 5) for t in range(1100, 2001, 100)],
+        ).coalesce(1),
+        path="/ts/bulk/a2",
+        client="t",
+    )
+    # b: old, one-row posts across three day buckets
+    for d in range(3):
+        for i in range(3):
+            eng.post(f"/ts/b/at/{d * _DAY_MS + i * 10}", {"value": float(i), "k": "x"})
+    # c: newest, bulk over two buckets
+    eng.ingest_bulk(
+        _mk_rows(
+            spark,
+            [("c", 40 * _DAY_MS + i, i) for i in range(6)]
+            + [("c", 41 * _DAY_MS + i, -i) for i in range(6)],
+        ),
+        path="/ts/bulk/c",
+        client="t",
+    )
+    return eng
+
+
+_TAIL_PATHS = (
+    "/ts/a/latest",
+    "/ts/a/earliest",
+    "/ts/a/last/11",  # ends exactly on the tied 1000s
+    "/ts/a/last/12",
+    "/ts/a/first/10",
+    "/ts/a/first/11",
+    "/ts/a/last/5000",  # n larger than the series
+    "/ts/a,b/last/3",  # two series, very different bounds
+    "/ts/b,c/first/4",
+    "/ts/a,b,c/latest",
+    "/ts/a,b,c/earliest",
+    "/ts/b/last/4/filter/k/equals/x",
+    "/ts/c/first/7/sum",
+    "/ts/ghost/last/2",
+)
+
+
+def _assert_engine_parity(eng, paths=_TAIL_PATHS):
+    for path in paths:
+        assert eng.get(path) == unhinted_get(eng, path), path
+
+
+def test_engine_tail_reads_match_unhinted_plan(spark, tmp_path):
+    eng = _mk_tail_engine(spark, str(tmp_path / "s"))
+    _assert_engine_parity(eng)
+    # the tie really is split across two files of one leaf, and the
+    # hint keeps both
+    hinted = eng.store.load("ts_numeric", series={"a"}, tail=("last", 11))
+    assert len(hinted.inputFiles()) == 2
+    # the hint pruned something for the one-row-post series
+    assert len(
+        eng.store.load("ts_numeric", series={"b"}, tail=("last", 1)).inputFiles()
+    ) == 1
+
+
+def test_engine_tail_reads_after_delete_and_restore(spark, tmp_path):
+    eng = _mk_tail_engine(spark, str(tmp_path / "s"))
+    pre = eng.store.history("ts_numeric")[0].version
+    eng.delete("/ts/a/range/1500/2000")  # the newest range of a
+    eng.delete(f"/ts/c/since/{41 * _DAY_MS}")  # c's newest bucket
+    assert json.loads(eng.get("/ts/a/latest"))[0]["timestamp"] == 1400
+    _assert_engine_parity(eng)
+    eng.store.restore("ts_numeric", pre)
+    assert json.loads(eng.get("/ts/a/latest"))[0]["timestamp"] == 2000
+    _assert_engine_parity(eng)
+
+
+def test_engine_tail_reads_blob(spark, tmp_path):
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for i in range(6):
+        eng.post(f"/ts/blob/bx/at/{1000 + (i // 2) * 10}", {"seq": i})
+    for i in range(3):
+        eng.post(f"/ts/blob/by/at/{i * _DAY_MS}", [i])
+    _assert_engine_parity(
+        eng,
+        (
+            "/ts/blob/bx/latest",
+            "/ts/blob/bx/earliest",
+            "/ts/blob/bx/last/3",  # edge tie: pairs share timestamps
+            "/ts/blob/bx/first/3",
+            "/ts/blob/bx,by/last/2",
+            "/ts/blob/by/first/10",
+        ),
+    )
+    assert len(
+        eng.store.load("ts_blob", series={"bx"}, tail=("last", 2)).inputFiles()
+    ) == 2
+
+
+def test_engine_tail_read_with_statless_file_prunes_nothing(spark, tmp_path):
+    """A live file with no stats entry (pre-stats writer) makes the
+    tail hint keep every file of the read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng = _mk_tail_engine(spark, str(tmp_path / "s"))
+    table_dir = eng.store._path("ts_numeric")
+    rel = "series_id=a/time_bucket=0/part-nostats.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "timestamp": pa.array([5000, 50], pa.int64()),
+                "value": pa.array([1.5, 2.5]),
+                "tag_name": pa.array([None, None], pa.string()),
+                "tag_value": pa.array([None, None], pa.string()),
+                "write_id": pa.array([None, None], pa.int64()),
+            }
+        ),
+        os.path.join(table_dir, rel),
+    )
+    snapshots.commit(table_dir, adds=[rel])  # no stats offered
+    snap = eng.store._snapshot("ts_numeric")
+    assert rel in snap.files and rel not in snap.stats
+    hinted = eng.store.load("ts_numeric", series={"a", "b"}, tail=("last", 1))
+    assert len(hinted.inputFiles()) == len(
+        eng.store.load("ts_numeric", series={"a", "b"}).inputFiles()
+    )
+    assert json.loads(eng.get("/ts/a/latest"))[0]["timestamp"] == 5000
+    assert json.loads(eng.get("/ts/a/earliest"))[0]["timestamp"] == 50
+    _assert_engine_parity(eng)
+
+
+def test_engine_tail_read_with_null_timestamps(spark, tmp_path):
+    """Null timestamps sort FIRST in first/earliest order: a file that
+    holds one must never be pruned, its rows never count towards n,
+    and the pushed timestamp bound must let null rows through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    eng = _mk_tail_engine(spark, str(tmp_path / "s"))
+    # a file mixing a null and a late timestamp, committed through the
+    # store so its footer stats (null count 1) reach the manifest
+    rel = "series_id=a/time_bucket=0/part-nulls.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "timestamp": pa.array([None, 3000], pa.int64()),
+                "value": pa.array([7.0, 8.0]),
+                "tag_name": pa.array([None, None], pa.string()),
+                "tag_value": pa.array([None, None], pa.string()),
+                "write_id": pa.array([None, None], pa.int64()),
+            }
+        ),
+        os.path.join(eng.store._path("ts_numeric"), rel),
+    )
+    eng.store._commit("ts_numeric", adds=[rel], op="append")
+    st = eng.store._snapshot("ts_numeric").stats[rel]
+    assert st["nulls"]["timestamp"] == 1 and st["min"]["timestamp"] == 3000
+    assert json.loads(eng.get("/ts/a/earliest"))[0]["timestamp"] is None
+    assert json.loads(eng.get("/ts/a/latest"))[0]["timestamp"] == 3000
+    _assert_engine_parity(eng)
+
+    # write_numeric_bulk trusts its caller: a null timestamp lands in a
+    # null time_bucket leaf whose file has no timestamp min/max, so the
+    # tail hint keeps every file of a read that includes the series
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in TS_NUMERIC.fields]
+    )
+    eng.ingest_bulk(
+        spark.createDataFrame([("c", None, 9.0, None, None)], nullable),
+        path="/ts/bulk/nulls",
+        client="t",
+    )
+    hinted = eng.store.load("ts_numeric", series={"c"}, tail=("last", 1))
+    assert len(hinted.inputFiles()) == len(
+        eng.store.load("ts_numeric", series={"c"}).inputFiles()
+    )
+    _assert_engine_parity(eng)

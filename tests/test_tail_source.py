@@ -12,6 +12,7 @@ from zestdb_spark.api import ZestEngine
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.sources import register
 from zestdb_spark.sources.tail_source import ZestTailReader, _series_dirs
+from tests.engine_reference import unhinted_get
 
 
 @pytest.fixture(scope="module")
@@ -84,6 +85,21 @@ def test_planning_prunes_to_requested_series(store):
     assert sorted(p.series_id for p in parts) == ["a", "c"]
 
 
+def test_planning_opens_only_tail_candidates(store):
+    """On a manifested store each series partition plans only the files
+    snapshots.tail_files keeps: n=5 of 5 day-buckets x 40 rows lives
+    in the newest bucket (oldest, for first)."""
+    root = store.store._path("ts_numeric")
+    for mode, bucket in (("last", 4), ("first", 0)):
+        reader = ZestTailReader({"root": root, "series": "a", "n": "5", "mode": mode})
+        (part,) = reader.partitions()
+        assert part.files
+        assert all(f"/time_bucket={bucket}/" in f for f in part.files), mode
+    everything = ZestTailReader({"root": root, "series": "a", "n": "1000"})
+    (part,) = everything.partitions()
+    assert {f.split("/time_bucket=")[1][0] for f in part.files} == set("01234")
+
+
 def test_tail_first_mode_matches_canonical(spark, store):
     from zestdb_spark.operators import ts_read
 
@@ -104,24 +120,19 @@ def test_duplicate_series_not_doubled(spark, store):
     assert got.count() == 5
 
 
-def test_engine_routes_reads_through_tail_source(spark, tmp_path):
-    """ZestEngine (default use_tail_source=True) must serve identical
-    reference-shaped JSON through the pushdown source as the canonical
-    window plan, across the whole last/first family incl. composed
-    filter/agg pipelines."""
-    roots = {k: str(tmp_path / k) for k in ("on", "off")}
-    engines = {
-        "on": ZestEngine(spark, roots["on"], use_tail_source=True),
-        "off": ZestEngine(spark, roots["off"], use_tail_source=False),
-    }
+def test_engine_last_family_matches_unhinted_plan(spark, tmp_path):
+    """ZestEngine serves the last/first family through the canonical
+    scan with the manifest tail hint; its reference-shaped JSON must
+    equal the plan over the unhinted scan, incl. composed filter/agg
+    pipelines."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
     day = 86_400_000
-    for eng in engines.values():
-        for d in range(3):
-            for i in range(5):
-                eng.post(
-                    f"/ts/s1/at/{d * day + i * 1000}",
-                    {"value": float(i), "room": "a" if i % 2 else "b"},
-                )
+    for d in range(3):
+        for i in range(5):
+            eng.post(
+                f"/ts/s1/at/{d * day + i * 1000}",
+                {"value": float(i), "room": "a" if i % 2 else "b"},
+            )
     for path in (
         "/ts/s1/latest",
         "/ts/s1/last/7",
@@ -131,19 +142,15 @@ def test_engine_routes_reads_through_tail_source(spark, tmp_path):
         "/ts/s1/last/1000/sum",
         "/ts/ghost/last/3",
     ):
-        assert engines["on"].get(path) == engines["off"].get(path), path
+        assert eng.get(path) == unhinted_get(eng, path), path
 
 
-def test_engine_blob_reads_through_tail_source(spark, tmp_path):
-    engines = {
-        flag: ZestEngine(spark, str(tmp_path / str(flag)), use_tail_source=flag)
-        for flag in (True, False)
-    }
-    for eng in engines.values():
-        for i in range(6):
-            eng.post(f"/ts/blob/bx/at/{i * 40_000_000}", {"seq": i, "tags": [i, i + 1]})
+def test_engine_blob_last_family_matches_unhinted_plan(spark, tmp_path):
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for i in range(6):
+        eng.post(f"/ts/blob/bx/at/{i * 40_000_000}", {"seq": i, "tags": [i, i + 1]})
     for path in ("/ts/blob/bx/latest", "/ts/blob/bx/last/4", "/ts/blob/bx/first/2"):
-        assert engines[True].get(path) == engines[False].get(path), path
+        assert eng.get(path) == unhinted_get(eng, path), path
 
 
 def test_statless_row_groups_always_read(spark, tmp_path):

@@ -7,10 +7,13 @@ ZMQ/CoAP framing, CurveZMQ crypto, and macaroon auth are out of
 analytic scope (SURVEY.md §2.12 M4) — `authorize` is a hook that
 accepts everything by default.
 
-Results are reference-shaped JSON strings (serializers.py). For
-DataFrame access (the analytics path) use the plans/operators modules
-directly; this facade is the compatibility layer a reference client
-would hit.
+Results are reference-shaped JSON strings (serializers.py). Every TS
+read is one canonical scan: ``ZestStore.load`` with the compiled plan's
+scan hints (series, time window, and for last/first/latest/earliest the
+manifest ``tail`` hint), then ``plan_to_dataframe``. For DataFrame
+access (the analytics path) use the plans/operators modules or the
+``zest_tail`` source directly; this facade is the compatibility layer a
+reference client would hit.
 """
 
 from __future__ import annotations
@@ -38,20 +41,12 @@ class ZestEngine:
         root: str,
         acl=None,
         compat_collateral_delete: bool = False,
-        use_tail_source: bool = True,
     ):
         self.spark = spark
         self.store = ZestStore(spark, root)
         self.observers = ObserverRegistry()
         self.started_ms = now_ms()
         self.server = socket.gethostname()
-        #: route numeric AND blob last/first/latest/earliest reads
-        #: through the zest_tail pushdown source (footer-stat row-group
-        #: pruning — the reference's newest-shard walk;
-        #: sources/tail_source.py). The canonical window plan remains
-        #: the fallback for every other window shape.
-        self.use_tail_source = use_tail_source
-        self._tail_registered = False
         #: optional zestdb_spark.auth.AclValidator (None = permissive,
         #: mirroring the reference's opt-in --enable-macaroons)
         self.acl = acl
@@ -116,32 +111,6 @@ class ZestEngine:
         self._audit("GET(OBSERVE)", path, 69, client)
         return oid
 
-    def _tail_window(self, plan, table: str):
-        """The zest_tail pushdown frame for a last/first-family window
-        (numeric or blob), or None when the canonical plan should run
-        (flag off, other window shapes, or nothing written yet)."""
-        if (
-            not self.use_tail_source
-            or plan.window.op not in ("last", "first", "latest", "earliest")
-            or not self.store._exists(table)
-        ):
-            return None
-        if not self._tail_registered:
-            from zestdb_spark.sources import register
-
-            register(self.spark)
-            self._tail_registered = True
-        op = plan.window.op
-        return (
-            self.spark.read.format("zest_tail")
-            .option("root", self.store._path(table))
-            .option("table", table)
-            .option("series", ",".join(plan.ids))
-            .option("n", plan.window.n if op in ("last", "first") else 1)
-            .option("mode", "last" if op in ("last", "latest") else "first")
-            .load()
-        )
-
     # ---------------------------------------------------------------- GET
 
     def get(
@@ -186,8 +155,16 @@ class ZestEngine:
             # scan hints from the compiled plan: the store's manifest
             # stats prune non-matching files before Spark plans the
             # read (superset contract — plan_to_dataframe still applies
-            # the exact series/window predicates)
+            # the exact series/window predicates). The last/first
+            # family reads only the files that can hold each series'
+            # top n — the reference's newest-shard walk
+            # (timeseries.re:250-283) on the one canonical scan.
             w = plan.window
+            tail = None
+            if w.op in ("last", "latest"):
+                tail = ("last", w.n if w.op == "last" else 1)
+            elif w.op in ("first", "earliest"):
+                tail = ("first", w.n if w.op == "first" else 1)
             df = plan_to_dataframe(
                 plan,
                 self.store.load(
@@ -195,9 +172,9 @@ class ZestEngine:
                     since_ms=w.from_ms if w.op in ("since", "range") else None,
                     until_ms=w.to_ms if w.op == "range" else None,
                     series=set(plan.ids),
+                    tail=tail,
                 ),
                 sort=plan.agg is None,
-                window_df=self._tail_window(plan, table),
             )
             if plan.window.op == "length":
                 return serializers.length_to_json(df)

@@ -6,6 +6,9 @@ pruning, partition pruning and whole-stage codegen. The fixed
 filter-before-aggregate pipeline order of the reference
 (src/server.re:232-253) is preserved trivially — and Catalyst would
 reorder a filter below a window read's shuffle anyway where legal.
+File pruning happens before this, in the scan the caller passes in
+(``ZestStore.load`` scan hints, including the last/first ``tail``
+hint): the window stage here is always the exact canonical one.
 """
 
 from __future__ import annotations
@@ -17,30 +20,16 @@ from zestdb_spark.operators import ts_agg, ts_filter, ts_read
 from zestdb_spark.plans.plan import QueryPlan
 
 
-def plan_to_dataframe(
-    plan: QueryPlan,
-    df: DataFrame,
-    sort: bool = False,
-    window_df: DataFrame | None = None,
-) -> DataFrame:
+def plan_to_dataframe(plan: QueryPlan, df: DataFrame, sort: bool = False) -> DataFrame:
     """Compile ``plan`` against a ts-shaped DataFrame (numeric or blob).
 
     ``sort=True`` applies the reference presentation order (desc for the
     last-family); leave False for hash-compared/aggregated outputs where
     row order is irrelevant and the sort would be a wasted global
     exchange at scale.
-
-    ``window_df``, when given, is a frame that ALREADY holds the
-    window-stage output (e.g. the zest_tail pushdown source for the
-    last/first families) — the window stage is skipped and the
-    filter/agg/sort stages compose on top, preserving the reference's
-    fixed window→filter→agg pipeline order.
     """
     w = plan.window
     ids = list(plan.ids)
-
-    if window_df is not None and w.op in ("last", "first", "latest", "earliest"):
-        return _post_window(plan, window_df, sort)
 
     if w.op == "length":
         return ts_read.ts_length(df, ids)
@@ -59,12 +48,6 @@ def plan_to_dataframe(
     else:  # pragma: no cover
         raise BadRequest(f"unknown window op {w.op!r}")
 
-    return _post_window(plan, out, sort)
-
-
-def _post_window(plan: QueryPlan, out: DataFrame, sort: bool) -> DataFrame:
-    """The filter → aggregate → presentation-sort stages shared by the
-    canonical window reads and pre-windowed sources."""
     if plan.filter is not None:
         op, tag, val = plan.filter
         if op == "equals":

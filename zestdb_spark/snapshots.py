@@ -114,9 +114,10 @@ class Snapshot:
         self.op = op  # what published it: append/delete/compact/...
         # per-file column statistics for manifest-level data skipping
         # (Delta/Iceberg file stats): relpath -> {"rows": n,
-        # "min": {col: v}, "max": {col: v}}. Only files whose writer
-        # collected stats appear; a reader must treat a MISSING entry
-        # as "could match anything" (pre-stats files, bootstrap).
+        # "min": {col: v}, "max": {col: v}, "nulls": {col: k}}. Only
+        # files whose writer collected stats appear; a reader must
+        # treat a MISSING entry as "could match anything" (pre-stats
+        # files, bootstrap).
         self.stats = stats or {}
         # per-application transaction watermarks (Delta's idempotent
         # writes: txn appId -> highest committed version). A writer
@@ -352,6 +353,80 @@ def history(table_dir: str) -> "list[Snapshot]":
         )
         prev_v = v
     return list(reversed(out))
+
+
+def tail_files(files, stats: dict, mode: str, n: int) -> "tuple[list[str], int | None]":
+    """Manifest files that can hold each series' ``n`` newest rows
+    (``mode="last"``) or ``n`` oldest rows (``"first"``) — the
+    reference's newest-shard walk (src/timeseries/timeseries.re:250-283)
+    decided from manifest stats alone, before any file is opened.
+
+    Per series (the relpath's ``series_id=`` component), for ``"last"``:
+    take files newest-``max(timestamp)``-first until they hold ``n``
+    rows; ``bound`` is the smallest ``min(timestamp)`` among them; keep
+    every file of the series whose ``max`` is at least ``bound``.
+    ``"first"`` mirrors it. Comparisons are inclusive, so timestamp
+    ties at a file edge are still read and the total-order tie-break
+    (operators/ts_read.py ``_order_cols``) stays exact.
+
+    Returns ``(kept files in input order, bound)``. ``bound`` is the
+    loosest per-series bound — every top-n row has ``timestamp >=
+    bound`` (``<=`` for ``"first"``) or a null timestamp — or None
+    when no row filter is safe. Never prunes blind: every file is kept
+    when any file lacks stats or a timestamp bound or has no
+    ``series_id`` partition. A file whose null count for ``timestamp``
+    is not recorded as 0 is always kept and never counts towards
+    ``n`` (nulls sort first in ``"first"`` mode)."""
+    files = list(files)
+    if mode not in ("last", "first"):
+        raise ValueError(f"mode must be last|first, got {mode!r}")
+    if n < 1:
+        return files, None
+    by_series: "dict[str, list[str]]" = {}
+    for rel in files:
+        st = stats.get(rel) or {}
+        sid = [c for c in rel.split("/")[:-1] if c.startswith("series_id=")]
+        if (
+            not sid
+            or "timestamp" not in (st.get("min") or {})
+            or "timestamp" not in (st.get("max") or {})
+            or st.get("rows") is None
+        ):
+            return files, None
+        by_series.setdefault(sid[0], []).append(rel)
+
+    # "first" is "last" on negated timestamps: near = the edge the walk
+    # orders by, far = the edge that sets the bound
+    sign = 1 if mode == "last" else -1
+    edge = ("max", "min") if mode == "last" else ("min", "max")
+
+    def near(rel):
+        return sign * stats[rel][edge[0]]["timestamp"]
+
+    def far(rel):
+        return sign * stats[rel][edge[1]]["timestamp"]
+
+    def counted(rel):
+        return (stats[rel].get("nulls") or {}).get("timestamp") == 0
+
+    keep: "set[str]" = set()
+    bounds = []
+    for rels in by_series.values():
+        held, taken = 0, []
+        for rel in sorted(filter(counted, rels), key=near, reverse=True):
+            taken.append(rel)
+            held += stats[rel]["rows"]
+            if held >= n:
+                break
+        if held < n:
+            keep.update(rels)
+            bounds.append(None)
+            continue
+        b = min(far(rel) for rel in taken)
+        keep.update(rel for rel in rels if not counted(rel) or near(rel) >= b)
+        bounds.append(b)
+    bound = None if None in bounds or not bounds else sign * min(bounds)
+    return [rel for rel in files if rel in keep], bound
 
 
 def commit(

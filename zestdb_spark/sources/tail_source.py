@@ -14,7 +14,10 @@ restores the reference's access pattern at cluster scale:
 - **planning**: one :class:`InputPartition` per requested series — the
   series_id= dirs are pruned by listing, and Spark schedules each
   series tail as an independent task (embarrassingly parallel across
-  series, like everything else in the engine).
+  series, like everything else in the engine). On a manifested store
+  each partition holds only the files whose manifest stats can hold
+  the series' top n (``snapshots.tail_files`` — the same decision the
+  engine's canonical scan makes for its ``tail`` hint).
 - **reading**: parquet FOOTERS first. Row groups across the series'
   files are ordered by their max(timestamp) statistic, newest first,
   and read one at a time until the accumulated rows provably contain
@@ -109,9 +112,12 @@ class ZestTailReader(DataSourceReader):
 
     def partitions(self):
         cols = _LAYOUTS[self.table][0]
-        # snapshot-manifest stores (the normal case): plan EXACTLY the
-        # manifest's live file set — a dir walk would resurrect
-        # tombstoned files a delete already committed away. The legacy
+        # snapshot-manifest stores (the normal case): plan the
+        # manifest's live files — a dir walk would resurrect tombstoned
+        # files a delete already committed away — narrowed to those
+        # whose stats can hold the series' top n, the same decision
+        # the engine's scan makes (snapshots.tail_files), so the
+        # footer pass below opens only candidate files. The legacy
         # walk remains only for pre-manifest layouts.
         from zestdb_spark import snapshots
 
@@ -121,12 +127,15 @@ class ZestTailReader(DataSourceReader):
             for rel in snap.files:
                 head, _, _ = rel.partition("/")
                 if head.startswith("series_id="):
-                    by_series.setdefault(
-                        unquote(head[len("series_id="):]), []
-                    ).append(os.path.join(self.root, rel))
+                    by_series.setdefault(unquote(head[len("series_id="):]), []).append(rel)
             wanted = self.series if self.series is not None else sorted(by_series)
+
+            def candidates(s: str) -> list[str]:
+                rels, _ = snapshots.tail_files(by_series[s], snap.stats, self.mode, self.n)
+                return [os.path.join(self.root, rel) for rel in rels]
+
             return [
-                _SeriesTail(s, sorted(by_series[s]), self.n, self.mode, cols)
+                _SeriesTail(s, candidates(s), self.n, self.mode, cols)
                 for s in wanted
                 if s in by_series
             ]

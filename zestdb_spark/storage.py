@@ -266,10 +266,11 @@ def _arrow_log_schema(table: str):
 
 
 def _footer_stats(path: str, cols: tuple) -> "dict | None":
-    """Per-file min/max/rows for ``cols`` read from the parquet FOOTER
-    the writer already produced (no data scan). A column is dropped
-    from the result when any row group lacks usable min/max for it
-    (missing stats, non-finite floats, non-scalar types) — pruning
+    """Per-file min/max/null-count/rows for ``cols`` read from the
+    parquet FOOTER the writer already produced (no data scan). A column
+    is dropped from ``min``/``max`` when any row group lacks usable
+    min/max for it (missing stats, non-finite floats, non-scalar types),
+    and from ``nulls`` when any row group lacks a null count — pruning
     must stay conservative, and a dropped column just means "no claim".
     Returns None when the footer itself is unreadable."""
     import math
@@ -282,15 +283,23 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
         return None
     mins: dict = {}
     maxs: dict = {}
+    nulls: dict = {}
+    no_count: set = set()
     usable = set(cols)
     for rg_i in range(md.num_row_groups):
         rg = md.row_group(rg_i)
         for c_i in range(rg.num_columns):
             col = rg.column(c_i)
             name = col.path_in_schema
+            st = col.statistics
+            if name in cols and name not in no_count:
+                if st is not None and st.has_null_count:
+                    nulls[name] = nulls.get(name, 0) + st.null_count
+                else:
+                    no_count.add(name)
+                    nulls.pop(name, None)
             if name not in usable:
                 continue
-            st = col.statistics
             lo = st.min if st is not None and st.has_min_max else None
             hi = st.max if st is not None and st.has_min_max else None
             bad = (
@@ -312,6 +321,8 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
     if got:
         out["min"] = {k: mins[k] for k in sorted(got)}
         out["max"] = {k: maxs[k] for k in sorted(got)}
+    if nulls:
+        out["nulls"] = {k: nulls[k] for k in sorted(nulls)}
     return out
 
 
@@ -1231,6 +1242,7 @@ class ZestStore:
         since_ms: Optional[int] = None,
         until_ms: Optional[int] = None,
         series=None,
+        tail: "tuple[str, int] | None" = None,
     ) -> DataFrame:
         """Full-read-schema frame of a table. Manifested tables read
         EXACTLY the manifest's file set (one consistent snapshot,
@@ -1252,6 +1264,7 @@ class ZestStore:
             snap = self._snapshot(table)
         if snap is not None:
             files = snap.files
+            bound = None
             if since_ms is not None or until_ms is not None or series is not None:
                 # manifest-level data skipping (Delta/Iceberg file
                 # stats): drop files the hint provably cannot match
@@ -1268,6 +1281,10 @@ class ZestStore:
                         f, snap.stats.get(f), since_ms, until_ms, series
                     )
                 ]
+            if tail is not None and table in ("ts_numeric", "ts_blob"):
+                # last/first-family reads: only the files that can hold
+                # each series' top n (the reference's newest-shard walk)
+                files, bound = snapshots.tail_files(files, snap.stats, *tail)
             if not files:
                 return _empty_df(self.spark, schema)
             # only HEAD reads are cacheable: a pinned past version must
@@ -1281,6 +1298,7 @@ class ZestStore:
                     since_ms,
                     until_ms,
                     None if series is None else frozenset(series),
+                    tail,
                 )
                 with self._reader_lock:
                     cached = self._reader_cache.get(key)
@@ -1293,6 +1311,14 @@ class ZestStore:
                 .option("basePath", path)
                 .parquet(*[os.path.join(path, f) for f in files])
             )
+            if bound is not None:
+                # the tail bound reaches parquet as a pushed filter, so
+                # row groups inside a large surviving file are skipped
+                # too; null timestamps sort first in "first" order
+                ts = F.col("timestamp")
+                df = df.filter(
+                    ts.isNull() | (ts >= bound if tail[0] == "last" else ts <= bound)
+                )
             if key is not None:
                 with self._reader_lock:
                     self._reader_cache[key] = df
@@ -1313,6 +1339,7 @@ class ZestStore:
         since_ms: Optional[int] = None,
         until_ms: Optional[int] = None,
         series=None,
+        tail: "tuple[str, int] | None" = None,
     ) -> DataFrame:
         """Read a table (empty frame with the right schema if unwritten).
         The partition columns are pruned back out so callers always see
@@ -1326,14 +1353,26 @@ class ZestStore:
         files — a superset of the exact answer — so callers apply their
         exact predicate as always; the hint only shrinks the file list
         (correctness is hint-independent, pinned by
-        tests/test_stats_pruning.py)."""
+        tests/test_stats_pruning.py).
+
+        ``tail=("last"|"first", n)`` is the same kind of hint for the
+        last/first-family windows over the TS tables (other tables
+        ignore it): the frame holds at least each series' n newest
+        (oldest) rows, read from only the files whose manifest stats
+        can hold them (``snapshots.tail_files``), with the loosest
+        timestamp bound pushed to the parquet reader."""
         schema = self._schema_of(table)  # KeyError on unknown tables
         if as_of_ms is not None:
             if version is not None:
                 raise BadRequest("pass version OR as_of_ms, not both")
             version = self.version_at(table, as_of_ms)
         return self._read_table(
-            table, version, since_ms=since_ms, until_ms=until_ms, series=series
+            table,
+            version,
+            since_ms=since_ms,
+            until_ms=until_ms,
+            series=series,
+            tail=tail,
         ).select(*[f.name for f in schema.fields])
 
     def _scan_schema(self, table: str, schema):
@@ -2748,9 +2787,10 @@ class ZestStore:
                 # CLUSTER while merging: range-partition + sort by
                 # timestamp, so the output files carry tight, DISJOINT
                 # timestamp min/max — manifest-stats skipping
-                # (snapshots stats), parquet row-group pruning, and the
-                # zest_tail footer walk all get maximally selective
-                # bounds after maintenance (Delta's OPTIMIZE ZORDER,
+                # (snapshots stats, including the last/first tail
+                # hint), parquet row-group pruning, and the zest_tail
+                # footer walk all get maximally selective bounds after
+                # maintenance (Delta's OPTIMIZE ZORDER,
                 # one dimension). Content is still preserved verbatim.
                 merged = (
                     self.spark.read.schema(leaf_schema)
