@@ -13,10 +13,11 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from zestdb_spark.api import ZestEngine  # noqa: E402
 from zestdb_spark.errors import ZestError  # noqa: E402

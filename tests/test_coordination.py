@@ -11,6 +11,10 @@ import pytest
 
 from zestdb_spark import coordination
 
+#: the repo this test file lives in — child processes import it, not
+#: whatever copy happens to be installed or checked out elsewhere
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 #: a pid that CANNOT exist: kernel.pid_max's ceiling is 2^22 = 4194304
 #: inclusive, so anything strictly above it never names a process
@@ -165,7 +169,7 @@ def test_cross_process_commit_cas(tmp_path):
 
     child_src = textwrap.dedent(f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from zestdb_spark import snapshots
         for i in range({n}):
             snapshots.commit({table!r}, adds=[f"c-{{i}}.parquet"], op="append")

@@ -617,10 +617,12 @@ def test_bpe_encode_strips_stray_separators(spark):
     assert row.n_subwords == 3
 
 
-def test_bpe_encode_kernel_matches_literal(spark, docs):
+def test_bpe_encode_kernel_matches_literal(spark, docs, monkeypatch):
     # the Arrow kernel (large-merge-table path) must be bit-identical
     # to the chained-replace expression — same encoded stream, same
-    # counts, on real fixture text including nulls and stray separators
+    # counts, on real fixture text including nulls and stray separators.
+    # The path follows len(merges) vs BPE_KERNEL_MERGES, so moving the
+    # threshold forces each side on the same merge table.
     from zestdb_spark.functions.corpus_ops import BPE_SEP
 
     extra = spark.createDataFrame(
@@ -632,14 +634,16 @@ def test_bpe_encode_kernel_matches_literal(spark, docs):
     corpus = docs.unionByName(extra)
     merges = corpus_ops.bpe_train(corpus, n_merges=12)
     assert merges  # the fixture corpus trains a non-trivial table
-    lit = {
-        r.doc_id: (r.encoded, r.n_subwords)
-        for r in corpus_ops.bpe_encode(corpus, merges, method="literal").collect()
-    }
-    ker = {
-        r.doc_id: (r.encoded, r.n_subwords)
-        for r in corpus_ops.bpe_encode(corpus, merges, method="kernel").collect()
-    }
+
+    def encode(threshold):
+        monkeypatch.setattr(corpus_ops, "BPE_KERNEL_MERGES", threshold)
+        return {
+            r.doc_id: (r.encoded, r.n_subwords)
+            for r in corpus_ops.bpe_encode(corpus, merges).collect()
+        }
+
+    lit = encode(len(merges))
+    ker = encode(len(merges) - 1)
     assert lit == ker
     assert lit[100] == (None, None)
 

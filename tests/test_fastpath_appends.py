@@ -395,6 +395,44 @@ def test_empty_partition_identifiers_rejected(store):
     assert not store._exists("kv_json")
 
 
+def test_bulk_append_rejects_rows_without_a_partition_key(spark, store):
+    """The bulk TS append applies the same rule inside its cast
+    projection: a null timestamp, or a null or empty series id, fails
+    the write job with BadRequest and commits nothing — the table's
+    version, live files and write_log stay as they were, and no
+    staging tree is left behind."""
+    from pyspark.sql import types as T
+
+    from zestdb_spark.errors import BadRequest
+    from zestdb_spark.schema import TS_NUMERIC
+
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in TS_NUMERIC.fields]
+    )
+    store.write_numeric_bulk(
+        spark.createDataFrame([("s", 1000, 1.0, None, None)], nullable)
+    )
+
+    def state():
+        return (
+            store._snapshot("ts_numeric").version,
+            store._live_files("ts_numeric"),
+            sorted(map(tuple, store.load("write_log").collect())),
+        )
+
+    before = state()
+    for bad in [
+        ("s", None, 2.0, None, None),
+        (None, 2000, 2.0, None, None),
+        ("", 2000, 2.0, None, None),
+    ]:
+        rows = spark.createDataFrame([("s", 3000, 3.0, None, None), bad], nullable)
+        with pytest.raises(BadRequest, match="series_id must be non-empty"):
+            store.write_numeric_bulk(rows)
+        assert state() == before
+    assert not [n for n in os.listdir(store.root) if n.startswith(".stage_")]
+
+
 def test_concurrent_fastpath_writers_all_land(spark, store):
     """Lock-free appends from many threads merge through the commit
     CAS (snapshots.commit retries fold concurrent adds): every row,

@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 from zestdb_spark.errors import BadRequest
 from zestdb_spark.storage import ZestStore
 
+#: the repo this test file lives in — child processes import it, not
+#: whatever copy happens to be installed or checked out elsewhere
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture()
 def store(spark, tmp_path):
@@ -306,7 +310,7 @@ def test_concurrent_create_has_one_winner(spark, store):
 
     child_src = textwrap.dedent(f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from zestdb_spark.errors import BadRequest
         from zestdb_spark.session import get_spark
         from zestdb_spark.storage import ZestStore

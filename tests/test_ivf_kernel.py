@@ -1,37 +1,43 @@
-"""The Arrow IVF-assignment kernel vs the literal-codebook expression.
+"""The Arrow IVF kernels against independent references.
 
-VERDICT r9 "What's wrong #2": `_nearest_centroid` / the knn_join probe
-structs inline the whole codebook as literals — one HOF fold per
-centroid per row — which cannot be PLANNED at the ~100k-centroid
-codebooks SCALE.md recommends for crawl scale. The kernel path
-(`method="kernel"`) broadcasts the codebook as numpy inside one
-`mapInPandas` pass, so planning cost is independent of m.
+Assignment and probe ranking run in Arrow kernels that broadcast the
+codebook as numpy inside one ``mapInPandas`` pass, so planning cost is
+independent of the centroid count (a literal-codebook expression — one
+HOF fold per centroid per row — cannot be PLANNED at the ~100k-centroid
+codebooks SCALE.md recommends for crawl scale).
 
 Pins, on the driver embeddings fixture (500 × 64-dim):
-- assignment equivalence: kernel == literal, row for row (vec_id, v,
-  norm, cent all bit-equal — same IEEE left folds);
-- search equivalence: ivf_topk / knn_join / semantic_dedup produce
-  identical results under both methods;
-- the large-codebook smoke: a 10_000-centroid synthetic codebook that
-  the literal path cannot realistically plan both PLANS and RUNS
-  through assignment, top-k, and the batch join.
+- assignment: every row's ``cent`` equals the driver fold
+  ``_rank_probes(codebook, v, norm, 1)[0]`` (sequential IEEE left
+  folds, lowest-id tie-break), for a trained and an untrained codebook;
+- search: ivf_topk and knn_join equal their DuckDB oracles
+  (``sim_topk_ivf``, ``sim_knn_join``); semantic_dedup equals a
+  plain-Python pair rule over the collected assignment;
+- the large-codebook smoke: a 10_000-centroid synthetic codebook both
+  PLANS and RUNS through assignment, top-k, and the batch join.
 """
 
 from __future__ import annotations
 
+import math
 import os
 
+import duckdb
 import numpy as np
 import pytest
 
-from zestdb_spark.functions import similarity
+import __spark_entry__ as entry
 from zestdb_spark.functions.similarity import (
+    _ivf_centroids,
+    _rank_probes,
+    _seq_dot_py,
     ivf_assign,
     ivf_topk,
     ivf_train,
     knn_join,
     semantic_dedup,
 )
+from tests.test_retrieval_semdedup import python_semdedup
 
 _SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 _EMB = os.path.join(_SF_DIR, "embeddings.parquet")
@@ -57,54 +63,58 @@ def _rows(df, *order):
     return [tuple(r) for r in df.orderBy(*order).collect()]
 
 
+def _oracle(name):
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{_EMB}'")
+    out = con.execute(entry.oracle_sql()[name]).fetchall()
+    con.close()
+    return out
+
+
+def _assert_assignment_matches_driver_fold(embs, cb):
+    inputs = {r["vec_id"]: list(r["embedding"]) for r in embs.collect()}
+    rows = ivf_assign(embs, codebook=cb).collect()
+    assert len(rows) == 500
+    for r in rows:
+        v = [float(x) for x in inputs[r["vec_id"]]]
+        assert list(r["v"]) == v
+        assert r["norm"] == math.sqrt(_seq_dot_py(v, v))
+        assert r["cent"] == _rank_probes(cb, v, r["norm"], 1)[0]
+
+
 def test_assign_kernel_matches_literal(embs, codebook):
-    lit = ivf_assign(embs, codebook=codebook, method="literal")
-    ker = ivf_assign(embs, codebook=codebook, method="kernel")
-    a = _rows(lit.select("vec_id", "norm", "cent", "v"), "vec_id")
-    b = _rows(ker.select("vec_id", "norm", "cent", "v"), "vec_id")
-    assert len(a) == 500
-    assert a == b  # bit-equal: norms, cents, and every vector element
+    _assert_assignment_matches_driver_fold(embs, codebook)
 
 
 def test_assign_kernel_matches_untrained_codebook(embs):
     # the deterministic smallest-id codebook exercises the tie-break
     # differently from the trained one (real corpus rows as centroids:
     # each centroid's own row scores cosine exactly 1.0)
-    lit = ivf_assign(embs, n_centroids=16, method="literal")
-    ker = ivf_assign(embs, n_centroids=16, method="kernel")
-    assert _rows(lit, "vec_id") == _rows(ker, "vec_id")
+    cb = [
+        {"vec_id": r["vec_id"], "v": list(r["v"]), "norm": r["norm"]}
+        for r in _ivf_centroids(embs, 16)
+    ]
+    _assert_assignment_matches_driver_fold(embs, cb)
 
 
-def test_topk_kernel_matches_literal(embs, codebook):
-    for qid in (0, 7, 123):
-        a = _rows(
-            ivf_topk(embs, qid, k=10, codebook=codebook, method="literal"),
-            "cosine", "vec_id",
-        )
-        b = _rows(
-            ivf_topk(embs, qid, k=10, codebook=codebook, method="kernel"),
-            "cosine", "vec_id",
-        )
-        assert a == b and len(a) == 10
+def test_topk_kernel_matches_literal(embs):
+    got = [tuple(r) for r in ivf_topk(embs, 0, 10).collect()]
+    assert got == _oracle("sim_topk_ivf") and len(got) == 10
 
 
-def test_knn_join_kernel_matches_literal(embs, codebook):
+def test_knn_join_kernel_matches_literal(embs):
     queries = embs.filter(embs.vec_id < 20)
-    a = _rows(
-        knn_join(embs, queries, k=5, codebook=codebook, method="literal"),
-        "qid", "cosine", "vec_id",
-    )
-    b = _rows(
-        knn_join(embs, queries, k=5, codebook=codebook, method="kernel"),
-        "qid", "cosine", "vec_id",
-    )
-    assert a == b and len(a) == 20 * 5
+    got = _rows(knn_join(embs, queries, k=5), "qid", "vec_id")
+    assert got == sorted(_oracle("sim_knn_join")) and len(got) == 20 * 5
 
 
 def test_semantic_dedup_kernel_matches_literal(embs, codebook):
-    a = _rows(semantic_dedup(embs, tau=0.8, codebook=codebook, method="literal"), "vec_id")
-    b = _rows(semantic_dedup(embs, tau=0.8, codebook=codebook, method="kernel"), "vec_id")
-    assert a == b and len(a) == 500
+    assigned = ivf_assign(embs, codebook=codebook).collect()
+    for tau in (0.45, 0.8):
+        got = _rows(semantic_dedup(embs, tau=tau, codebook=codebook), "vec_id")
+        assert got == python_semdedup(assigned, tau) and len(got) == 500
+        if tau == 0.45:
+            assert any(not keep for _, _, keep in got)  # the bar drops something
 
 
 def test_knn_join_excludes_zero_norm_corpus_rows(spark, codebook):
@@ -116,31 +126,16 @@ def test_knn_join_excludes_zero_norm_corpus_rows(spark, codebook):
     rows.append((999, [0.0] * dim))  # the poisoned row
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = corpus.filter("vec_id < 3")
-    for method in ("literal", "kernel"):
-        out = knn_join(corpus, queries, k=5, codebook=codebook, method=method)
-        got = {r["vec_id"] for r in out.collect()}
-        assert 999 not in got
-        assert not any(
-            r["cosine"] != r["cosine"] for r in out.collect()
-        )  # no NaN anywhere
-
-
-def test_auto_dispatch_prefers_kernel(embs, codebook):
-    # auto picks the kernel at every size (HOF folds are interpreted —
-    # the kernel measured 3-4× faster even at m=16, and the two paths
-    # are bit-identical); "literal" stays an explicit opt-in
-    assert similarity._use_ivf_kernel(codebook, "auto")
-    assert similarity._use_ivf_kernel(codebook, "kernel")
-    assert not similarity._use_ivf_kernel(codebook, "literal")
-    with pytest.raises(ValueError):
-        similarity._use_ivf_kernel(codebook, "bogus")
+    rows = knn_join(corpus, queries, k=5, codebook=codebook).collect()
+    assert 999 not in {r["vec_id"] for r in rows}
+    assert not any(r["cosine"] != r["cosine"] for r in rows)  # no NaN anywhere
 
 
 def test_large_codebook_plans_and_runs(spark, embs):
-    """The regime the literal expression cannot reach: 10k centroids.
-    Codebook is synthetic (trained codebooks are bounded by the
-    sample cap; the ceiling being lifted is PLANNING, not training).
-    auto-dispatch must pick the kernel and the full ladder must run."""
+    """The regime a literal-codebook expression cannot reach: 10k
+    centroids. Codebook is synthetic (trained codebooks are bounded by
+    the sample cap; the ceiling being lifted is PLANNING, not
+    training). The full ladder must plan and run."""
     dim = 64
     rng = np.random.default_rng(42)
     cents = []
@@ -149,7 +144,7 @@ def test_large_codebook_plans_and_runs(spark, embs):
         n = float(np.sqrt(np.sum(v * v)))
         cents.append({"vec_id": int(i), "v": [float(x) for x in v], "norm": n})
 
-    assigned = ivf_assign(embs, codebook=cents)  # method="auto" → kernel
+    assigned = ivf_assign(embs, codebook=cents)
     assert assigned.count() == 500
     cent_vals = {r["cent"] for r in assigned.select("cent").distinct().collect()}
     assert cent_vals <= set(range(10_000))

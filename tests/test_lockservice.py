@@ -20,6 +20,10 @@ import pytest
 from zestdb_spark import coordination
 from zestdb_spark.lockserver import LockServer, ServiceCoordinator
 
+#: the repo this test file lives in — child processes import it, not
+#: whatever copy happens to be installed or checked out elsewhere
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture()
 def server():
@@ -86,7 +90,7 @@ def test_cross_process_mutex_no_lost_updates(server, tmp_path):
 
     child_src = textwrap.dedent(f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from zestdb_spark import coordination
         from zestdb_spark.lockserver import ServiceCoordinator
         coordination.set_coordinator(ServiceCoordinator(({host!r}, {port})))
@@ -118,7 +122,7 @@ def test_kill9_lease_recovery(server, tmp_path):
     lock = str(tmp_path / "dead.lock")
     child_src = textwrap.dedent(f"""
         import sys, time
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from zestdb_spark.lockserver import ServiceCoordinator
         c = ServiceCoordinator(({host!r}, {port}), lease_s=2.0)
         assert c.try_acquire({lock!r})
@@ -158,7 +162,7 @@ def test_store_commits_through_service_lose_nothing(server, tmp_path):
 
     child_src = textwrap.dedent(f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from zestdb_spark import coordination, snapshots
         from zestdb_spark.lockserver import ServiceCoordinator
         coordination.set_coordinator(ServiceCoordinator(({host!r}, {port})))

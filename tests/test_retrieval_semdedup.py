@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from zestdb_spark.functions import corpus_ops
-from zestdb_spark.functions.similarity import semantic_dedup
+from zestdb_spark.functions.similarity import _seq_dot_py, ivf_assign, semantic_dedup
 
 DOCS = [
     (0, "spark spark spark runs the query", "en", "srcA"),
@@ -156,31 +156,37 @@ def test_bpe_pairs_rank_tie_breaks_lexically(spark):
     assert [(r["pair"], r["rnk"]) for r in rows] == [("xy", 1), ("yz", 2)]
 
 
+def python_semdedup(assigned, tau):
+    """The SemDeDup keep rule in plain Python over collected
+    (vec_id, v, norm, cent) assignment rows: within a cell, a pair at
+    q6(cosine) >= tau drops the larger vec_id. Cosines use
+    ``_seq_dot_py``'s left fold, so they match the kernel bitwise."""
+    rows = sorted((r["vec_id"], r["cent"], list(r["v"]), r["norm"]) for r in assigned)
+    dropped = set()
+    for i, (_, ca, va, na) in enumerate(rows):
+        for ib, cb, vb, nb in rows[i + 1 :]:
+            if ca == cb and math.floor(_seq_dot_py(va, vb) / (na * nb) * 1e6) / 1e6 >= tau:
+                dropped.add(ib)
+    return [(vid, cent, vid not in dropped) for vid, cent, _, _ in rows]
+
+
 def test_semantic_dedup_kernel_matches_literal(spark):
-    """Round 11: the per-cell Arrow pair kernel (pairs='kernel', the
-    default via 'auto') must equal the literal pair join row for row —
-    same left-fold cosine accumulation, same floor-1e-6 quantization,
-    same smaller-id drop rule. The kernel exists because the literal
-    path prices every PAIR through an interpreted HOF fold (81 s at
-    the 20k-vector sf1 probe vs ~2.6 s kernel, 31x)."""
+    """The per-cell Arrow pair kernel equals the plain-Python pair rule
+    (``python_semdedup``) over the same assignment, at sparse, single-
+    cell and near-exact bars. The kernel exists because a literal pair
+    join prices every PAIR through an interpreted HOF fold (81 s at the
+    20k-vector sf1 probe vs ~2.6 s kernel, 31x)."""
     embs = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .select("vec_id", "embedding")
     )
     for tau, m in ((0.45, 4), (0.6, 1), (0.99, 8)):
-        lit = sorted(
-            map(tuple, semantic_dedup(embs, tau=tau, n_centroids=m,
-                                      pairs="literal").collect())
+        got = sorted(
+            map(tuple, semantic_dedup(embs, tau=tau, n_centroids=m).collect())
         )
-        ker = sorted(
-            map(tuple, semantic_dedup(embs, tau=tau, n_centroids=m,
-                                      pairs="kernel").collect())
-        )
-        assert lit == ker, f"kernel/literal divergence at tau={tau} m={m}"
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="pairs must be"):
-        semantic_dedup(embs, pairs="nope")
+        ref = python_semdedup(ivf_assign(embs, n_centroids=m).collect(), tau)
+        assert got == ref, f"kernel/reference divergence at tau={tau} m={m}"
+        assert len(got) == 500
 
 
 def test_tiled_fold_matches_untiled():

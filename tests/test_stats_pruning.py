@@ -26,10 +26,12 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from zestdb_spark import snapshots
 from zestdb_spark.api import ZestEngine
+from zestdb_spark.errors import BadRequest
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.storage import _DAY_MS
 from tests.engine_reference import unhinted_get
@@ -505,19 +507,18 @@ def test_engine_tail_read_with_null_timestamps(spark, tmp_path):
     assert json.loads(eng.get("/ts/a/latest"))[0]["timestamp"] == 3000
     _assert_engine_parity(eng)
 
-    # write_numeric_bulk trusts its caller: a null timestamp lands in a
-    # null time_bucket leaf whose file has no timestamp min/max, so the
-    # tail hint keeps every file of a read that includes the series
+    # bulk ingest rejects a null timestamp (it would land in a null
+    # time_bucket leaf with no timestamp stats, turning the tail hint
+    # off for the series); nothing is committed
     nullable = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in TS_NUMERIC.fields]
     )
-    eng.ingest_bulk(
-        spark.createDataFrame([("c", None, 9.0, None, None)], nullable),
-        path="/ts/bulk/nulls",
-        client="t",
-    )
-    hinted = eng.store.load("ts_numeric", series={"c"}, tail=("last", 1))
-    assert len(hinted.inputFiles()) == len(
-        eng.store.load("ts_numeric", series={"c"}).inputFiles()
-    )
+    version = eng.store._snapshot("ts_numeric").version
+    with pytest.raises(BadRequest, match="timestamp non-null"):
+        eng.ingest_bulk(
+            spark.createDataFrame([("c", None, 9.0, None, None)], nullable),
+            path="/ts/bulk/nulls",
+            client="t",
+        )
+    assert eng.store._snapshot("ts_numeric").version == version
     _assert_engine_parity(eng)

@@ -2,8 +2,10 @@
 
 The whole minhash_kernel design rests on two bit-exactness claims:
 (1) xxh64_np reproduces Spark's ``xxhash64`` for STRING input, and
-(2) the Arrow signature kernel reproduces the JVM expression pipeline
-(explode → 64 min-aggregates) row for row. Both are pinned here on
+(2) the Arrow signature kernel equals, row for row, the MinHash built
+in this test from Spark's own ``xxhash64`` of every distinct shingle of
+``dedup._shingle_array`` (masked to 28 bits) and a Python min over
+``dedup._minhash_params``. Both are pinned here on
 adversarial inputs: every tail-length class of the XXH64 algorithm,
 multi-byte UTF-8, consecutive/leading/trailing spaces, empty and
 sub-k-token documents, and duplicate shingles.
@@ -81,12 +83,28 @@ CORPUS = [
 ]
 
 
+def _reference_signatures(docs, k, num_hashes):
+    """(doc_id, h0..h{n-1}) from Spark-hashed shingles, min in Python;
+    docs with no shingle (empty, null, fewer than k tokens) get no row."""
+    mask = (1 << 28) - 1
+    hashed = docs.select(
+        "doc_id", F.explode(dedup._shingle_array(k)).alias("s")
+    ).select("doc_id", F.xxhash64("s").bitwiseAND(F.lit(mask)).alias("x"))
+    xs: dict[int, list[int]] = {}
+    for r in hashed.collect():
+        xs.setdefault(r["doc_id"], []).append(r["x"])
+    params = dedup._minhash_params(num_hashes)
+    return sorted(
+        (doc_id, *(min((a * x + b) % dedup._P for x in v) for a, b in params))
+        for doc_id, v in xs.items()
+    )
+
+
 @pytest.mark.parametrize("k,num_hashes", [(3, 64), (2, 8)])
 def test_arrow_signatures_match_expr_path(spark, k, num_hashes):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    expr = dedup.minhash_signatures(docs, k, num_hashes, impl="expr")
-    arrow = dedup.minhash_signatures(docs, k, num_hashes, impl="arrow")
-    assert expr.columns == arrow.columns
-    a = sorted(map(tuple, expr.collect()))
-    b = sorted(map(tuple, arrow.collect()))
-    assert a == b
+    sig = dedup.minhash_signatures(docs, k, num_hashes)
+    assert sig.columns == ["doc_id", *(f"h{i}" for i in range(num_hashes))]
+    got = sorted(map(tuple, sig.collect()))
+    assert got == _reference_signatures(docs, k, num_hashes)
+    assert len(got) == (6 if k == 3 else 7)

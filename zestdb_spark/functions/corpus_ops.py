@@ -31,6 +31,12 @@ from zestdb_spark.functions.dedup import (
     shingles,
 )
 from zestdb_spark.functions.textstats import quality_score
+from zestdb_spark.functions.token_count_kernel import (
+    make_tf_rows_fn,
+    make_token_stats_fn,
+    stats_schema,
+    tf_schema,
+)
 
 __all__ = [
     "hash_bucket",
@@ -163,58 +169,34 @@ def vocab_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     return counts.withColumn("rnk", F.row_number().over(w))
 
 
-def tf_idf(
-    docs: DataFrame, broadcast_vocab: bool = True, impl: str = "arrow"
-) -> DataFrame:
+def tf_idf(docs: DataFrame, broadcast_vocab: bool = True) -> DataFrame:
     """(doc_id, tok, tf, df, tfidf): classic tf·ln(N/df) term weights.
-    Shape: ONE explode → per-doc tf aggregation, then df derived FROM
-    tf ((doc_id, tok) rows are unique there, so df = count per token)
-    — the corpus is exploded once, not twice, and the df shuffle moves
-    the already-collapsed tf rows, not raw tokens. The df table is
-    vocabulary-sized (Zipf: ≪ corpus) and broadcast by default, so the
-    re-join is map-side — tf is never re-exchanged by token (measured
-    −13% at sf0.1, and one whole corpus-sized shuffle less at scale);
-    ``broadcast_vocab=False`` degrades to a shuffle equi-join for
-    pathological vocabularies past the broadcast ceiling (the
-    ``unigram_logprob`` contract). N is a 1-row broadcast. q6-floored
-    score (tf, df, N are integers, so the double inputs are identical
-    in both engines and ln agrees to well under the 1e-6 quantum).
+    Shape: the tf table is computed SCAN-LOCALLY in one vectorized
+    Arrow kernel (token_count_kernel.make_tf_rows_fn): per-(doc, tok)
+    counts are scan-local facts (a doc lives in one partition), so the
+    explode → partial agg → corpus-sized Exchange → final agg chain
+    collapses to a per-batch Arrow hash group-by with ZERO shuffle.
+    df is derived FROM tf ((doc_id, tok) rows are unique there, so
+    df = count per token) — the df shuffle moves the already-collapsed
+    tf rows, not raw tokens. The df table is vocabulary-sized (Zipf:
+    ≪ corpus) and broadcast by default, so the re-join is map-side —
+    tf is never re-exchanged by token (measured −13% at sf0.1, and one
+    whole corpus-sized shuffle less at scale); ``broadcast_vocab=False``
+    degrades to a shuffle equi-join for pathological vocabularies past
+    the broadcast ceiling (the ``unigram_logprob`` contract). N is a
+    1-row broadcast. q6-floored score (tf, df, N are integers, so the
+    double inputs are identical in both engines and ln agrees to well
+    under the 1e-6 quantum; pinned against the DuckDB oracle by
+    tests/test_token_count_kernel.py).
 
-    ``impl="arrow"`` (default, r13) computes the tf table SCAN-LOCALLY
-    in one vectorized Arrow kernel (token_count_kernel.make_tf_rows_fn):
-    per-(doc, tok) counts are scan-local facts (a doc lives in one
-    partition), so the explode → partial agg → corpus-sized Exchange →
-    final agg chain collapses to a per-batch Arrow hash group-by with
-    ZERO shuffle — counts are integers, so tf (and df/tfidf derived
-    from it) is BIT-IDENTICAL (pinned by
-    tests/test_token_count_kernel.py). ``impl="expr"`` keeps the
-    pure-JVM pipeline (engines without Python workers).
-
-    Input contract under ``impl="arrow"``: doc_ids must be UNIQUE (the
-    corpus contract everywhere in this module) — the kernel's group-by
-    is per-batch, so duplicate ids split across partitions would emit
-    rows the explode→groupBy plan merges; pass ``impl="expr"`` for a
-    multiset-keyed input."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"tf_idf: impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        from zestdb_spark.functions.token_count_kernel import (
-            make_tf_rows_fn,
-            tf_schema,
-        )
-
-        tf = docs.select("doc_id", "text").mapInArrow(
-            make_tf_rows_fn(),
-            tf_schema(docs.schema["doc_id"].dataType.simpleString()),
-        )
-    else:
-        toks = docs.select(
-            "doc_id",
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("tok"),
-        )
-        tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
+    Input contract: doc_ids must be UNIQUE (the corpus contract
+    everywhere in this module) — the kernel's group-by is per-batch,
+    so duplicate ids split across partitions emit one tf row per
+    partition instead of one merged row."""
+    tf = docs.select("doc_id", "text").mapInArrow(
+        make_tf_rows_fn(),
+        tf_schema(docs.schema["doc_id"].dataType.simpleString()),
+    )
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     return (
@@ -332,7 +314,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(doc_id, score): Okapi BM25 retrieval — the k best documents for
     a literal bag-of-terms query, scored with the Lucene idf variant
@@ -358,44 +339,22 @@ def bm25_topk(
     the ``tf_idf`` portability contract. Docs matching no term score 0
     and are excluded. Ties break on doc_id asc.
 
-    ``impl="arrow"`` (default, r13) computes the base projection in one
-    vectorized Arrow kernel (token_count_kernel.py): the per-term
-    interpreted higher-order token filters — measured as ~75% of the
-    whole row's cost at sf1 — collapse to whole-batch pyarrow
-    split/equal/bincount calls. Counts are integers either way, so the
-    projection (and everything downstream) is BIT-IDENTICAL to the
-    expression path (pinned by tests/test_token_count_kernel.py).
-    ``impl="expr"`` keeps the pure-JVM pipeline (engines without
-    Python workers).
+    The base projection is one vectorized Arrow kernel
+    (token_count_kernel.py): per-term interpreted higher-order token
+    filters — measured as ~75% of the whole row's cost at sf1 —
+    collapse to whole-batch pyarrow split/equal/bincount calls. Pinned
+    against the DuckDB oracle by tests/test_token_count_kernel.py.
     """
     if not query_terms:
         raise ValueError("bm25_topk: query_terms must be non-empty")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"bm25_topk: impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        from zestdb_spark.functions.token_count_kernel import (
-            make_token_stats_fn,
-            stats_schema,
+    base = _persist_bounded(
+        docs.select("doc_id", "text").mapInArrow(
+            make_token_stats_fn(tuple(query_terms)),
+            stats_schema(
+                len(query_terms), docs.schema["doc_id"].dataType.simpleString()
+            ),
         )
-
-        base = _persist_bounded(
-            docs.select("doc_id", "text").mapInArrow(
-                make_token_stats_fn(tuple(query_terms)),
-                stats_schema(
-                    len(query_terms),
-                    docs.schema["doc_id"].dataType.simpleString(),
-                ),
-            )
-        )
-    else:
-        toks = F.filter(F.split("text", " "), lambda t: t != "")
-        tf_cols = [
-            F.size(F.filter(toks, lambda t: t == F.lit(term))).alias(f"tf{i}")
-            for i, term in enumerate(query_terms)
-        ]
-        base = _persist_bounded(
-            docs.select("doc_id", F.size(toks).alias("dl"), *tf_cols)
-        )
+    )
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -659,7 +618,6 @@ def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str]],
     text: str = "text",
-    method: str = "auto",
 ) -> DataFrame:
     """(doc_id, encoded, n_subwords): apply a BPE merge table to the
     whole corpus — scan-local, zero shuffles, and bit-replayable in
@@ -674,16 +632,14 @@ def bpe_encode(
     merges; ``encoded`` keeps the full subword stream (split on the
     separator to materialize token arrays).
 
-    ``method``: ``"literal"`` = one chained ``F.replace`` per merge in
-    whole-stage codegen (best for small merge tables — the oracle-
-    replayable form); ``"kernel"`` = one Arrow ``mapInPandas`` pass
-    applying the broadcast merge table per distinct word (plans at ANY
-    merge count — a real 32k-merge tokenizer is a 32k-deep expression
-    tree the literal path cannot build); ``"auto"`` switches at
-    ``BPE_KERNEL_MERGES``. Both are bit-identical (pinned by test)."""
-    if method not in ("auto", "literal", "kernel"):
-        raise ValueError(f"method must be auto|literal|kernel, got {method!r}")
-    if method == "kernel" or (method == "auto" and len(merges) > BPE_KERNEL_MERGES):
+    The path follows the merge-table size: up to ``BPE_KERNEL_MERGES``
+    merges run as one chained ``F.replace`` per merge in whole-stage
+    codegen (the oracle-replayable form); larger tables run one Arrow
+    ``mapInPandas`` pass applying the broadcast merge table per
+    distinct word (plans at ANY merge count — a real 32k-merge
+    tokenizer is a 32k-deep expression tree the literal path cannot
+    build). Both are bit-identical (pinned by test)."""
+    if len(merges) > BPE_KERNEL_MERGES:
         return docs.select("doc_id", text).mapInPandas(
             _bpe_kernel(merges, text),
             "doc_id long, encoded string, n_subwords long",
@@ -1097,7 +1053,6 @@ def dsir_select(
     target: DataFrame,
     k: int = 100,
     broadcast_vocab: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(doc_id, n_tokens, logw, score): Data Selection via Importance
     Resampling (Xie et al. 2023, arXiv:2302.03169) — pick the k raw
@@ -1117,76 +1072,47 @@ def dsir_select(
     and cluster sizes, never ``rand()`` — so selection is importance
     SAMPLING, not a brittle deterministic argmax, yet still replayable.
 
-    Shape: ONE tagged-union token-count aggregation — both corpora's
-    token streams union with a (cr, ct) indicator pair and aggregate
-    by token in a single map-side-combined shuffle (sum of indicators
-    = the per-side counts, and a token missing from one side sums to
-    0 there — exactly the old full-outer-join-with-coalesce, minus
-    one aggregation exchange and the join; r13, measured −2 scheduled
-    jobs on the probe) — then a 1-row totals broadcast, then ONE
-    raw-corpus explode joined to the broadcast vocab and rolled up
-    per doc — the ``unigram_logprob`` movement with a second (small)
-    corpus folded in. Final top-k is TakeOrderedAndProject.
-    ``broadcast_vocab=False`` degrades the vocab join to a shuffle
-    equi-join past the broadcast ceiling. Zero-token docs carry no
-    evidence and are excluded. Ties break on doc_id asc.
+    Shape: the RAW corpus's token counting rides the scan-local Arrow
+    tf kernel (the ``tf_idf`` shape), so everything downstream
+    consumes collapsed (doc, tok, tf) rows instead of token instances.
+    Then ONE tagged-union token-count aggregation: raw tf rows and the
+    target's token stream union with an (r, t) count pair and
+    aggregate by token in a single map-side-combined shuffle (a token
+    missing from one side sums to 0 there — a full-outer-join-with-
+    coalesce minus one aggregation exchange and the join), then a
+    1-row totals broadcast, then the tf rows joined to the broadcast
+    vocab and rolled up per doc, weighing llr·tf — the exact
+    DECIMAL(38,6) multiple of adding llr tf times. Final top-k is
+    TakeOrderedAndProject. ``broadcast_vocab=False`` degrades the
+    vocab join to a shuffle equi-join past the broadcast ceiling.
+    Zero-token docs carry no evidence and are excluded. Ties break on
+    doc_id asc.
 
-    ``impl="arrow"`` (default, r14): the RAW corpus's token counting
-    rides the scan-local Arrow tf kernel (the tf_idf shape), and
-    everything downstream consumes collapsed (doc, tok, tf) rows
-    instead of token instances: the vocab aggregation's input shrinks
-    from corpus-token-instance rows to per-doc-distinct rows, and the
-    per-doc rollup weighs llr·tf — the exact DECIMAL(38,6) multiple
-    of adding llr tf times, so every output is BIT-IDENTICAL (integer
-    counts, same smoothed-log formula). The tf pass is deliberately
-    NOT persisted even though two subtrees read it: the kernel is
-    scan-local (one parquet scan + one Arrow pass), and recomputing
-    it beat materializing the corpus-sized tf cache at the sf10 probe
-    (14.2 vs 18.9 s min; a wash at sf0.1) — at 100 TB a second
-    columnar copy of the token table is exactly the §5 memory
-    pressure to avoid. The TARGET corpus keeps the plain explode (it
-    is small by DSIR's premise — a second Python-worker wave on it
-    measured +0.23 s fixed cost at sf0.1 for no sf1 gain). Unique
-    raw-doc_id contract as in ``tf_idf``. ``impl="expr"`` keeps the
-    pure-JVM explode pipeline (engines without Python workers)."""
+    The tf pass is deliberately NOT persisted even though two subtrees
+    read it: the kernel is scan-local (one parquet scan + one Arrow
+    pass), and recomputing it beat materializing the corpus-sized tf
+    cache at the sf10 probe (14.2 vs 18.9 s min; a wash at sf0.1) — at
+    100 TB a second columnar copy of the token table is exactly the §5
+    memory pressure to avoid. The TARGET corpus keeps the plain
+    explode (it is small by DSIR's premise — a second Python-worker
+    wave on it measured +0.23 s fixed cost at sf0.1 for no sf1 gain).
+    Unique raw-doc_id contract as in ``tf_idf``. Pinned against the
+    DuckDB oracle by tests/test_token_count_kernel.py."""
     if k < 1:
         raise ValueError(f"dsir_select: k must be ≥ 1, got {k}")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"dsir_select: impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        from zestdb_spark.functions.token_count_kernel import (
-            make_tf_rows_fn,
-            tf_schema,
+    raw_tf = raw.select("doc_id", "text").mapInArrow(
+        make_tf_rows_fn(),
+        tf_schema(raw.schema["doc_id"].dataType.simpleString()),
+    )
+    tagged = raw_tf.select(
+        "tok", F.col("tf").alias("r"), F.lit(0).cast("long").alias("t")
+    ).unionAll(
+        target.select(
+            F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("tok")
+        ).select(
+            "tok", F.lit(0).cast("long").alias("r"), F.lit(1).cast("long").alias("t")
         )
-
-        raw_tf = raw.select("doc_id", "text").mapInArrow(
-            make_tf_rows_fn(),
-            tf_schema(raw.schema["doc_id"].dataType.simpleString()),
-        )
-        tagged = raw_tf.select(
-            "tok", F.col("tf").alias("r"), F.lit(0).cast("long").alias("t")
-        ).unionAll(
-            target.select(
-                F.explode(
-                    F.filter(F.split("text", " "), lambda t: t != "")
-                ).alias("tok")
-            ).select(
-                "tok", F.lit(0).cast("long").alias("r"),
-                F.lit(1).cast("long").alias("t"),
-            )
-        )
-    else:
-        toks = raw.select(
-            "doc_id",
-            F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("tok"),
-        )
-        tagged = toks.select(
-            "tok", F.lit(1).alias("r"), F.lit(0).alias("t")
-        ).unionAll(
-            target.select(
-                F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("tok")
-            ).select("tok", F.lit(0).alias("r"), F.lit(1).alias("t"))
-        )
+    )
     vocab = tagged.groupBy("tok").agg(
         F.sum("r").alias("cr"), F.sum("t").alias("ct")
     )
@@ -1204,26 +1130,16 @@ def dsir_select(
         "tok", llr.cast("decimal(38,6)").alias("llr")
     )
     maybe_b = F.broadcast if broadcast_vocab else (lambda df: df)
-    if impl == "arrow":
-        per = (
-            raw_tf.join(maybe_b(scored_vocab), "tok")
-            .groupBy("doc_id")
-            .agg(
-                F.sum("tf").cast("int").alias("n_tokens"),
-                # exact: llr has 6 dp, tf is integral — llr·tf IS the
-                # decimal sum of tf copies of llr, no precision loss
-                F.sum(F.col("llr") * F.col("tf")).alias("logw_d"),
-            )
+    per = (
+        raw_tf.join(maybe_b(scored_vocab), "tok")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("tf").cast("int").alias("n_tokens"),
+            # exact: llr has 6 dp, tf is integral — llr·tf IS the
+            # decimal sum of tf copies of llr, no precision loss
+            F.sum(F.col("llr") * F.col("tf")).alias("logw_d"),
         )
-    else:
-        per = (
-            toks.join(maybe_b(scored_vocab), "tok")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_tokens"),
-                F.sum("llr").alias("logw_d"),
-            )
-        )
+    )
     u = (
         _hash60(F.col("doc_id").cast("string")).cast("double") + 0.5
     ) / F.lit(float(1 << 60))

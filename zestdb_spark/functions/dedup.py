@@ -18,8 +18,9 @@ any kind — SURVEY.md §2.6), designed for the 100 TB posture:
 - ``embedding_dup_pairs``  — cosine near-duplicate pairs over an
   embedding column (exact; see similarity.py for the ANN path).
 
-Everything is declarative DataFrame ops (explode / groupBy / join) —
-no Python UDFs anywhere, so the hot path stays in whole-stage codegen.
+Everything is declarative DataFrame ops (explode / groupBy / join)
+except MinHash signatures, which run in one scan-local Arrow kernel
+(minhash_kernel.py) — no row-at-a-time Python UDFs anywhere.
 
 Hash portability is per-operator: SimHash token hashes are the
 engine-portable ``conv(substr(md5(s),1,15),16,10)`` 60-bit ints
@@ -36,6 +37,8 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from zestdb_spark.functions.minhash_kernel import make_signature_fn, signature_schema
 
 # 60-bit md5-prefix hash — identical in Spark and DuckDB (see module doc)
 def _hash60(col: F.Column) -> F.Column:
@@ -283,75 +286,23 @@ def jaccard_pairs(
 
 # ------------------------------------------------------------ MinHash LSH
 
-def minhash_signatures(
-    docs: DataFrame, k: int = 3, num_hashes: int = 64, impl: str = "arrow"
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, k: int = 3, num_hashes: int = 64) -> DataFrame:
     """docs → (doc_id, h0..h{n-1}) MinHash signature via universal
-    hashing min((a·x + b) mod p): shingles hashed to 28-bit ints
-    (a·x + b stays < 2⁶⁰ — no int64 overflow under ANSI mode), then one
-    groupBy with num_hashes min-aggregates. The min-aggs are map-side
-    combinable AND whole-stage-codegen'd — measurably faster than the
-    tempting scan-local array_min(transform(...)) formulation, because
-    higher-order array functions are interpreted per element, outside
-    codegen.
+    hashing min((a·x + b) mod p) over the doc's distinct word
+    k-shingles (``_shingle_array``), each hashed to 28 bits (a·x + b
+    stays < 2⁶⁰ — no int64 overflow).
 
-    Shingles are hashed with native ``xxhash64`` (masked to 28 bits),
+    The signature is computed SCAN-LOCALLY in one vectorized Arrow
+    kernel (minhash_kernel.py): a single narrow stage, zero shuffle.
+    Shingles are hashed with XXH64 — the numpy replica of Spark's
+    native ``xxhash64`` (parity-pinned by tests/test_xxh64_np.py) —
     not the md5-hex-conv portable hash: signatures are engine-internal
-    (candidates are exactly verified downstream, and the oracle mirrors
-    the exact-Jaccard result, never the signatures), so the hash only
-    needs determinism — and xxhash64 skips md5's per-row hex-string
-    allocation entirely.
-
-    Hashing happens INSIDE the shingle array (transform) before the
-    explode, so the exploded rows are 8-byte longs instead of shingle
-    strings — the transform HOF is interpreted, but not materializing
-    a string column per shingle row wins ~40% on the signature stage
-    (measured at sf0.1; identical signatures).
-
-    ``impl="arrow"`` (default, r13) computes the signature SCAN-LOCALLY
-    in one vectorized Arrow kernel (minhash_kernel.py): the explode →
-    partial-agg → Exchange → final-agg chain above collapses to a
-    single narrow stage with zero shuffle, and the shingle hash is the
-    numpy XXH64 replica of ``xxhash64`` (parity-pinned by
-    tests/test_xxh64_np.py), so signatures are BIT-IDENTICAL between
-    the two paths (pinned by tests/test_dedup.py). ``impl="expr"``
-    keeps the pure-JVM expression pipeline (engines without Python
-    workers)."""
-    if impl == "arrow":
-        from zestdb_spark.functions.minhash_kernel import (
-            make_signature_fn,
-            signature_schema,
-        )
-
-        src = _spread(docs).select("doc_id", "text")
-        return src.mapInArrow(
-            make_signature_fn(k, num_hashes), signature_schema(num_hashes)
-        )
-    sh = _spread(docs).select("doc_id", _shingle_array(k).alias("sh"))
-    hashed = sh.select("doc_id", _hashed_shingle_explode())
-    return hashed.groupBy("doc_id").agg(*_minhash_agg_cols(num_hashes))
-
-
-@lru_cache(maxsize=None)
-def _hashed_shingle_explode() -> F.Column:
-    """explode(transform(sh, xxhash64&mask)) as "x" — constant
-    expression template, memoized (see _shingle_array)."""
-    return F.explode(
-        F.transform(
-            F.col("sh"),
-            lambda x: F.xxhash64(x).bitwiseAND(F.lit((1 << 28) - 1)),
-        )
-    ).alias("x")
-
-
-@lru_cache(maxsize=None)
-def _minhash_agg_cols(num_hashes: int) -> tuple:
-    """The 64 (by default) universal-hash min-aggregates — ~6 py4j
-    round-trips each, memoized per num_hashes (see _shingle_array)."""
-    return tuple(
-        F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(_minhash_params(num_hashes))
-    )
+    (candidates are exactly verified downstream, and the oracle
+    mirrors the exact-Jaccard result, never the signatures), so the
+    hash only needs determinism. Pinned against ``min`` over Spark's
+    own ``xxhash64`` of ``_shingle_array`` by tests/test_xxh64_np.py."""
+    src = _spread(docs).select("doc_id", "text")
+    return src.mapInArrow(make_signature_fn(k, num_hashes), signature_schema(num_hashes))
 
 
 @lru_cache(maxsize=None)

@@ -4,10 +4,11 @@ Computes (doc_id, h0..h{n-1}) per document inside one ``mapInArrow``
 pass — the signature never leaves the scan task, so the JVM pipeline's
 Generate(explode) → partial HashAggregate → Exchange → final
 HashAggregate collapses to a single narrow stage with ZERO shuffle.
-Signatures are BIT-IDENTICAL to the expression path
-(``dedup._minhash_agg_cols``): the shingle hash is the numpy XXH64
-replica of Spark's ``xxhash64`` (xxh64_np.py, parity-pinned), masked to
-28 bits, and the universal-hash mins use the same (a, b, p) params.
+Signatures equal min((a·x + b) mod p) over Spark's own ``xxhash64`` of
+``dedup._shingle_array`` (pinned by tests/test_xxh64_np.py): the shingle
+hash is the numpy XXH64 replica of Spark's ``xxhash64`` (xxh64_np.py,
+parity-pinned), masked to 28 bits, and the (a, b) params are
+``dedup._minhash_params``.
 
 The shingle trick: ``_shingle_array`` builds word k-shingles of
 ``split(text, ' ')`` joined by a single space — but k consecutive

@@ -201,9 +201,10 @@ def _ivf_centroids(embs: DataFrame, n_centroids: int) -> list:
     """The coarse-quantizer codebook: a deterministic sample (the
     ``n_centroids`` smallest vec_ids — reproducible everywhere; the
     QUALITY path is ``ivf_train`` with its farthest-point hash-sample
-    seeding, same downstream shape), COLLECTED to the driver. The codebook is a model, not data —
-    m·dim floats, exactly like the fixed LSH hyperplanes — so inlining
-    it as literals keeps assignment scan-local instead of paying a
+    seeding, same downstream shape), COLLECTED to the driver. The
+    codebook is a model, not data — m·dim floats, exactly like the
+    fixed LSH hyperplanes — so shipping it inside the assignment
+    kernel's closure keeps assignment scan-local instead of paying a
     crossJoin + groupBy (measured ~4× on the assignment stage)."""
     return (
         with_norm(embs)
@@ -214,39 +215,21 @@ def _ivf_centroids(embs: DataFrame, n_centroids: int) -> list:
     )
 
 
-def _nearest_centroid(cents: list) -> Column:
-    """argmax-cosine over the literal codebook as ONE array_max of
-    (cosine, -cent_id) structs — ties pick the lowest centroid id."""
-    opts = [
-        F.struct(
-            (dot(F.col("v"), F.array(*[F.lit(float(x)) for x in row["v"]]))
-             / (F.col("norm") * F.lit(float(row["norm"])))).alias("cos"),
-            F.lit(-int(row["vec_id"])).alias("neg"),
-        )
-        for row in cents
-    ]
-    return -F.array_max(F.array(*opts)).getField("neg")
-
-
-# IVF assignment dispatch (``_use_ivf_kernel``): ``method="auto"``
-# picks the Arrow kernel at EVERY codebook size — there is no size
-# threshold. Spark's higher-order functions are CodegenFallback
-# (interpreted), and the measured assignment cost at sf0.1 is 3-4×
-# LOWER through the kernel even at m=16 (knn_join 4.3 s → 1.1 s,
-# semantic_dedup 2.3 s → 0.7 s, ivf_topk 2.1 s → 0.6 s, steady-state
-# min-of-3); above a few hundred centroids the literal Catalyst
-# expression (one HOF fold per centroid) cannot realistically be
-# planned at all, so the ~100k-centroid codebooks SCALE.md recommends
-# for crawl scale REQUIRE the kernel. Both paths are bit-identical
-# (pinned row-for-row by tests/test_ivf_kernel.py), so the choice is
-# purely cost; the literal path remains for pure-JVM deployments
-# (``method="literal"``) and as the oracle-replay reference.
+# IVF assignment and probe ranking run in Arrow kernels at EVERY
+# codebook size. Spark's higher-order functions are CodegenFallback
+# (interpreted): a literal-codebook Catalyst projection (one HOF fold
+# per centroid) measured 3-4x slower at sf0.1 even at m=16 (knn_join
+# 4.3 s → 1.1 s, semantic_dedup 2.3 s → 0.7 s, ivf_topk 2.1 s → 0.6 s,
+# steady-state min-of-3), and above a few hundred centroids it cannot
+# be planned at all — the ~100k-centroid codebooks SCALE.md recommends
+# for crawl scale need the kernel. Assignment is pinned against the
+# driver fold ``_rank_probes`` by tests/test_ivf_kernel.py.
 
 
 def _cent_arrays(cents: list):
     """Codebook rows → numpy arrays SORTED by centroid id ascending, so
-    ``np.argmax`` first-occurrence ties reproduce the literal path's
-    lowest-centroid-id tie-break exactly. Zero-norm centroids carry no
+    ``np.argmax`` first-occurrence ties pick the lowest centroid id
+    (the ``_rank_probes`` tie-break). Zero-norm centroids carry no
     direction and would make every cosine against them NaN — raise
     loudly (same contract as ``_pq_kernel``'s ivf path)."""
     rows = sorted(cents, key=lambda r: int(r["vec_id"]))
@@ -287,14 +270,13 @@ def _cosines_to_cents(pdf, C, cnorm):
 
 def _ivf_assign_kernel(cents: list):
     """Arrow-batched IVF coarse assignment: (vec_id, embedding) →
-    (vec_id, v, norm, cent), bit-identical to
-    ``with_norm(...).withColumn("cent", _nearest_centroid(cents))``
-    over non-zero-norm rows (pinned by tests/test_ivf_kernel.py).
-    The codebook is broadcast inside the closure as numpy arrays —
-    model-sized (m·dim doubles), one matmul-shaped fold per batch —
-    so planning cost is INDEPENDENT of the centroid count: this is
-    the path that reaches the ~100k-centroid codebooks the literal
-    expression tree cannot plan (VERDICT r9 "What's wrong #2")."""
+    (vec_id, v, norm, cent) over non-zero-norm rows, ``cent`` equal to
+    ``_rank_probes(cents, v, norm, 1)[0]`` (pinned by
+    tests/test_ivf_kernel.py). The codebook is broadcast inside the
+    closure as numpy arrays — model-sized (m·dim doubles), one
+    matmul-shaped fold per batch — so planning cost is INDEPENDENT of
+    the centroid count: this path reaches the ~100k-centroid codebooks
+    a literal expression tree cannot plan."""
     import pandas as pd
 
     C, cids, cnorm = _cent_arrays(cents)
@@ -323,9 +305,8 @@ def _ivf_assign_kernel(cents: list):
 def _ivf_probe_kernel(cents: list, n_probe: int):
     """Arrow-batched query-side probe ranking for ``knn_join``:
     (vec_id, embedding) → (qid, qv, qnorm, cent) with one row per
-    (query, probe cell) — the kernel twin of the literal
-    sort_array-over-structs probe expression (cos DESC, cent_id ASC
-    tie-break via a STABLE argsort over the id-sorted codebook)."""
+    (query, probe cell) — the ``_rank_probes`` order (cos DESC, cent_id
+    ASC tie-break via a STABLE argsort over the id-sorted codebook)."""
     import pandas as pd
 
     C, cids, cnorm = _cent_arrays(cents)
@@ -352,12 +333,6 @@ def _ivf_probe_kernel(cents: list, n_probe: int):
             )
 
     return run
-
-
-def _use_ivf_kernel(cents: list, method: str) -> bool:
-    if method not in ("auto", "literal", "kernel"):
-        raise ValueError(f"method must be auto|literal|kernel, got {method!r}")
-    return method != "literal"
 
 
 def kmeans_seed(
@@ -423,7 +398,6 @@ def ivf_train(
     iters: int = 2,
     init: str = "fps",
     sample_cap: int = 2048,
-    method: str = "auto",
     train_cap: int | None = None,
 ) -> list[dict]:
     """Train the IVF codebook with ``iters`` Lloyd (k-means) rounds —
@@ -441,9 +415,8 @@ def ivf_train(
     over a bounded hash-sample (``init="fps"``, the default) or the
     ``n_centroids`` smallest vec_ids (``init="ids"`` — the legacy
     oracle-stable placeholder), then each round is one distributed
-    pass (scan-local assignment via ``ivf_assign`` — the Arrow kernel
-    by default → per-(centroid, dim) mean via posexplode + groupBy)
-    with only the
+    pass (scan-local assignment via ``ivf_assign``'s Arrow kernel →
+    per-(centroid, dim) mean via posexplode + groupBy) with only the
     m·dim codebook itself coming back to the driver — the canonical
     Spark iterative-ML shape (the data never moves; the model does).
     Returns codebook rows shaped like ``_ivf_centroids`` output
@@ -514,7 +487,7 @@ def ivf_train(
             cents = new_cents
         return cents
     for _ in range(iters):
-        assigned = ivf_assign(embs, codebook=cents, method=method)
+        assigned = ivf_assign(embs, codebook=cents)
         means = (
             assigned.select("cent", F.posexplode("v").alias("pos", "x"))
             .groupBy("cent", "pos")
@@ -544,57 +517,36 @@ def ivf_assign(
     embs: DataFrame,
     n_centroids: int = 16,
     codebook: list | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """(vec_id, v, norm, cent): IVF coarse quantization — every vector
-    assigned to its nearest (by cosine) centroid, zero shuffles either
-    way. This is the build step you'd persist/bucket-by at 100 TB so
-    probes become partition-pruned reads. Pass a trained ``codebook``
+    assigned to its nearest (by cosine) centroid, zero shuffles. This
+    is the build step you'd persist/bucket-by at 100 TB so probes
+    become partition-pruned reads. Pass a trained ``codebook``
     (ivf_train) for tighter lists; default is the deterministic sample.
 
-    ``method``: ``"kernel"`` = one Arrow ``mapInPandas`` pass with the
-    codebook broadcast as numpy (plans at ANY m — the ~100k-centroid
-    crawl-scale regime); ``"literal"`` = scan-local projection against
-    the inlined codebook (pure Catalyst — the opt-in for pure-JVM
-    deployments and oracle replay; HOF folds are CodegenFallback, so
-    it is SLOWER at every measured size and stops planning above a few
-    hundred centroids); ``"auto"`` = the kernel at every size (the
-    measured 3-4× win — see the dispatch note above). Both are
-    bit-identical (tests/test_ivf_kernel.py). Zero-norm vectors have
-    no direction and are dropped on BOTH paths (they would otherwise
-    score NaN downstream, and Spark ranks NaN above every real
-    cosine)."""
+    One Arrow ``mapInPandas`` pass with the codebook broadcast as numpy
+    (plans at ANY m — the ~100k-centroid crawl-scale regime); ties
+    pick the lowest centroid id. Zero-norm vectors have no direction
+    and are dropped (they would otherwise score NaN downstream, and
+    Spark ranks NaN above every real cosine)."""
     cents = codebook if codebook is not None else _ivf_centroids(embs, n_centroids)
-    if _use_ivf_kernel(cents, method):
-        return embs.select("vec_id", "embedding").mapInPandas(
-            _ivf_assign_kernel(cents),
-            "vec_id long, v array<double>, norm double, cent int",
-        )
-    return (
-        with_norm(embs)
-        .filter(F.col("norm") > 0.0)
-        .withColumn("cent", _nearest_centroid(cents))
+    return embs.select("vec_id", "embedding").mapInPandas(
+        _ivf_assign_kernel(cents),
+        "vec_id long, v array<double>, norm double, cent int",
     )
 
 
 def _rank_probes(cents: list, qv: list, qnorm: float, n_probe: int) -> list[int]:
     """Driver-side probe ranking over the coarse codebook — sequential
-    left-to-right folds (NOT np.dot: BLAS may reorder the summation) so
-    the ranking is bit-identical to the engine's F.aggregate fold and
-    to an oracle's list_dot_product. Zero-norm centroids (an all-zero
-    vector among the seeds) carry no direction — ranked last instead
-    of dividing by zero."""
-
-    def _seq_dot(a, b) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
+    left-to-right folds (``_seq_dot_py``, NOT np.dot: BLAS may reorder
+    the summation) so the ranking is bit-identical to the kernels'
+    per-dimension fold and to an oracle's list_dot_product. Zero-norm
+    centroids (an all-zero vector among the seeds) carry no direction —
+    ranked last instead of dividing by zero."""
     ranked = sorted(
         cents,
         key=lambda r: (
-            -_seq_dot(r["v"], qv) / (r["norm"] * qnorm)
+            -_seq_dot_py(r["v"], qv) / (r["norm"] * qnorm)
             if r["norm"] > 0.0
             else float("inf"),
             r["vec_id"],
@@ -610,7 +562,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     codebook: list | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """IVF ANN top-k: probe the ``n_probe`` centroid lists nearest the
     query and exact-rank only those lists' members — search cost ∝
@@ -621,8 +572,9 @@ def ivf_topk(
 
     Plan shape: probe-list selection happens on the driver (m-entry
     codebook × 1 query vector — control plane), so the whole search is
-    one scan with an ``isin`` list-membership filter + codegen dot
-    products + TakeOrderedAndProject. Zero shuffles, zero joins."""
+    one scan through the assignment kernel, an ``isin`` list-membership
+    filter, codegen dot products and TakeOrderedAndProject. Zero
+    shuffles, zero joins."""
     cents = codebook if codebook is not None else _ivf_centroids(embs, n_centroids)
     qrows = with_norm(embs).filter(F.col("vec_id") == query_vec_id).collect()
     if len(qrows) != 1 or qrows[0]["norm"] == 0.0:
@@ -638,7 +590,7 @@ def ivf_topk(
 
     qcol = F.array(*[F.lit(float(x)) for x in qrow["v"]])
     scored = (
-        ivf_assign(embs, codebook=cents, method=method)
+        ivf_assign(embs, codebook=cents)
         .filter(F.col("cent").isin(probe_ids) & (F.col("vec_id") != query_vec_id))
         .select(
             "vec_id",
@@ -651,15 +603,15 @@ def ivf_topk(
 def _semdedup_dropped_kernel(tau: float):
     """Per-cell Arrow kernel for SemDeDup's within-cluster pair scan:
     given one cluster's (vec_id, v, norm) rows, emit the vec_ids that
-    have a SMALLER-id neighbor at q6(cosine) >= tau. Bit-identical to
-    the literal pair-join path: cosines accumulate with the same
-    per-dimension left fold as every other kernel in this file (never
-    BLAS), then the same floor-1e-6 quantization and >= comparison.
+    have a SMALLER-id neighbor at q6(cosine) >= tau. Cosines accumulate
+    with the same per-dimension left fold as every other kernel in this
+    file and as ``_seq_dot_py`` (never BLAS), then floor-1e-6
+    quantization and a >= comparison.
 
-    Why a kernel (round 11, measured at the sf1 probe): the literal
-    path materializes every in-cell pair through a join and scores it
-    with a higher-order fold — CodegenFallback, interpreted, ~3-6 us
-    per PAIR, and pair count is quadratic in cell size. At 20k vectors
+    Why a kernel (round 11, measured at the sf1 probe): a literal
+    pair-join plan materializes every in-cell pair through a join and
+    scores it with a higher-order fold — CodegenFallback, interpreted,
+    ~3-6 us per PAIR, and pair count is quadratic in cell size. At 20k vectors
     over 16 cells (~12.5M pairs) that was 81 s; this kernel does the
     same arithmetic as blocked numpy outer products in ~2 s.
 
@@ -673,7 +625,7 @@ def _semdedup_dropped_kernel(tau: float):
     slice is contiguous. Per (i, j) element the adds are the same
     products in the same dim order, then the same norm division and
     floor-1e-6 quantization — bit-identical output by construction
-    (pinned vs the untiled fold and the literal join in
+    (pinned vs the untiled fold and a plain-Python pair rule in
     tests/test_retrieval_semdedup.py). The O(cell^2) work itself is
     SemDeDup's contract — raise n_centroids with the corpus to bound
     cells (SCALE.md)."""
@@ -723,9 +675,7 @@ def semantic_dedup(
     tau: float = 0.95,
     n_centroids: int = 16,
     codebook: list | None = None,
-    method: str = "auto",
     assigned: DataFrame | None = None,
-    pairs: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings with the IVF coarse codebook,
@@ -736,75 +686,44 @@ def semantic_dedup(
     lowest-centroid-similarity member, which needs the same pair set).
     Returns (vec_id, cent, keep).
 
-    This is the SCALE path for embedding dedup: the pair join is an
-    equi-join on the centroid id, so candidate pairs are bounded per
+    This is the SCALE path for embedding dedup: pairs are scored only
+    within a centroid cell, so candidate pairs are bounded per
     cluster — never all-pairs (``embedding_dup_pairs`` is the guarded
     O(n²) baseline). At 100 TB, raise ``n_centroids`` ∝ corpus size
     (the paper uses ~100k clusters for LAION-scale) so per-cluster
     membership stays ~constant; assignment itself is one scan-local
-    pass (the Arrow kernel by default — plans at any codebook size,
-    zero shuffles) and the per-cluster pair scan pays ONE shuffle on
+    pass (the Arrow kernel — plans at any codebook size, zero
+    shuffles) and the per-cluster pair scan pays ONE shuffle on
     the small int key. A trained codebook (``ivf_train``) tightens
     clusters; the deterministic seeded codebook is the replayable
     default.
 
-    ``pairs``: ``"auto"``/``"kernel"`` (default) scores each cluster's
-    pairs in one blocked-numpy Arrow pass per cell (measured 40x over
-    the pair join at the round-11 sf1 probe: interpreted HOF folds
-    price every PAIR, and pairs are quadratic in cell size);
-    ``"literal"`` keeps the pure-JVM pair join for oracle replay.
-    Both are bit-identical (pinned by tests/test_retrieval_semdedup.py).
+    Each cluster's pairs are scored in one blocked-numpy Arrow pass
+    per cell (measured 40x over a literal pair join at the round-11
+    sf1 probe: interpreted HOF folds price every PAIR, and pairs are
+    quadratic in cell size). Pinned against a plain-Python pair rule
+    by tests/test_retrieval_semdedup.py.
     """
     from zestdb_spark.functions.dedup import _persist_bounded
 
-    # materialize the assignment ONCE: it feeds three subtrees (both
-    # self-join sides + the final keep join), and each would otherwise
-    # recompile and re-run the m·dim-literal nearest-centroid
-    # expression over the whole corpus (measured ~2× end-to-end at
-    # bench scale). This is also the 100 TB shape — SemDeDup persists
-    # cluster assignments as a build artifact, not a throwaway subtree.
-    # ``assigned=`` short-circuits the build with a PERSISTED
-    # ivf_assign output — SemDeDup's cluster assignment is a build
-    # artifact at scale, not a throwaway subtree
+    # materialize the assignment ONCE: it feeds two subtrees (the
+    # per-cell pair scan + the final keep join), and each would
+    # otherwise re-run the assignment over the whole corpus. This is
+    # also the 100 TB shape — SemDeDup persists cluster assignments as
+    # a build artifact, not a throwaway subtree; ``assigned=``
+    # short-circuits the build with such a PERSISTED ivf_assign output
     if assigned is None:
-        assigned = _persist_bounded(
-            ivf_assign(embs, n_centroids, codebook, method=method)
-        )
-    if pairs not in ("auto", "kernel", "literal"):
-        raise ValueError(f"pairs must be auto|kernel|literal, got {pairs!r}")
-    if pairs != "literal":
-        # ONE Arrow pass per cluster (same single shuffle on cent the
-        # join pays) — quadratic pair work stays inside vectorized
-        # numpy instead of interpreted per-pair HOF folds; 40x at the
-        # sf1 probe, bit-identical (see _semdedup_dropped_kernel)
-        dropped = (
-            assigned.select("vec_id", "v", "norm", "cent")
-            .groupBy("cent")
-            .applyInPandas(_semdedup_dropped_kernel(tau), "vec_id long")
-            .withColumn("_dup", F.lit(True))
-        )
-    else:
-        a = assigned.select(
-            F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
-            F.col("norm").alias("norm_a"), "cent",
-        )
-        b = assigned.select(
-            F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("norm").alias("norm_b"), "cent",
-        )
-        dropped = (
-            a.join(b, "cent")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                q6(dot(F.col("va"), F.col("vb")) / (F.col("norm_a") * F.col("norm_b")))
-                >= tau
-            )
-            .select(F.col("id_b").alias("vec_id"))
-            .distinct()
-            .withColumn("_dup", F.lit(True))
-        )
+        assigned = _persist_bounded(ivf_assign(embs, n_centroids, codebook))
+    # ONE Arrow pass per cluster (one shuffle on cent) — quadratic pair
+    # work stays inside vectorized numpy (see _semdedup_dropped_kernel)
+    dropped = (
+        assigned.select("vec_id", "v", "norm", "cent")
+        .groupBy("cent")
+        .applyInPandas(_semdedup_dropped_kernel(tau), "vec_id long")
+        .withColumn("_dup", F.lit(True))
+    )
     # one outer join against the (small) dropped set — not an anti- plus
-    # semi-join pair, which would run the cluster self-join twice
+    # semi-join pair, which would run the per-cell pair scan twice
     return assigned.join(dropped, "vec_id", "left").select(
         "vec_id", "cent", F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep")
     )
@@ -1328,7 +1247,6 @@ def knn_join(
     n_centroids: int = 16,
     n_probe: int = 4,
     codebook: list | None = None,
-    method: str = "auto",
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Batch ANN: the top-``k`` corpus neighbors for EVERY query row —
@@ -1340,12 +1258,11 @@ def knn_join(
     appears on both sides.
 
     Plan shape — the scalable one, no cross join anywhere:
-    - corpus side: scan-local IVF assignment against the literal
-      codebook (``ivf_assign``), ONE exchange on the small-int cell
-      key;
-    - query side: each query row ranks the m-entry codebook IN ROW
-      (sort_array over (cos, −cid) structs — m structs per query row,
-      not per pair) and explodes its ``n_probe`` probe cells;
+    - corpus side: scan-local IVF assignment (``ivf_assign``'s Arrow
+      kernel), ONE exchange on the small-int cell key;
+    - query side: one Arrow pass ranks the m-entry codebook per query
+      row (``_ivf_probe_kernel``: cos DESC, cid ASC — the
+      ``_rank_probes`` order) and emits one row per probe cell;
     - equi-join on cell (AQE broadcasts the query side when it is
       small — no forced hint), exact cosines in codegen, then ONE
       window per qid for the top-k.
@@ -1363,49 +1280,13 @@ def knn_join(
     # batch search after that reads it partition-pruned instead of
     # re-assigning the corpus per query batch. Must have been built
     # with the SAME codebook passed here (probes are ranked against it).
-    if assigned is not None:
-        ca = assigned.select(
-            F.col("vec_id"), F.col("v"), F.col("norm"), F.col("cent")
-        )
-    else:
-        ca = ivf_assign(corpus, n_centroids, codebook=cents, method=method).select(
-            F.col("vec_id"), F.col("v"), F.col("norm"), F.col("cent")
-        )
-    if _use_ivf_kernel(cents, method):
-        # large-codebook path: probe ranking in the Arrow kernel — the
-        # literal struct array below is O(m) expression nodes per query
-        # row and cannot plan at crawl-scale centroid counts
-        qp = queries.select("vec_id", "embedding").mapInPandas(
-            _ivf_probe_kernel(cents, n_probe),
-            "qid long, qv array<double>, qnorm double, cent int",
-        )
-    else:
-        q = with_norm(queries).filter(F.col("norm") > 0.0)
-        # per-row probe ranking: m structs of (cosine to centroid, -cid),
-        # sorted descending — identical ordering to _rank_probes /
-        # the oracle's row_number (cos DESC, cid ASC via the negated id)
-        opts = [
-            F.struct(
-                (
-                    dot(F.col("v"), F.array(*[F.lit(float(x)) for x in c["v"]]))
-                    / (F.col("norm") * F.lit(float(c["norm"])))
-                ).alias("cos"),
-                F.lit(-int(c["vec_id"])).alias("neg"),
-            )
-            for c in cents
-            if c["norm"] > 0.0
-        ]
-        probes = F.slice(
-            F.reverse(F.array_sort(F.array(*opts))), 1, int(n_probe)
-        )
-        qp = q.select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            F.explode(
-                F.transform(probes, lambda s: -s.getField("neg"))
-            ).alias("cent"),
-        )
+    if assigned is None:
+        assigned = ivf_assign(corpus, n_centroids, codebook=cents)
+    ca = assigned.select("vec_id", "v", "norm", "cent")
+    qp = queries.select("vec_id", "embedding").mapInPandas(
+        _ivf_probe_kernel(cents, n_probe),
+        "qid long, qv array<double>, qnorm double, cent int",
+    )
     from pyspark.sql import Window
 
     scored = (

@@ -9,21 +9,22 @@ plan pays.
 ``make_token_stats_fn`` computes ``(doc_id, dl, tf0..tf{n-1})`` in one
 ``mapInArrow`` pass: ``dl`` is the count of non-empty tokens of
 ``split(text, ' ')`` and ``tf_i`` the count of tokens equal to query
-term i. The JVM expression path evaluates one interpreted higher-order
-``filter`` over the token array PER TERM per document (plus the size
-pass) — measured as ~75% of the whole bm25 cost at sf1. Here the split,
+term i. The equivalent JVM expression (``F.size(F.filter(split, ...))``)
+evaluates one interpreted higher-order ``filter`` over the token array
+PER TERM per document (plus the size pass) — measured as ~75% of the
+whole bm25 cost at sf1. Here the split,
 the equality compares and the per-row segmented counts are single
 vectorized pyarrow/numpy calls over the whole batch.
 
-Values are BIT-IDENTICAL to the expression path
-(``F.size(F.filter(split, ...))``): integer counts of the same token
-multiset — pyarrow ``split_pattern(' ')`` and Spark ``split`` on the
+Values are integer counts of the same token multiset Spark's
+``split`` yields — pyarrow ``split_pattern(' ')`` and Spark ``split`` on the
 single-space pattern produce identical token lists (consecutive spaces
 yield empty tokens both ways; the non-empty predicate drops them from
 ``dl`` and query terms are non-empty so empties can never match a
 ``tf``), string equality is exact byte equality in both engines, and a
 NULL text maps to NULL counts exactly like ``size(NULL) = NULL`` under
-the non-legacy ``sizeOfNull`` default. Parity is pinned by
+the non-legacy ``sizeOfNull`` default. The bm25, tf_idf and dsir
+outputs are pinned against their DuckDB oracles by
 tests/test_token_count_kernel.py over adversarial token shapes.
 
 Row contract: exactly one output row per input row (unlike the minhash
@@ -45,11 +46,11 @@ import numpy as np
 
 @lru_cache(maxsize=None)
 def stats_schema(num_terms: int, doc_id_type: str = "bigint") -> str:
-    """Matches the expression projection's types: F.size → int.
+    """Count columns are int (the type of ``F.size``).
     ``doc_id_type`` is the INPUT column's Spark dtype — the kernel
     passes doc_id through untouched, so the declared schema must carry
     the input type (a hardcoded ``long`` breaks int/string-keyed
-    corpora where the expr path preserved the type — r13 ADVICE)."""
+    corpora)."""
     return f"doc_id {doc_id_type}, dl int, " + ", ".join(
         f"tf{i} int" for i in range(num_terms)
     )
@@ -60,10 +61,6 @@ def tf_schema(doc_id_type: str = "bigint") -> str:
     """(doc_id, tok, tf) — F.count is LongType, so tf is long; doc_id
     carries the input column's type (see ``stats_schema``)."""
     return f"doc_id {doc_id_type}, tok string, tf long"
-
-
-#: Backwards-compatible alias (bigint doc_id — the fixture corpus).
-TF_SCHEMA = tf_schema()
 
 
 def make_tf_rows_fn() -> Callable:
@@ -77,8 +74,8 @@ def make_tf_rows_fn() -> Callable:
     ships the whole collapsed tf table (corpus-scale bytes at 100 TB).
     Here the per-batch Arrow hash group-by IS the final aggregation.
 
-    Bit-identical to the expression path: counts of the same non-empty
-    token multiset (see module docstring), docs with no tokens (or
+    Counts of the same non-empty token multiset as an explode of
+    Spark's ``split`` (see module docstring); docs with no tokens (or
     NULL text) emit no rows exactly like explode. Row contract: input
     rows are independent — the corpus contract is unique doc_ids (the
     groupBy path would merge duplicate ids across partitions; every
@@ -144,9 +141,8 @@ def make_token_stats_fn(terms: tuple[str, ...]) -> Callable:
             ).astype(np.int32)
             cols = [doc_id, pa.array(dl, mask=mask)]
             for term in terms:
-                # mask empties so a degenerate term "" counts ZERO like
-                # the expr path (which filters empty tokens before the
-                # equality) — non-empty terms never match "" so this is
+                # mask empties so a degenerate term "" counts ZERO
+                # (empty tokens are not tokens) — non-empty terms never match "" so this is
                 # an identity for every real query (r13 ADVICE)
                 eq = (
                     pc.equal(flat, term).to_numpy(zero_copy_only=False)

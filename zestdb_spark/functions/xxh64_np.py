@@ -12,7 +12,7 @@ a fixed-width (rows, len) matrix hashed with whole-column numpy ops).
 
 Used by the Arrow MinHash kernel (minhash_kernel.py) so signature
 computation can stay scan-local — no explode, no aggregation exchange —
-while producing the SAME signatures as the JVM expression path.
+while hashing exactly as Spark's ``xxhash64`` does.
 """
 
 from __future__ import annotations

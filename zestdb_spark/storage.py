@@ -49,6 +49,7 @@ import uuid
 from typing import Any, Optional
 from urllib.parse import unquote, urlparse
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +60,23 @@ from zestdb_spark.errors import BadRequest, StoreBusy
 
 #: ms per day — time_bucket = timestamp div this (daily partitions)
 _DAY_MS = 86_400_000
+
+#: the bulk TS append's rejection of rows with no partition key
+_BAD_TS_KEY = "ts append: series_id must be non-empty and timestamp non-null"
+
+
+def _guard_ts_key(field):
+    """``field`` cast to its canonical type; for the partition keys
+    (series_id, timestamp), a row with no faithful key value raises
+    ``_BAD_TS_KEY`` inside the same projection."""
+    col = F.col(field.name).cast(field.dataType)
+    if field.name == "series_id":
+        bad = col.isNull() | (col == "")
+    elif field.name == "timestamp":
+        bad = col.isNull()
+    else:
+        return col
+    return F.when(bad, F.raise_error(F.lit(_BAD_TS_KEY))).otherwise(col).alias(field.name)
 
 
 def _type_widens(old, new) -> bool:
@@ -1603,9 +1621,10 @@ class ZestStore:
         writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.parquet(stage)
         adds = []
         try:
+            # a failed write job leaves nothing behind either
+            writer.parquet(stage)
             for rel in snapshots.list_data_files(stage):
                 src = os.path.join(stage, rel)
                 if rewrite:
@@ -2180,10 +2199,12 @@ class ZestStore:
         # cast to the canonical schema first: appending a frame with a
         # mismatched physical type (INT value, reordered columns) would
         # poison every later read of the whole table (same guard as
-        # kv_ingest_bulk)
-        rows = rows.select(
-            *[F.col(f.name).cast(f.dataType) for f in _TABLES[table].fields]
-        )
+        # kv_ingest_bulk). The same projection rejects rows with no
+        # partition key: a null/empty series_id or a null timestamp
+        # would land in a __HIVE_DEFAULT_PARTITION__ leaf (read back as
+        # NULL, with no stats), so the write job fails instead — no
+        # extra pass over the input, and nothing is committed
+        rows = rows.select(*[_guard_ts_key(f) for f in _TABLES[table].fields])
         stamped = (
             rows.withColumn("time_bucket", F.col("timestamp") / _DAY_MS)
             .withColumn("time_bucket", F.col("time_bucket").cast("long"))
@@ -2194,7 +2215,12 @@ class ZestStore:
         # mid-append leaves invisible orphans, never a partial batch),
         # and concurrent appends merge through the commit CAS without
         # taking the rewrite lock (appends commute)
-        adds = self._stage_move(table, stamped, ("series_id", "time_bucket"))
+        try:
+            adds = self._stage_move(table, stamped, ("series_id", "time_bucket"))
+        except SparkRuntimeException as e:
+            if _BAD_TS_KEY in str(e):
+                raise BadRequest(_BAD_TS_KEY) from None
+            raise
         self._commit(table, adds=adds, op="append", txn=txn)
         self._log_write(table, n_rows, wid)
 
