@@ -6,7 +6,10 @@ doc_id min/max stats — the metadata regime of a real lakehouse table —
 while only the files a pruned operation actually touches exist on
 disk. That makes the probe SELF-ENFORCING: if candidate pruning ever
 regresses to reading past the stats, Spark fails loudly on a missing
-file instead of quietly reporting a slower number.
+file instead of quietly reporting a slower number. The same holds
+for ``ts_delete`` over a ``ts_numeric`` manifest of the same size,
+built from synthetic ``series_id=…/time_bucket=…`` entries with
+timestamp stats.
 
 Reported per op: planning/pruning wall time, files touched, end-to-end
 wall, and the commit cost (O(churn) delta). Run:
@@ -30,6 +33,64 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from zestdb_spark import snapshots  # noqa: E402
 from zestdb_spark.session import get_spark  # noqa: E402
 from zestdb_spark.storage import ZestStore  # noqa: E402
+
+
+def ts_delete_probe(store: ZestStore, spark, n_files: int) -> "tuple[float, int, int]":
+    """Delete a tagged range inside ONE (series, day) leaf of a
+    ts_numeric manifest holding ``n_files`` synthetic entries. The
+    leaf's two real files are both candidates; only the one holding a
+    matched row is rewritten. Returns (wall s, files removed, live)."""
+    from zestdb_spark.plans import compile_path
+    from zestdb_spark.schema import TS_NUMERIC
+
+    day_ms, hot_day = 86_400_000, 7
+    t_day = hot_day * day_ms
+    # two real files in leaf (hot, hot_day): tagged rows [0, 100) s,
+    # untagged rows [100, 200) s
+    for j0, tag in ((0, "x"), (100, None)):
+        rows = [
+            ("hot", t_day + (j0 + j) * 1000, float(j), "room" if tag else None, tag)
+            for j in range(100)
+        ]
+        store.write_numeric_bulk(spark.createDataFrame(rows, TS_NUMERIC).coalesce(1))
+    table_dir = store._path("ts_numeric")
+    real = set(store._snapshot("ts_numeric").files)
+
+    series = ["hot"] + [f"s{k}" for k in range(99)]
+
+    def synth(i: int) -> "tuple[str, dict] | None":
+        sid, d = series[i % len(series)], i // len(series)
+        if sid == "hot" and d == hot_day:
+            return None  # the hot leaf holds only real files
+        lo = d * day_ms + 1000
+        st = {"rows": 100, "min": {"timestamp": lo},
+              "max": {"timestamp": lo + 99_000}, "nulls": {"timestamp": 0}}
+        return f"series_id={sid}/time_bucket={d}/synth-{i}.parquet", st
+
+    batch = 10_000
+    for start in range(0, n_files, batch):
+        entries = dict(filter(None, map(synth, range(start, min(start + batch, n_files)))))
+        snapshots.commit(table_dir, adds=list(entries), op="append", stats=entries)
+    # a missing file in the hot leaf itself, outside the window's stats
+    late = f"series_id=hot/time_bucket={hot_day}/synth-late.parquet"
+    snapshots.commit(table_dir, adds=[late], op="append", stats={late: {
+        "rows": 100, "min": {"timestamp": t_day + 80_000_000},
+        "max": {"timestamp": t_day + 80_099_000}, "nulls": {"timestamp": 0}}})
+
+    before = set(store._snapshot("ts_numeric").files)
+    plan = compile_path(
+        f"/ts/hot/range/{t_day + 50_000}/{t_day + 150_000}/filter/room/equals/x"
+    )
+    t0 = time.monotonic()
+    store.ts_delete(plan)
+    wall = time.monotonic() - t0
+    removed = before - set(store._snapshot("ts_numeric").files)
+    assert len(removed) == 1 and removed <= real, removed
+    left = store.load(
+        "ts_numeric", series={"hot"}, since_ms=t_day, until_ms=t_day + 200_000
+    ).count()
+    assert left == 150, left  # 50 tagged survivors + 100 untagged rows
+    return wall, len(removed), len(before)
 
 
 def main() -> None:
@@ -138,6 +199,14 @@ def main() -> None:
     )
     print(f"append_table at {len(snap.files)}-file head: {t_append:.2f}s; "
           f"log entries {len(deltas)}, median size {deltas[len(deltas)//2]} B")
+
+    # -- TS window DELETE (ts_delete) over a ts_numeric manifest of the
+    #    same size: synthetic (series, day) leaves with timestamp stats,
+    #    real files only in the one leaf the window can reach --
+    t_tsdel, ts_touched, ts_live = ts_delete_probe(store, spark, n_files)
+    print(f"ts_delete: {ts_touched} file rewritten of {ts_live} live, "
+          f"{t_tsdel:.2f}s (partition + stats pruning; a whole-leaf or "
+          f"whole-table read would fail on the missing files)")
 
     # -- optimize_table is a data rewrite by design: probe it on the
     #    REAL files only (a separate small table) so the number means

@@ -69,11 +69,12 @@ def test_offsets_walk_per_version_diffs(spark, tmp_path):
     assert r.initialOffset() == {"version": -1}
     assert r.latestOffset() == {"version": 2}
 
-    # catch-up from -1 replays CURRENT content: the delete rewrote
-    # bucket 0 into one rw- survivor file (holding row 100) — that is
-    # the whole live table, and a new subscriber must get it
+    # catch-up from -1 replays CURRENT content: the delete rewrote only
+    # the file holding row 200, so v0's untouched part- file (row 100)
+    # is the whole live table, and a new subscriber must get it
+    (v0_file,) = snapshots.read_version(root, 0).files
     live = [p.path for p in r.partitions({"version": -1}, {"version": 2})]
-    assert len(live) == 1 and os.path.basename(live[0]).startswith("rw-")
+    assert live == [os.path.join(root, v0_file)]
 
     # per-version walk ACROSS the delete: v1's append is delivered even
     # though v2 removed it; the rewrite's rw- files never appear

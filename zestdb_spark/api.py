@@ -308,14 +308,15 @@ class ZestEngine:
         the whole batch is one 'commit', exactly like a reference shard
         write carries one Prov.info message (src/prov.re:38-46).
         Authorized like every other write: an ACL-protected engine must
-        not have an unauthenticated bulk side door."""
+        not have an unauthenticated bulk side door, and a batch the
+        store refuses is audited with its code like any other POST."""
         try:
             self.authorize("POST", path, token)
+            self.store.set_request_context("POST", path, client, None)
+            self.store.write_numeric_bulk(rows)
         except ZestError as e:
             self._audit("POST", path, e.code, client)
             raise
-        self.store.set_request_context("POST", path, client, None)
-        self.store.write_numeric_bulk(rows)
         self._audit("POST", path, 65, client)
 
     # ------------------------------------------------------------- ZestQL

@@ -14,8 +14,8 @@ reference's collision quirk is available behind ``compat_collateral``
 for bug-for-bug parity (SURVEY.md §7.4 flags this decision).
 
 At scale both modes are a single anti-join / predicate filter over the
-partition-pruned range — with a transactional format (Delta/Iceberg)
-this becomes ``DELETE FROM`` and only rewrites affected files.
+stats-pruned candidate files; ``ZestStore.ts_delete`` rewrites only the
+files holding a ``deleted_rows`` row (``DELETE FROM`` on Delta/Iceberg).
 """
 
 from __future__ import annotations
@@ -34,28 +34,41 @@ def delete_plan(df: DataFrame, plan: QueryPlan, compat_collateral: bool = False)
     ``plan`` must be a since/range window with an optional filter and no
     aggregate — anything else is the reference's guarded path → 134.
     """
+    return _split(df, plan, compat_collateral)[1]
+
+
+def deleted_rows(df: DataFrame, plan: QueryPlan, compat_collateral: bool = False) -> DataFrame:
+    """→ the rows of ``df`` the delete removes: exactly the complement
+    of ``delete_plan`` (the storage layer rewrites only the files that
+    hold one of these rows)."""
+    return _split(df, plan, compat_collateral)[0]
+
+
+def _split(df: DataFrame, plan: QueryPlan, compat_collateral: bool):
+    """(deleted, surviving) rows of ``df`` — one decision for both, so
+    a row is always in exactly one of them."""
     if plan.window.op not in ("since", "range") or plan.agg is not None:
         raise UnsupportedMethod(f"delete unsupported for {plan.window.op}/agg paths")
 
     w = plan.window
     ids = list(plan.ids)
-    if w.op == "since":
-        matched = ts_read.read_since(df, ids, w.from_ms)
-    else:
-        matched = ts_read.read_range(df, ids, w.from_ms, w.to_ms)
-    if plan.filter is not None:
-        op, tag, val = plan.filter
-        matched = (
-            ts_filter.tag_equals(matched, tag, val)
-            if op == "equals"
-            else ts_filter.tag_contains(matched, tag, val)
-        )
-
     if compat_collateral:
+        if w.op == "since":
+            matched = ts_read.read_since(df, ids, w.from_ms)
+        else:
+            matched = ts_read.read_range(df, ids, w.from_ms, w.to_ms)
+        if plan.filter is not None:
+            op, tag, val = plan.filter
+            matched = (
+                ts_filter.tag_equals(matched, tag, val)
+                if op == "equals"
+                else ts_filter.tag_contains(matched, tag, val)
+            )
         # reference quirk: delete ALL rows sharing a matched timestamp
         # within the selected series (timeseries.re:431-487)
         doomed_ts = matched.select("series_id", "timestamp").distinct()
-        return df.join(doomed_ts, ["series_id", "timestamp"], "left_anti")
+        key = ["series_id", "timestamp"]
+        return df.join(doomed_ts, key, "semi"), df.join(doomed_ts, key, "left_anti")
 
     # predicate delete: drop exactly the matched rows — expressible as a
     # pure filter (no join) since the match condition is row-local.
@@ -74,4 +87,5 @@ def delete_plan(df: DataFrame, plan: QueryPlan, compat_collateral: bool = False)
             else (F.col("tag_name") == tag) & F.col("tag_value").contains(val)
         )
         cond = cond & tag_cond
-    return df.filter(~F.coalesce(cond, F.lit(False)))
+    hit = F.coalesce(cond, F.lit(False))
+    return df.filter(hit), df.filter(~hit)

@@ -60,6 +60,7 @@ import os
 import threading
 import time
 import uuid
+from urllib.parse import unquote
 
 from zestdb_spark import coordination
 
@@ -355,6 +356,21 @@ def history(table_dir: str) -> "list[Snapshot]":
     return list(reversed(out))
 
 
+def rel_parts(rel: str) -> "dict[str, str]":
+    """Decoded partition values encoded in a manifest relpath
+    (``series_id=a/time_bucket=3/part-...parquet`` →
+    {'series_id': 'a', 'time_bucket': '3'}) — percent-unquote, the
+    same escaping Spark (Hive ``escapePathName``) applies when
+    writing, so comparisons happen on DECODED values, never on a
+    re-escape that might disagree byte-for-byte."""
+    out = {}
+    for comp in rel.split("/")[:-1]:
+        col, eq, val = comp.partition("=")
+        if eq:
+            out[col] = unquote(val)
+    return out
+
+
 def tail_files(files, stats: dict, mode: str, n: int) -> "tuple[list[str], int | None]":
     """Manifest files that can hold each series' ``n`` newest rows
     (``mode="last"``) or ``n`` oldest rows (``"first"``) — the
@@ -385,15 +401,15 @@ def tail_files(files, stats: dict, mode: str, n: int) -> "tuple[list[str], int |
     by_series: "dict[str, list[str]]" = {}
     for rel in files:
         st = stats.get(rel) or {}
-        sid = [c for c in rel.split("/")[:-1] if c.startswith("series_id=")]
+        sid = rel_parts(rel).get("series_id")
         if (
-            not sid
+            sid is None
             or "timestamp" not in (st.get("min") or {})
             or "timestamp" not in (st.get("max") or {})
             or st.get("rows") is None
         ):
             return files, None
-        by_series.setdefault(sid[0], []).append(rel)
+        by_series.setdefault(sid, []).append(rel)
 
     # "first" is "last" on negated timestamps: near = the edge the walk
     # orders by, far = the edge that sets the bound

@@ -51,7 +51,6 @@ Usage::
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -82,13 +81,6 @@ class _AppendedFile(InputPartition):
 
 def _is_append(rel: str) -> bool:
     return os.path.basename(rel).startswith("part-")
-
-
-def _series_of(rel: str) -> str:
-    head, _, _ = rel.partition("/")
-    if head.startswith("series_id="):
-        return unquote(head[len("series_id="):])
-    return ""
 
 
 def _generic_meta(root: str):
@@ -255,7 +247,7 @@ class ZestChangesStreamReader(DataSourceStreamReader):
         return [
             _AppendedFile(
                 os.path.join(self.root, rel),
-                _series_of(rel),
+                snapshots.rel_parts(rel).get("series_id", ""),
                 self.cols,
                 self.meta_json,
                 self.mapping,

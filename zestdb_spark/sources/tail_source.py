@@ -52,19 +52,19 @@ from urllib.parse import unquote
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-#: per-table layouts: (data columns, DDL schema). Order columns — the
-#: total order shared with operators/ts_read.py (timestamp first, then
-#: every remaining column) — make the returned row SET unique on ties.
+from zestdb_spark import schema as S
+
+#: per-table layouts: (data columns, DDL schema), derived from the
+#: canonical schemas (series_id first, then the data columns). Order
+#: columns — the total order shared with operators/ts_read.py
+#: (timestamp first, then every remaining column) — make the returned
+#: row SET unique on ties.
 _LAYOUTS = {
-    "ts_numeric": (
-        ("timestamp", "value", "tag_name", "tag_value"),
-        "series_id string, timestamp long, value double, "
-        "tag_name string, tag_value string",
-    ),
-    "ts_blob": (
-        ("timestamp", "data"),
-        "series_id string, timestamp long, data string",
-    ),
+    table: (
+        tuple(f.name for f in schema.fields[1:]),
+        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields),
+    )
+    for table, schema in (("ts_numeric", S.TS_NUMERIC), ("ts_blob", S.TS_BLOB))
 }
 
 
@@ -125,9 +125,9 @@ class ZestTailReader(DataSourceReader):
         if snap is not None:
             by_series: dict[str, list[str]] = {}
             for rel in snap.files:
-                head, _, _ = rel.partition("/")
-                if head.startswith("series_id="):
-                    by_series.setdefault(unquote(head[len("series_id="):]), []).append(rel)
+                sid = snapshots.rel_parts(rel).get("series_id")
+                if sid is not None:
+                    by_series.setdefault(sid, []).append(rel)
             wanted = self.series if self.series is not None else sorted(by_series)
 
             def candidates(s: str) -> list[str]:

@@ -24,12 +24,15 @@ format-agnostic — swap the stage/commit seam for table-format calls
 without touching callers.
 
 Every row-level rewrite (``merge_table``, ``merge_rows``,
-``delete_table_rows``) goes through ``_rewrite_hits``: prune, find the
-hit files, stage their survivors plus any inserts, one commit. Every
-driver-side (pyarrow) file write goes through ``_write_local``, and the
-single-row MERGE fast paths (KV namespaces, catalog) share
-``_local_fold_rewrite``. Whole-set rewrites (compaction, OPTIMIZE,
-namespace swaps) are ``_stage_move`` plus ``_commit`` directly.
+``delete_table_rows``, ``ts_delete``) goes through ``_rewrite_hits``:
+prune, find the hit files, stage their survivors plus any inserts, one
+commit. Every driver-side (pyarrow) file write goes through
+``_write_local``, and the single-row MERGE fast paths (KV namespaces,
+catalog) share ``_local_fold_rewrite``; the distributed KV namespace
+swaps share ``_replace_namespaces``. Every parquet scan of a file list
+is ``_read_files``, and ``_zest_meta.json`` is written only by
+``_publish_meta`` and parsed only by ``_read_meta``. Whole-set rewrites
+(compaction, OPTIMIZE) are ``_stage_move`` plus ``_commit`` directly.
 
 Ingest validation enforces the reference's numeric-TS schema
 (src/numeric_timeseries.re:5-13): exactly ``{"value": <number>}`` plus
@@ -439,6 +442,49 @@ class ZestStore:
             if entry is not None:
                 self._generic[name] = entry
 
+    def _publish_meta(self, name: str, entry: dict) -> None:
+        """The one writer of ``<name>/_zest_meta.json``: serialize the
+        registry ``entry`` (schema, stats_cols, optional mapping and
+        retired physicals), publish it atomically (tmp + rename), then
+        re-register the table from the file just written — so the
+        in-memory entry is always what a fresh store would discover —
+        and drop the cached readers (a metadata change bumps no
+        manifest version, so readers keyed by version would go stale)."""
+        meta = {
+            "schema": entry["schema"].jsonValue(),
+            "stats_cols": list(entry["stats_cols"]),
+        }
+        if entry.get("mapping"):
+            meta["column_mapping"] = entry["mapping"]
+        if entry.get("retired"):
+            meta["retired_physicals"] = list(entry["retired"])
+        path = os.path.join(self._path(name), "_zest_meta.json")
+        tmp = f"{path}.tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, path)
+        self._generic[name] = self._read_meta(name)
+        with self._reader_lock:
+            self._reader_cache.clear()
+
+    @contextlib.contextmanager
+    def _meta_update(self, name: str):
+        """Locked read-modify-publish of a generic table's meta (the
+        schema operations): under the rewrite lock, re-read the entry
+        from disk (another process may have evolved it) and yield a
+        copy; the caller REPLACES its values, and a changed entry is
+        published on a clean exit. Raises KeyError for non-generic
+        tables."""
+        if self._generic_entry(name) is None:
+            raise KeyError(f"{name!r} is not a generic manifested table")
+        with self._rewrite_lock(name):
+            fresh = self._read_meta(name)
+            self._generic[name] = fresh
+            entry = dict(fresh)
+            yield entry
+            if entry != fresh:
+                self._publish_meta(name, entry)
+
     def _generic_entry(self, name: str) -> "dict | None":
         """Registry lookup with LAZY re-discovery: ``_discover_generic``
         runs at open, so a long-lived process (the server) would never
@@ -529,23 +575,12 @@ class ZestStore:
             os.makedirs(path, exist_ok=True)
             # data FIRST: a failed Spark write leaves only reclaimable
             # stage litter, and retrying the create works; the meta file
-            # (the table's existence marker) lands atomically (tmp +
-            # rename) only once the data is staged into the tree
+            # (the table's existence marker) lands atomically only once
+            # the data is staged into the tree
             adds = self._stage_move(name, df)
-            meta = {
-                "schema": df.schema.jsonValue(),
-                "stats_cols": list(stats_cols),
-            }
-            tmp_meta = f"{meta_path}.tmp.{os.getpid()}"
-            with open(tmp_meta, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp_meta, meta_path)
-            from pyspark.sql import types as T
-
-            self._generic[name] = {
-                "schema": T.StructType.fromJson(meta["schema"]),
-                "stats_cols": tuple(stats_cols),
-            }
+            self._publish_meta(
+                name, {"schema": df.schema, "stats_cols": tuple(stats_cols)}
+            )
             self._commit(name, adds=adds, op="create")
 
     def evolve_table_schema(
@@ -557,8 +592,8 @@ class ZestStore:
         history; additions don't: every already-written file simply
         reads NULL for the new columns through the schema-pinned
         scan). Runs under the rewrite lock so concurrent evolutions
-        serialize; the meta file lands atomically (tmp + rename), and
-        the in-memory registry updates only after it is durable.
+        serialize (``_meta_update``); the meta file lands atomically,
+        and the in-memory registry updates only after it is durable.
 
         ``stats_cols`` opts a subset of the NEW columns into per-file
         min/max manifest stats: files written from now on carry them
@@ -567,16 +602,11 @@ class ZestStore:
         match anything", so pruning stays conservative for history."""
         from pyspark.sql import types as T
 
-        if self._generic_entry(name) is None:
-            raise KeyError(f"{name!r} is not a generic manifested table")
-        with self._rewrite_lock(name):
-            # re-read under the lock: another process may have evolved
-            self._generic.pop(name, None)
-            entry = self._generic_entry(name)
+        with self._meta_update(name) as entry:
             schema = entry["schema"]
             have = {f.name for f in schema.fields}
             fields = list(schema.fields)
-            mapping = dict(entry.get("mapping") or {})
+            mapping = dict(entry["mapping"])
             # physical names already claimed by files on disk: under a
             # mapping, adding a LOGICAL name that matches a RENAMED
             # column's old physical name must NOT reuse that physical —
@@ -585,8 +615,7 @@ class ZestStore:
             # retired list): reusing one would resurrect the dropped
             # column's file data under the new column.
             used_phys = {mapping.get(f.name, f.name) for f in schema.fields}
-            used_phys.update(entry.get("retired") or ())
-            added: list[str] = []
+            used_phys.update(entry["retired"])
             for nf in new_fields:
                 if not isinstance(nf, T.StructField):
                     raise BadRequest(
@@ -644,7 +673,6 @@ class ZestStore:
                     phys = f"{nf.name}_zp{uuid.uuid4().hex[:8]}"
                 fields.append(T.StructField(nf.name, nf.dataType, True))
                 have.add(nf.name)
-                added.append(nf.name)
                 if mapping:
                     mapping[nf.name] = phys
                 used_phys.add(phys)
@@ -655,33 +683,13 @@ class ZestStore:
                     f"evolve_table_schema({name!r}): stats_cols "
                     f"{bad_stats} must be among the NEW columns"
                 )
-            new_schema = T.StructType(fields)
-            meta_path = os.path.join(self._path(name), "_zest_meta.json")
-            meta = json.load(open(meta_path))
-            meta["schema"] = new_schema.jsonValue()
+            entry["schema"] = T.StructType(fields)
             # order-preserving dedupe: a no-op re-add may request a
             # stats opt-in the racing writer already recorded
-            merged_stats = tuple(
-                dict.fromkeys(
-                    tuple(meta.get("stats_cols", ())) + tuple(stats_cols)
-                )
+            entry["stats_cols"] = tuple(
+                dict.fromkeys(entry["stats_cols"] + tuple(stats_cols))
             )
-            meta["stats_cols"] = list(merged_stats)
-            if mapping:
-                meta["column_mapping"] = mapping
-            tmp_meta = f"{meta_path}.tmp.{os.getpid()}"
-            with open(tmp_meta, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp_meta, meta_path)
-            self._generic[name]["schema"] = new_schema
-            self._generic[name]["stats_cols"] = merged_stats
-            if mapping:
-                self._generic[name]["mapping"] = mapping
-            # metadata-only evolution does NOT bump the manifest
-            # version, so cached readers keyed by (table, version)
-            # would keep serving the pre-evolution column set
-            with self._reader_lock:
-                self._reader_cache.clear()
+            entry["mapping"] = mapping
 
     def rename_table_column(self, name: str, old: str, new: str) -> None:
         """RENAME COLUMN for a generic table — Delta's column mapping:
@@ -696,11 +704,7 @@ class ZestStore:
         under the rewrite lock; the meta lands atomically."""
         from pyspark.sql import types as T
 
-        if self._generic_entry(name) is None:
-            raise KeyError(f"{name!r} is not a generic manifested table")
-        with self._rewrite_lock(name):
-            self._generic.pop(name, None)  # re-read under the lock
-            entry = self._generic_entry(name)
+        with self._meta_update(name) as entry:
             schema = entry["schema"]
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -722,37 +726,20 @@ class ZestStore:
             # first rename materializes the FULL logical->physical map
             # (identity for every untouched column) so later evolutions
             # and lookups see one consistent table-wide mapping
-            mapping = dict(entry.get("mapping") or {})
-            if not mapping:
-                mapping = {n: n for n in names}
+            mapping = dict(entry["mapping"]) or {n: n for n in names}
             mapping[new] = mapping.pop(old, old)
-            fields = [
-                T.StructField(new, f.dataType, f.nullable)
-                if f.name == old
-                else f
-                for f in schema.fields
-            ]
-            new_schema = T.StructType(fields)
-            meta_path = os.path.join(self._path(name), "_zest_meta.json")
-            meta = json.load(open(meta_path))
-            meta["schema"] = new_schema.jsonValue()
-            meta["column_mapping"] = mapping
-            meta["stats_cols"] = [
-                new if c == old else c for c in meta.get("stats_cols", ())
-            ]
-            tmp_meta = f"{meta_path}.tmp.{os.getpid()}"
-            with open(tmp_meta, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp_meta, meta_path)
-            self._generic[name] = {
-                "schema": new_schema,
-                "stats_cols": tuple(meta["stats_cols"]),
-                "mapping": mapping,
-                "retired": tuple(meta.get("retired_physicals", ())),
-            }
-            # reader cache entries were built with the OLD aliases
-            with self._reader_lock:
-                self._reader_cache.clear()
+            entry["mapping"] = mapping
+            entry["schema"] = T.StructType(
+                [
+                    T.StructField(new, f.dataType, f.nullable)
+                    if f.name == old
+                    else f
+                    for f in schema.fields
+                ]
+            )
+            entry["stats_cols"] = tuple(
+                new if c == old else c for c in entry["stats_cols"]
+            )
 
     def drop_table_column(self, name: str, col: str) -> None:
         """DROP COLUMN for a generic table — the column-mapping drop
@@ -766,11 +753,7 @@ class ZestStore:
         every other metadata evolution."""
         from pyspark.sql import types as T
 
-        if self._generic_entry(name) is None:
-            raise KeyError(f"{name!r} is not a generic manifested table")
-        with self._rewrite_lock(name):
-            self._generic.pop(name, None)  # re-read under the lock
-            entry = self._generic_entry(name)
+        with self._meta_update(name) as entry:
             schema = entry["schema"]
             names = [f.name for f in schema.fields]
             if col not in names:
@@ -782,35 +765,15 @@ class ZestStore:
                 raise BadRequest(
                     f"drop_table_column({name!r}): cannot drop the last column"
                 )
-            mapping = dict(entry.get("mapping") or {})
-            if not mapping:
-                mapping = {n: n for n in names}
-            physical = mapping.pop(col, col)
-            new_schema = T.StructType(
+            mapping = dict(entry["mapping"]) or {n: n for n in names}
+            entry["retired"] = entry["retired"] + (mapping.pop(col, col),)
+            entry["mapping"] = mapping
+            entry["schema"] = T.StructType(
                 [f for f in schema.fields if f.name != col]
             )
-            meta_path = os.path.join(self._path(name), "_zest_meta.json")
-            meta = json.load(open(meta_path))
-            meta["schema"] = new_schema.jsonValue()
-            meta["column_mapping"] = mapping
-            meta["stats_cols"] = [
-                c for c in meta.get("stats_cols", ()) if c != col
-            ]
-            retired = list(meta.get("retired_physicals", []))
-            retired.append(physical)
-            meta["retired_physicals"] = retired
-            tmp_meta = f"{meta_path}.tmp.{os.getpid()}"
-            with open(tmp_meta, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp_meta, meta_path)
-            self._generic[name] = {
-                "schema": new_schema,
-                "stats_cols": tuple(meta["stats_cols"]),
-                "mapping": mapping,
-                "retired": tuple(retired),
-            }
-            with self._reader_lock:
-                self._reader_cache.clear()
+            entry["stats_cols"] = tuple(
+                c for c in entry["stats_cols"] if c != col
+            )
 
     def append_table(
         self, name: str, df: DataFrame, merge_schema: bool = False
@@ -1204,7 +1167,7 @@ class ZestStore:
         timeseries.re:197-231), then the file's recorded timestamp
         min/max (manifest stats). Both window bounds are INCLUSIVE
         (P3/P4 semantics). No evidence → True (never prune blind)."""
-        parts = ZestStore._rel_parts(rel)
+        parts = snapshots.rel_parts(rel)
         sid = parts.get("series_id")
         if series is not None and sid is not None and sid not in series:
             return False
@@ -1323,12 +1286,7 @@ class ZestStore:
                     if cached is not None:
                         self._reader_cache.move_to_end(key)
                         return cached
-            scan_schema, restore = self._scan_schema(table, schema)
-            df = restore(
-                self.spark.read.schema(scan_schema)
-                .option("basePath", path)
-                .parquet(*[os.path.join(path, f) for f in files])
-            )
+            df = self._read_files(table, files)
             if bound is not None:
                 # the tail bound reaches parquet as a pushed filter, so
                 # row groups inside a large surviving file are skipped
@@ -1548,36 +1506,18 @@ class ZestStore:
     # set. With Delta/Iceberg on the classpath this whole block becomes
     # MERGE/DELETE/OPTIMIZE and goes away.
 
-    @staticmethod
-    def _rel_parts(rel: str) -> dict[str, str]:
-        """Decoded partition values encoded in a manifest relpath
-        (``series_id=a/time_bucket=3/part-...parquet`` →
-        {'series_id': 'a', 'time_bucket': '3'}) — percent-unquote, the
-        same escaping Spark (Hive ``escapePathName``) applies when
-        writing, so comparisons happen on DECODED values, never on a
-        re-escape that might disagree byte-for-byte."""
-        out = {}
-        for comp in rel.split("/")[:-1]:
-            col, eq, val = comp.partition("=")
-            if eq:
-                out[col] = unquote(val)
-        return out
-
     def _stage_move(
         self,
         table: str,
         df: DataFrame,
         partition_cols=(),
-        dest_rel: str = "",
         rewrite: bool = False,
     ) -> list[str]:
         """Write ``df`` into the table tree invisibly: stage under a
         dot-dir (never scanned), then move each data file into its
-        partition location (or under ``dest_rel`` for writes whose
-        frame does not carry the partition columns — compaction).
-        Returns the added relpaths for the commit. A crash at any
-        point here leaves only unreferenced files — readers are
-        untouched, vacuum reclaims the orphans.
+        ``partition_cols`` location. Returns the added relpaths for the
+        commit. A crash at any point here leaves only unreferenced
+        files — readers are untouched, vacuum reclaims the orphans.
 
         ``rewrite=True`` renames the files ``rw-*`` instead of Spark's
         ``part-*``: rewrites (delete survivors, upsert namespaces,
@@ -1630,8 +1570,6 @@ class ZestStore:
                 if rewrite:
                     head, base = os.path.split(rel)
                     rel = os.path.join(head, f"rw-{base.removeprefix('part-')}")
-                if dest_rel:
-                    rel = f"{dest_rel}/{rel}"
                 dst = os.path.join(real, rel)
                 if os.path.exists(dst):
                     # Spark part-file names carry a per-job UUID, so this
@@ -1908,11 +1846,7 @@ class ZestStore:
             # the clone must be self-describing too: carry the meta
             # (schema + stats choice) and register it on the dest
             os.makedirs(dst_dir, exist_ok=True)
-            with open(os.path.join(src_dir, "_zest_meta.json")) as f:
-                meta_raw = f.read()
-            with open(os.path.join(dst_dir, "_zest_meta.json"), "w") as f:
-                f.write(meta_raw)
-            dest._generic[table] = dict(self._generic[table])
+            dest._publish_meta(table, self._read_meta(table))
         for rel in files:
             src = os.path.join(src_dir, rel)
             dst = os.path.join(dst_dir, rel)
@@ -1932,7 +1866,9 @@ class ZestStore:
 
     def _read_files(self, table: str, files: "list[str]") -> DataFrame:
         """Full-read-schema frame over an explicit file subset of a
-        table (the churned-files fast path for ``changes``)."""
+        table — the one parquet scan of a file list (manifest reads,
+        rewrites, compactions, the churned files of ``changes``).
+        Partition columns come back from the relpaths (``basePath``)."""
         schema = self._read_schema(table)
         if not files:
             return _empty_df(self.spark, schema)
@@ -2417,27 +2353,28 @@ class ZestStore:
         adds = self._stage_move(table, df, rewrite=True)
         self._commit(table, adds=adds, removes=old, op="overwrite")
 
-    def _rewrite_kv_namespace(
-        self, table: str, id_: str, new_rows: DataFrame, op: str = "upsert"
+    def _replace_namespaces(
+        self, table: str, rows: DataFrame, ids=None, op: str = "upsert"
     ) -> None:
-        """Replace ONE ``id=<id_>`` partition of an id-partitioned KV
-        table with ``new_rows`` — every other namespace's files stay
-        live and byte-identical (the reference's per-namespace git tree
-        writes; MERGE INTO on a real table format).
+        """Replace whole ``id=`` namespaces of an id-partitioned KV
+        table with ``rows``: the namespaces in ``ids`` (default: every
+        namespace ``rows`` writes) lose their live files, every other
+        namespace's files stay live and byte-identical (the reference's
+        per-namespace git tree writes; MERGE INTO on a real table
+        format). Runs under the caller's rewrite lock.
 
         Crash contract: the staged replacement is invisible until the
-        single manifest commit, which atomically swaps the namespace's
-        old files for the new — a crash at ANY point leaves the
+        single manifest commit, which atomically swaps the namespaces'
+        old files for the new — a crash at ANY point leaves each
         namespace fully old or fully new, never absent and never
-        mixed. The emptied-namespace case (delete_all / last-key
-        delete) is just a commit with no adds."""
-        old = [
-            rel
-            for rel in self._live_files(table)
-            if self._rel_parts(rel).get("id") == id_
-        ]
-        adds = self._stage_move(table, new_rows, ("id",), rewrite=True)
-        self._commit(table, adds=adds, removes=old, op=op)
+        mixed. An emptied namespace (delete_all / last-key delete) is
+        just a commit with no adds."""
+        live = self._live_files(table)
+        adds = self._stage_move(table, rows, ("id",), rewrite=True)
+        if ids is None:
+            ids = {snapshots.rel_parts(rel).get("id") for rel in adds}
+        removes = [rel for rel in live if snapshots.rel_parts(rel).get("id") in ids]
+        self._commit(table, adds=adds, removes=removes, op=op)
 
     #: driver budget for the KV namespace fast path — a namespace whose
     #: live bytes exceed this is rewritten by the distributed path
@@ -2468,7 +2405,7 @@ class ZestStore:
         the same way (Delta's low-shuffle merge)."""
         old = []
         for rel in self._live_files(table):
-            parts = self._rel_parts(rel)
+            parts = snapshots.rel_parts(rel)
             if "id" not in parts:
                 return False  # legacy un-partitioned file: Spark path reads it
             if parts["id"] == id_:
@@ -2560,7 +2497,7 @@ class ZestStore:
                     [(id_, key, value)], _TABLES[table]
                 )
                 ns = self.load(table).filter(F.col("id") == id_)
-                self._rewrite_kv_namespace(table, id_, kv_ops.upsert(ns, updates))
+                self._replace_namespaces(table, kv_ops.upsert(ns, updates), {id_})
         self._log_write(table, 1)
 
     def kv_ingest_bulk(self, kind: str, rows: DataFrame) -> None:
@@ -2582,19 +2519,7 @@ class ZestStore:
             *[F.col(f.name).cast(f.dataType) for f in _TABLES[table].fields]
         )
         with self._rewrite_lock(table):
-            old = self._live_files(table)
-            adds = self._stage_move(table, sel, ("id",), rewrite=True)
-            batch_ids = {self._rel_parts(rel).get("id") for rel in adds}
-            self._commit(
-                table,
-                adds=adds,
-                removes=[
-                    rel
-                    for rel in old
-                    if self._rel_parts(rel).get("id") in batch_ids
-                ],
-                op="upsert",
-            )
+            self._replace_namespaces(table, sel)
         self._log_write(table, None)
 
     def kv_delete(self, kind: str, id_: str, key: Optional[str] = None) -> None:
@@ -2614,8 +2539,8 @@ class ZestStore:
         with self._rewrite_lock(table):
             if not self._kv_local_rewrite(table, id_, mut, "delete"):
                 ns = self.load(table).filter(F.col("id") == id_)
-                self._rewrite_kv_namespace(
-                    table, id_, kv_ops.delete(ns, id_, key), op="delete"
+                self._replace_namespaces(
+                    table, kv_ops.delete(ns, id_, key), {id_}, op="delete"
                 )
         self._log_write(table, None)
 
@@ -2656,11 +2581,17 @@ class ZestStore:
         )
 
     def ts_delete(self, plan, compat_collateral: bool = False) -> None:
-        """D1: partition-scoped delete. Only the (series_id, time_bucket)
-        partitions the window can touch are re-read and rewritten —
-        untouched partition files stay byte-identical (asserted by
-        tests/test_durability.py). DELETE FROM + partition pruning on a
-        real table format."""
+        """D1: window DELETE through the table format's one row-level
+        rewrite (``_rewrite_hits``): the window's series and bounds
+        prune the live files by relpath partition and manifest stats,
+        only the files holding a deleted row are rewritten, and every
+        other file stays live and byte-identical (asserted by
+        tests/test_durability.py). The swap is ONE manifest commit, so
+        the delete lands cross-partition-atomically and a crash before
+        it leaves the table fully old; a delete that hits no row
+        commits nothing. ``compat_collateral`` partners share the
+        matched row's (series, timestamp), so they sit inside the same
+        pruning window and the hit semi-join finds them in any file."""
         from zestdb_spark.operators import ts_delete as del_ops
 
         table = "ts_numeric" if plan.store == "numeric" else "ts_blob"
@@ -2670,63 +2601,18 @@ class ZestStore:
             return
         if not self._exists(table):
             return
-
         w = plan.window
-        from_bucket = _bucket_of(w.from_ms)
-        to_bucket = _bucket_of(w.to_ms) if w.op == "range" else None
+        until = w.to_ms if w.op == "range" else None
         ids = set(plan.ids)
-
-        def affected(series: str, bucket: int) -> bool:
-            return (
-                series in ids
-                and bucket >= from_bucket
-                and (to_bucket is None or bucket <= to_bucket)
-            )
-
-        part_cond = F.col("series_id").isin(list(ids)) & (
-            F.col("time_bucket") >= F.lit(from_bucket)
-        )
-        if to_bucket is not None:
-            part_cond = part_cond & (F.col("time_bucket") <= F.lit(to_bucket))
-
-        with self._rewrite_lock(table):
-            self._ts_delete_rewrite(table, plan, compat_collateral, part_cond, affected)
-        self._log_write(table, None)
-
-    def _ts_delete_rewrite(self, table, plan, compat_collateral, part_cond, affected):
-        from zestdb_spark.operators import ts_delete as del_ops
-
-        live = self._live_files(table)
-        full = self._read_table(table)
-        survivors = del_ops.delete_plan(full.filter(part_cond), plan, compat_collateral)
-
-        # Stage the survivor files for the affected leaves, then ONE
-        # manifest commit swaps every affected leaf's old files for the
-        # survivors — including leaves the survivors did not cover
-        # (every row deleted). Torn-window contract (pinned by
-        # tests/test_durability.py): a crash before the commit leaves
-        # the table fully OLD (staged files are unreferenced); the
-        # commit is a single atomic publish, so the delete lands
-        # cross-partition-ATOMICALLY — no reader can ever see series A
-        # deleted but series B not. Re-running a crashed delete
-        # converges (idempotent); rows are never part-written.
-        adds = self._stage_move(
-            table, survivors, ("series_id", "time_bucket"), rewrite=True
-        )
-
-        def is_affected(rel: str) -> bool:
-            parts = self._rel_parts(rel)
-            try:
-                return affected(parts["series_id"], int(parts["time_bucket"]))
-            except (KeyError, ValueError):
-                return False
-
-        self._commit(
+        self._rewrite_hits(
             table,
-            adds=adds,
-            removes=[r for r in live if is_affected(r)],
-            op="delete",
+            "delete",
+            lambda rel, st: self._file_may_match(rel, st, w.from_ms, until, ids),
+            lambda df: del_ops.deleted_rows(df, plan, compat_collateral),
+            lambda df: del_ops.delete_plan(df, plan, compat_collateral),
+            partition_cols=("series_id", "time_bucket"),
         )
+        self._log_write(table, None)
 
     def compact(
         self,
@@ -2775,17 +2661,6 @@ class ZestStore:
         series = None if series is None else set(series)
         if not self._exists(table):
             return 0
-        from pyspark.sql import types as T
-
-        # leaf files hold data columns only (partition cols live in the
-        # dir names); write_id may be absent in pre-provenance files
-        leaf_schema = T.StructType(
-            [
-                f
-                for f in self._read_schema(table).fields
-                if f.name not in ("series_id", "time_bucket")
-            ]
-        )
         real = self._path(table)
         with self._rewrite_lock(table):
             live = self._live_files(table)
@@ -2818,13 +2693,17 @@ class ZestStore:
                 # footer walk all get maximally selective bounds after
                 # maintenance (Delta's OPTIMIZE ZORDER,
                 # one dimension). Content is still preserved verbatim.
+                # The partition columns lead the sort (constant within a
+                # leaf): the partitioned write then needs no sort of its
+                # own, which would drop the timestamp order.
                 merged = (
-                    self.spark.read.schema(leaf_schema)
-                    .parquet(*[os.path.join(real, f) for f in files])
+                    self._read_files(table, files)
                     .repartitionByRange(n_out, "timestamp")
-                    .sortWithinPartitions("timestamp")
+                    .sortWithinPartitions("series_id", "time_bucket", "timestamp")
                 )
-                adds += self._stage_move(table, merged, dest_rel=leaf_rel, rewrite=True)
+                adds += self._stage_move(
+                    table, merged, ("series_id", "time_bucket"), rewrite=True
+                )
                 removes += files
                 done += 1
             if done:
@@ -2874,15 +2753,12 @@ class ZestStore:
         explicit opt-in for tests and single-process maintenance."""
         if table not in ("audit", "write_log"):
             raise KeyError(f"compact_log targets the logs, not {table!r}")
-        real = self._path(table)
         with self._rewrite_lock(table):
             live = self._live_files(table)
             if len(live) <= max(1, int(target_files)):
                 return 0
-            merged = (
-                self.spark.read.schema(_TABLES[table])
-                .parquet(*[os.path.join(real, f) for f in live])
-                .coalesce(max(1, int(target_files)))
+            merged = self._read_files(table, live).coalesce(
+                max(1, int(target_files))
             )
             adds = self._stage_move(table, merged, rewrite=True)
             self._commit(table, adds=adds, removes=live, op="compact")
