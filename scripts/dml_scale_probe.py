@@ -146,7 +146,7 @@ def main() -> None:
 
     snap = store._snapshot(table)
     print(f"manifest: {len(snap.files)} files, registered in {t_register:.2f}s "
-          f"({n_files // max(1, int(t_register))} files/s)")
+          f"({n_files / max(t_register, 1e-9):,.0f} files/s)")
 
     # -- keyed MERGE: updates hit 150 keys inside the two real files --
     lo = base + hit_ids[0] * rows_per_file

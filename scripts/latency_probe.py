@@ -2,8 +2,8 @@
 "Request latency" table.
 
 Times the server-shaped ops (1-row TS/KV writes, api-edge reads —
-last-family ``latest`` and ``last/50/filter``, full-window ``length`` —
-namespace rewrites, log riders) on a throwaway store, plus
+last-family ``latest`` and ``last/50/filter``, and the manifest-folded
+``length``, ``since/…/count`` and ``since/…/max`` — namespace rewrites, log riders) on a throwaway store, plus
 ``post_ts_wire``: a 1-row POST /ts round trip through ``ZestServer``
 and a ``ZestReqClient`` over the ZMTP socket on loopback. First a COLD
 pass (fresh session pays JVM/codegen warm-up — what serve --warm
@@ -58,6 +58,8 @@ def main() -> None:
         t("get_ts_latest", lambda: eng.get(f"/ts/s{i}/latest"))
         t("get_ts_last_filter", lambda: eng.get(f"/ts/s{i}/last/50/filter/k/equals/{i}"))
         t("get_ts_length", lambda: eng.get(f"/ts/s{i}/length"))
+        t("get_ts_since_count", lambda: eng.get(f"/ts/s{i}/since/0/count"))
+        t("get_ts_since_max", lambda: eng.get(f"/ts/s{i}/since/0/max"))
         t("post_kv", lambda: eng.post(f"/kv/ns{i}/k", json.dumps({"v": i})))
         t("get_kv_keys", lambda: eng.get(f"/kv/ns{i}/keys"))
         t("delete_kv", lambda: eng.delete(f"/kv/ns{i}/k"))

@@ -522,3 +522,291 @@ def test_engine_tail_read_with_null_timestamps(spark, tmp_path):
         )
     assert eng.store._snapshot("ts_numeric").version == version
     _assert_engine_parity(eng)
+
+
+# ---------------------------------------------------- manifest-stat fold
+
+
+def test_window_files_decision():
+    """snapshots.window_files, no Spark: a file is covered only when its
+    series partition, row count and (for a bounded window) its timestamp
+    bounds and zero null count prove every row matches; inclusive
+    edges; anything else is boundary, in input order."""
+    def st(rows, lo, hi, nulls=0):
+        return {
+            "rows": rows,
+            "min": {"timestamp": lo},
+            "max": {"timestamp": hi},
+            "nulls": {"timestamp": nulls},
+        }
+
+    stats = {
+        "series_id=a/time_bucket=0/f1.parquet": st(10, 0, 9),
+        "series_id=a/time_bucket=0/f2.parquet": st(10, 9, 19),
+        "series_id=a/time_bucket=0/f3.parquet": st(2, 20, 20, nulls=1),
+        "series_id=b/time_bucket=0/g1.parquet": st(5, 0, 4),
+        "part-0.parquet": st(1, 0, 0),
+    }
+    files = sorted(stats) + ["series_id=a/time_bucket=0/nostats.parquet"]
+    a1, a2, a3, b1 = (
+        "series_id=a/time_bucket=0/f1.parquet",
+        "series_id=a/time_bucket=0/f2.parquet",
+        "series_id=a/time_bucket=0/f3.parquet",
+        "series_id=b/time_bucket=0/g1.parquet",
+    )
+    nostats = files[-1]
+    # unbounded (length): every file of a requested series with a row
+    # count, null timestamps included
+    cov, bnd = snapshots.window_files(files, stats, {"a"})
+    assert cov == [a1, a2, a3]
+    assert set(bnd) == {b1, "part-0.parquet", nostats}
+    # bounded: edges are inclusive, a straddling file is boundary, a
+    # file with a null timestamp is boundary
+    cov, bnd = snapshots.window_files([a1, a2, a3, b1], stats, {"a", "b"}, 0, 9)
+    assert cov == [a1, b1] and bnd == [a2, a3]
+    cov, bnd = snapshots.window_files([a1, a2, a3], stats, {"a"}, since=9)
+    assert cov == [a2] and bnd == [a1, a3]
+    cov, bnd = snapshots.window_files([a1, a2], stats, {"a"}, until=19)
+    assert cov == [a1, a2] and bnd == []
+    # no null count recorded: boundary
+    del stats[a1]["nulls"]
+    assert snapshots.window_files([a1], stats, {"a"}, since=0) == ([], [a1])
+
+
+def _mk_stat_engine(spark, root):
+    """A store whose length/count/min/max reads hit every fold edge:
+    Spark-written multi-row files, one-row posts, null values, NaN from
+    both writers, signed zeros, a stat-less file and a file with a null
+    timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    eng = ZestEngine(spark, root)
+    store = eng.store
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in TS_NUMERIC.fields]
+    )
+    # a: two Spark files in bucket 0 (100..1000 and 1000..1500, so 1000
+    # is both a file max and a file min), one in bucket 1 with a null
+    # value, and a Spark file of series n holding a NaN
+    for spec in (
+        [("a", t, float(t % 7)) for t in range(100, 1001, 100)],
+        [("a", t, float(t % 11) - 3) for t in range(1000, 1501, 100)],
+        [("a", _DAY_MS + t, None if t == 200 else float(t)) for t in range(0, 501, 100)],
+        [("n", _DAY_MS + 1, 1.0), ("n", _DAY_MS + 2, float("nan"))],
+    ):
+        rows = [(s, t, v, None, None) for s, t, v in spec]
+        eng.ingest_bulk(
+            spark.createDataFrame(rows, nullable).coalesce(1),
+            path="/ts/bulk/x",
+            client="t",
+        )
+    # b: one-row posts across three day buckets
+    for d in range(3):
+        for i in range(3):
+            eng.post(f"/ts/b/at/{d * _DAY_MS + i * 10}", {"value": float(i + d), "k": "x"})
+    # n: a two-row driver-side batch holding a NaN, and a one-row post
+    store._append_ts_local(
+        "ts_numeric", [("n", 5, 2.0, None, None), ("n", 6, float("nan"), None, None)], 2
+    )
+    eng.post("/ts/n/at/7", {"value": 3.0})
+    # zn: max is -0.0 (pyarrow records 0.0); zp: min is +0.0
+    eng.post("/ts/zn/at/10", {"value": -0.0})
+    eng.post("/ts/zn/at/20", {"value": -3.0})
+    eng.post("/ts/zp/at/10", {"value": 0.0})
+    eng.post("/ts/zp/at/20", {"value": 5.0})
+    table_dir = store._path("ts_numeric")
+
+    def put(rel, ts, values):
+        pq.write_table(
+            pa.table(
+                {
+                    "timestamp": pa.array(ts, pa.int64()),
+                    "value": pa.array(values, pa.float64()),
+                    "tag_name": pa.array([None] * len(ts), pa.string()),
+                    "tag_value": pa.array([None] * len(ts), pa.string()),
+                    "write_id": pa.array([None] * len(ts), pa.int64()),
+                }
+            ),
+            os.path.join(table_dir, rel),
+        )
+
+    # a stat-less file of a (no stats offered to the commit)
+    put("series_id=a/time_bucket=0/part-nostats.parquet", [300, 400], [90.0, -90.0])
+    snapshots.commit(table_dir, adds=["series_id=a/time_bucket=0/part-nostats.parquet"])
+    # a null timestamp and a null value (one non-null value keeps the
+    # value stats, with a null count of 1), committed with footer stats
+    put("series_id=b/time_bucket=0/part-nulls.parquet", [None, 15], [None, 4.5])
+    store._commit(
+        "ts_numeric", adds=["series_id=b/time_bucket=0/part-nulls.parquet"], op="append"
+    )
+    return eng
+
+
+def _stat_paths(lo=0):
+    out = [
+        "/ts/a/length",
+        "/ts/a,a/length",  # a duplicate id counts once
+        "/ts/a,b,n/length",
+        "/ts/ghost/length",
+        "/ts/blob/a/length",  # the blob table is empty
+    ]
+    windows = (
+        f"since/{lo}",  # everything: covered files plus a/b boundaries
+        f"range/{_DAY_MS}/{2 * _DAY_MS - 1}",  # one whole bucket of a
+        "range/250/650",  # inside one file of a bucket
+        "since/1000",  # a bound equal to a file's min
+        "range/100/1000",  # ...and to a file's max
+        "range/5/6",  # n's pyarrow NaN batch
+        "range/20000/30000",  # empty
+    )
+    for w in windows:
+        for agg in ("count", "min", "max"):
+            out.append(f"/ts/a/{w}/{agg}")
+            out.append(f"/ts/b,n/{w}/{agg}")
+    for agg in ("count", "min", "max"):
+        out += [
+            f"/ts/n/since/0/{agg}",
+            f"/ts/zn,zp/since/0/{agg}",
+            f"/ts/zn/since/0/{agg}",
+            f"/ts/zp/since/0/{agg}",
+            f"/ts/ghost/since/0/{agg}",
+            f"/ts/a,a/since/0/{agg}",
+        ]
+    # the scanned reads next to them stay equal too
+    out += ["/ts/a/since/0/sum", "/ts/b/since/0/filter/k/equals/x/count"]
+    return out
+
+
+def test_engine_stat_reads_match_unhinted_plan(spark, tmp_path):
+    eng = _mk_stat_engine(spark, str(tmp_path / "s"))
+    _assert_engine_parity(eng, _stat_paths())
+    snap = eng.store._snapshot("ts_numeric")
+    # the fold's NaN guard at the source: neither writer leaves value
+    # bounds on a file holding a NaN
+    for rel in snap.files:
+        if rel.startswith("series_id=n/") and snap.stats[rel]["rows"] == 2:
+            assert "value" not in snap.stats[rel].get("max", {}), rel
+    assert eng.get("/ts/n/since/0/max") == "{}"
+    assert eng.get("/ts/n/since/0/min") == '{"result": 1.0}'
+    assert eng.get("/ts/n/since/0/count") == '{"result": 5.0}'
+    assert eng.get("/ts/zn/since/0/max") == '{"result": -0.0}'
+    assert eng.get("/ts/zp/since/0/min") == '{"result": 0.0}'
+    assert eng.get("/ts/a/range/20000/30000/count") == '{"result": 0.0}'
+    assert eng.get("/ts/a/range/20000/30000/max") == "{}"
+    assert eng.get("/ts/ghost/since/0/count") == '{"result": 0.0}'
+    assert eng.get("/ts/a,a/length") == eng.get("/ts/a/length") == '{"length": 24}'
+
+
+def test_engine_stat_reads_after_delete_and_restore(spark, tmp_path):
+    eng = _mk_stat_engine(spark, str(tmp_path / "s"))
+    pre = eng.store.history("ts_numeric")[0].version
+    eng.delete("/ts/a/range/300/1100")  # cuts into both bucket-0 files
+    eng.delete(f"/ts/b/since/{_DAY_MS}")  # b's later buckets
+    assert json.loads(eng.get("/ts/b/length")) == {"length": 5}
+    _assert_engine_parity(eng, _stat_paths())
+    eng.store.restore("ts_numeric", pre)
+    assert json.loads(eng.get("/ts/b/length")) == {"length": 11}
+    _assert_engine_parity(eng, _stat_paths())
+
+
+def test_engine_stat_reads_blob_length(spark, tmp_path):
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for i in range(6):
+        eng.post(f"/ts/blob/bx/at/{1000 + (i // 2) * 10}", {"seq": i})
+    for i in range(3):
+        eng.post(f"/ts/blob/by/at/{i * _DAY_MS}", [i])
+    paths = ("/ts/blob/bx/length", "/ts/blob/bx,by,bx/length", "/ts/blob/bz/length")
+    _assert_engine_parity(eng, paths)
+    assert eng.get("/ts/blob/bx,by/length") == '{"length": 9}'
+
+
+def _jobs_of(spark, fn):
+    """Spark jobs ``fn`` starts on this thread, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"stat-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "stat fold")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_covered_stat_reads_start_no_spark_job(spark, tmp_path):
+    """A length, or a since count whose files all lie inside the window,
+    is folded from manifest stats without a Spark job; a read with
+    boundary files scans exactly those files."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for d in range(3):
+        for i in range(2):
+            eng.post(f"/ts/s/at/{d * _DAY_MS + i * 10}", {"value": float(d * 2 + i + 1)})
+    eng.get("/ts/s/latest")  # warm the session's first-job paths
+    got, jobs = _jobs_of(spark, lambda: eng.get("/ts/s/length"))
+    assert (got, jobs) == ('{"length": 6}', 0)
+    got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/since/{_DAY_MS}/count"))
+    assert (got, jobs) == ('{"result": 4.0}', 0)
+    got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/range/0/{_DAY_MS}/max"))
+    assert (got, jobs) == ('{"result": 3.0}', 0)
+
+    # a stat-less file of s in bucket 1 is the only boundary file
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table_dir = eng.store._path("ts_numeric")
+    rel = "series_id=s/time_bucket=1/part-nostats.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "timestamp": pa.array([_DAY_MS + 5], pa.int64()),
+                "value": pa.array([9.5]),
+                "tag_name": pa.array([None], pa.string()),
+                "tag_value": pa.array([None], pa.string()),
+                "write_id": pa.array([None], pa.int64()),
+            }
+        ),
+        os.path.join(table_dir, rel),
+    )
+    snapshots.commit(table_dir, adds=[rel])
+    store = eng.store
+    frames = []
+    read_files = store._read_files
+
+    def spy(table, files):
+        df = read_files(table, files)
+        frames.append(df)
+        return df
+
+    store._read_files = spy
+    got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/since/{_DAY_MS}/max"))
+    assert got == '{"result": 9.5}' and jobs >= 1
+    (df,) = frames
+    assert [os.path.basename(f) for f in df.inputFiles()] == ["part-nostats.parquet"]
+    del store._read_files
+    assert eng.get(f"/ts/s/since/{_DAY_MS}/max") == unhinted_get(eng, f"/ts/s/since/{_DAY_MS}/max")
+
+
+def test_driver_batch_with_nan_keeps_no_value_bounds(spark, tmp_path):
+    """A multi-row pyarrow file records finite bounds around a NaN; the
+    footer rule drops them, so the fold scans the file and max renders
+    ``{}`` like the scan."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    eng.store._append_ts_local(
+        "ts_numeric",
+        [("n", 1000, 1.0, None, None), ("n", 2000, float("nan"), None, None)],
+        2,
+    )
+    snap = eng.store._snapshot("ts_numeric")
+    (st,) = snap.stats.values()
+    assert st["rows"] == 2 and "value" not in st.get("max", {})
+    assert st["min"]["timestamp"] == 1000  # the int column keeps its bounds
+    path = "/ts/n/since/0/max"
+    assert eng.get(path) == unhinted_get(eng, path) == "{}"
+    # a one-row post keeps its value bounds
+    eng.post("/ts/m/at/5", {"value": 4.0})
+    snap = eng.store._snapshot("ts_numeric")
+    (rel,) = [r for r in snap.files if r.startswith("series_id=m/")]
+    assert snap.stats[rel]["max"]["value"] == 4.0

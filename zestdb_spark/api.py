@@ -7,10 +7,15 @@ ZMQ/CoAP framing, CurveZMQ crypto, and macaroon auth are out of
 analytic scope (SURVEY.md §2.12 M4) — `authorize` is a hook that
 accepts everything by default.
 
-Results are reference-shaped JSON strings (serializers.py). Every TS
-read is one canonical scan: ``ZestStore.load`` with the compiled plan's
-scan hints (series, time window, and for last/first/latest/earliest the
-manifest ``tail`` hint), then ``plan_to_dataframe``. For DataFrame
+Results are reference-shaped JSON strings (serializers.py). ``length``
+and the unfiltered ``count``/``min``/``max`` over since/range windows
+are the manifest fold (``ZestStore.window_stat``): files whose stats
+put every row inside the window answer from those stats, and only the
+boundary files are scanned, so a read with none runs no Spark job.
+Every other TS read is one canonical scan: ``ZestStore.load`` with the
+compiled plan's scan hints (series, time window, and for
+last/first/latest/earliest the manifest ``tail`` hint), then
+``plan_to_dataframe``. For DataFrame
 access (the analytics path) use the plans/operators modules or the
 ``zest_tail`` source directly; this facade is the compatibility layer a
 reference client would hit.
@@ -152,6 +157,13 @@ class ZestEngine:
         if len(parts) >= 3 and parts[1] == "ts":
             plan = compile_path(path)
             table = "ts_numeric" if plan.store == "numeric" else "ts_blob"
+            w = plan.window
+            if w.op == "length" or (
+                plan.filter is None
+                and plan.agg in ("count", "min", "max")
+                and w.op in ("since", "range")
+            ):
+                return self._get_stat(plan, table)
             # scan hints from the compiled plan: the store's manifest
             # stats prune non-matching files before Spark plans the
             # read (superset contract — plan_to_dataframe still applies
@@ -159,7 +171,6 @@ class ZestEngine:
             # family reads only the files that can hold each series'
             # top n — the reference's newest-shard walk
             # (timeseries.re:250-283) on the one canonical scan.
-            w = plan.window
             tail = None
             if w.op in ("last", "latest"):
                 tail = ("last", w.n if w.op == "last" else 1)
@@ -176,12 +187,33 @@ class ZestEngine:
                 ),
                 sort=plan.agg is None,
             )
-            if plan.window.op == "length":
-                return serializers.length_to_json(df)
             if plan.agg is not None:
                 return serializers.aggregate_to_json(df)
             return serializers.rows_to_json(df, blob=plan.store == "blob")
         raise BadRequest(f"unrecognized GET path {path!r}")
+
+    def _get_stat(self, plan, table: str) -> str:
+        """``length`` and the bare since/range ``count``/``min``/``max``:
+        folded from the manifest stats of the files wholly inside the
+        window, with only the boundary files scanned through the same
+        plan (``ZestStore.window_stat``) — the reference answers length
+        from its index the same way (timeseries.re:310-346)."""
+        w = plan.window
+
+        def scan(df):
+            return plan_to_dataframe(plan, df).collect()[0][0]
+
+        value = self.store.window_stat(
+            table,
+            plan.agg or "length",
+            set(plan.ids),
+            scan,
+            since_ms=w.from_ms,
+            until_ms=w.to_ms,
+        )
+        if w.op == "length":
+            return serializers.length_value_to_json(value)
+        return serializers.result_to_json(value)
 
     def _get_kv(self, kind: str, parts: list[str]) -> str:
         kv = self.store.load(f"kv_{kind}")

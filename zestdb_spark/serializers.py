@@ -76,23 +76,29 @@ def rows_to_json(df: DataFrame, blob: bool = False) -> str:
 
 
 def aggregate_to_json(df: DataFrame) -> str:
-    """1-row {result} frame → ``{"result": x}``; empty/NULL/NaN → ``{}``.
+    """1-row {result} frame → ``{"result": x}``; empty/NULL/NaN → ``{}``."""
+    rows = df.collect()  # 1 row by construction
+    return result_to_json(rows[0]["result"] if rows else None)
+
+
+def result_to_json(val) -> str:
+    """An aggregate's value → ``{"result": x}``; None/NaN → ``{}``.
 
     NULL arises from aggregating zero rows (and from stddev_samp over a
     single row, where Oml returns nan — both render as the reference's
     empty-object result, src/numeric.re:26)."""
-    rows = df.collect()  # 1 row by construction
-    if not rows or rows[0]["result"] is None:
-        return "{}"
-    val = rows[0]["result"]
-    if isinstance(val, float) and math.isnan(val):
+    if val is None or (isinstance(val, float) and math.isnan(val)):
         return "{}"
     return json.dumps({"result": float(val)})
 
 
 def length_to_json(df: DataFrame) -> str:
     rows = df.collect()
-    return json.dumps({"length": int(rows[0]["length"]) if rows else 0})
+    return length_value_to_json(int(rows[0]["length"]) if rows else 0)
+
+
+def length_value_to_json(n: int) -> str:
+    return json.dumps({"length": int(n)})
 
 
 def count_to_json(df: DataFrame) -> str:

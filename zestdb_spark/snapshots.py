@@ -445,6 +445,45 @@ def tail_files(files, stats: dict, mode: str, n: int) -> "tuple[list[str], int |
     return [rel for rel in files if rel in keep], bound
 
 
+def window_files(
+    files, stats: dict, series, since=None, until=None
+) -> "tuple[list[str], list[str]]":
+    """Split candidate files of a windowed read of ``series`` into
+    ``(covered, boundary)`` — the reference answers ``length`` from its
+    index without reading data (src/timeseries/timeseries.re:310-346);
+    this decides from manifest stats which files can be answered that
+    way, before any file is opened.
+
+    ``files`` are the files that MAY hold a matching row (the caller's
+    series/window pruning already ran). A file is *covered* when its
+    stats prove every row it holds matches: its ``series_id=`` relpath
+    names a requested series, ``rows`` is recorded and, when the window
+    has a bound, the timestamp bounds lie inside the inclusive window
+    with a null count recorded as 0 (a null timestamp matches no
+    bound). Every other file is *boundary*. Never prunes blind: missing
+    evidence only ever makes a file boundary. Both lists keep input
+    order."""
+    covered: "list[str]" = []
+    boundary: "list[str]" = []
+    bounded = since is not None or until is not None
+    for rel in files:
+        st = stats.get(rel) or {}
+        lo = (st.get("min") or {}).get("timestamp")
+        hi = (st.get("max") or {}).get("timestamp")
+        sid = rel_parts(rel).get("series_id")
+        ok = sid in series and st.get("rows") is not None
+        if ok and bounded:
+            ok = (
+                (st.get("nulls") or {}).get("timestamp") == 0
+                and lo is not None
+                and hi is not None
+                and (since is None or lo >= since)
+                and (until is None or hi <= until)
+            )
+        (covered if ok else boundary).append(rel)
+    return covered, boundary
+
+
 def commit(
     table_dir: str,
     adds: "list[str]" = (),

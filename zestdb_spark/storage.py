@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import math
 import numbers
 import os
 import shutil
@@ -290,12 +291,18 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
     """Per-file min/max/null-count/rows for ``cols`` read from the
     parquet FOOTER the writer already produced (no data scan). A column
     is dropped from ``min``/``max`` when any row group lacks usable
-    min/max for it (missing stats, non-finite floats, non-scalar types),
-    and from ``nulls`` when any row group lacks a null count — pruning
-    must stay conservative, and a dropped column just means "no claim".
-    Returns None when the footer itself is unreadable."""
-    import math
+    min/max for it (missing stats, non-finite bounds, non-scalar
+    types), and from ``nulls`` when any row group lacks a null count —
+    pruning must stay conservative, and a dropped column just means
+    "no claim".
 
+    NaN: parquet-mr (Spark's writer) lets a NaN into a float column's
+    bounds, so the non-finite check drops them. Other writers (pyarrow,
+    which every driver-side append uses) record finite bounds AROUND a
+    NaN, so a float column from a non-parquet-mr footer keeps its
+    bounds only when the file holds exactly one non-null value there:
+    then finite ``min == max`` is that value and proves there is no
+    NaN. Returns None when the footer itself is unreadable."""
     import pyarrow.parquet as pq
 
     try:
@@ -306,6 +313,7 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
     maxs: dict = {}
     nulls: dict = {}
     no_count: set = set()
+    floats: set = set()
     usable = set(cols)
     for rg_i in range(md.num_row_groups):
         rg = md.row_group(rg_i)
@@ -321,6 +329,8 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
                     nulls.pop(name, None)
             if name not in usable:
                 continue
+            if col.physical_type in ("FLOAT", "DOUBLE"):
+                floats.add(name)
             lo = st.min if st is not None and st.has_min_max else None
             hi = st.max if st is not None and st.has_min_max else None
             bad = (
@@ -337,6 +347,14 @@ def _footer_stats(path: str, cols: tuple) -> "dict | None":
                 continue
             mins[name] = lo if name not in mins else min(mins[name], lo)
             maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+    if not (md.created_by or "").startswith("parquet-mr"):
+        for name in floats & usable:
+            if (
+                name not in nulls
+                or md.num_rows - nulls[name] != 1
+                or mins.get(name) != maxs.get(name)
+            ):
+                usable.discard(name)
     out: dict = {"rows": md.num_rows}
     got = {k for k in usable if k in mins}
     if got:
@@ -1350,6 +1368,68 @@ class ZestStore:
             series=series,
             tail=tail,
         ).select(*[f.name for f in schema.fields])
+
+    def window_stat(
+        self,
+        table: str,
+        agg: str,
+        series,
+        scan,
+        since_ms: Optional[int] = None,
+        until_ms: Optional[int] = None,
+    ):
+        """``length`` (``agg="length"``) or the bare ``count``/``min``/
+        ``max`` of ``value`` over the rows of ``series`` in an inclusive
+        window of a TS table, answered from ONE snapshot. Files whose
+        stats prove every row matches (``snapshots.window_files``) fold
+        those stats: ``length`` is Σrows, ``count`` Σ(rows − null
+        values), ``min``/``max`` the fold of the value bounds. Only the
+        boundary files are read (``_read_files``), and ``scan(frame)``
+        is the read's answer over them. No boundary file, no Spark job.
+
+        Returns an int (length), a float (count), or a float or None
+        (min/max over no value); a NaN is Spark's answer (NaN orders
+        above every number). A covered file missing the stat it would
+        fold, or whose folded bound is 0.0, is read instead: pyarrow
+        records 0.0 for a -0.0, and Spark's min/max keep the sign."""
+        snap = self._snapshot(table)
+        if snap is None:
+            return scan(self._read_table(table))
+        candidates = [
+            f
+            for f in snap.files
+            if self._file_may_match(f, snap.stats.get(f), since_ms, until_ms, series)
+        ]
+        covered, boundary = snapshots.window_files(
+            candidates, snap.stats, series, since_ms, until_ms
+        )
+        parts = []
+        for rel in covered:
+            st = snap.stats[rel]
+            if agg == "length":
+                v = st["rows"]
+            elif agg == "count":
+                nulls = (st.get("nulls") or {}).get("value")
+                v = None if nulls is None else st["rows"] - nulls
+            else:  # the file's "min"/"max" value bound
+                v = (st.get(agg) or {}).get("value")
+                v = None if v == 0.0 else v
+            if v is None:
+                boundary.append(rel)
+            else:
+                parts.append(v)
+        if boundary:
+            got = scan(self._read_files(table, boundary))
+            if got is not None:
+                parts.append(got)
+        if agg == "length":
+            return sum(parts)
+        if agg == "count":
+            return float(sum(parts))
+        if not parts:
+            return None
+        pick = min if agg == "min" else max
+        return pick(parts, key=lambda v: (math.isnan(v), v))
 
     def _scan_schema(self, table: str, schema):
         """(read_schema, restore) for a parquet scan of ``table``:
