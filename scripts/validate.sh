@@ -3,6 +3,10 @@
 # scale factors, bench, and plan-audit regeneration.
 set -e
 cd "$(dirname "$0")/.."
+# size the session to this host, as ROADMAP's tier-1 verify line does;
+# unset, get_spark falls back to local[32]
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 echo "== pytest =="
 python -m pytest tests/ -q
 echo "== oracle selfcheck sf0.01 =="
