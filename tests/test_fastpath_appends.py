@@ -209,7 +209,7 @@ def test_kv_local_rewrite_folds_bulk_ingested_files(spark, store):
 def test_kv_local_rewrite_budget_fallback(spark, store, monkeypatch):
     """Past the driver budget the op falls back to the Spark rewrite —
     same answer, no driver materialization."""
-    monkeypatch.setattr(ZestStore, "_KV_LOCAL_MAX_BYTES", 0)
+    monkeypatch.setattr(ZestStore, "_DRIVER_MAX_BYTES", 0)
     store.kv_upsert("json", "BIG", "x", '"1"')
     store.kv_upsert("json", "BIG", "y", '"2"')
     kv = store.load("kv_json").filter("id = 'BIG'")
@@ -296,7 +296,7 @@ def test_catalog_local_upsert_budget_fallback(spark, store, tmp_path, monkeypatc
     for item in items:
         fast.catalog_upsert(item)
 
-    monkeypatch.setattr(ZestStore, "_KV_LOCAL_MAX_BYTES", 0)
+    monkeypatch.setattr(ZestStore, "_DRIVER_MAX_BYTES", 0)
     overwrites: list[str] = []
     real_overwrite = ZestStore._overwrite
 

@@ -23,6 +23,7 @@ through the public table-format recipe.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -34,7 +35,7 @@ from zestdb_spark.api import ZestEngine
 from zestdb_spark.errors import BadRequest
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.storage import _DAY_MS
-from tests.engine_reference import unhinted_get
+from tests.engine_reference import assert_engine_parity, spark_executor, unhinted_get
 
 
 def _mk_rows(spark, spec):
@@ -392,8 +393,7 @@ _TAIL_PATHS = (
 
 
 def _assert_engine_parity(eng, paths=_TAIL_PATHS):
-    for path in paths:
-        assert eng.get(path) == unhinted_get(eng, path), path
+    assert_engine_parity(eng, paths)
 
 
 def test_engine_tail_reads_match_unhinted_plan(spark, tmp_path):
@@ -739,7 +739,8 @@ def _jobs_of(spark, fn):
 def test_covered_stat_reads_start_no_spark_job(spark, tmp_path):
     """A length, or a since count whose files all lie inside the window,
     is folded from manifest stats without a Spark job; a read with
-    boundary files scans exactly those files."""
+    boundary files reads exactly those files, on the driver with no job
+    or, over the driver budget, in one Spark scan."""
     eng = ZestEngine(spark, str(tmp_path / "s"))
     for d in range(3):
         for i in range(2):
@@ -772,6 +773,20 @@ def test_covered_stat_reads_start_no_spark_job(spark, tmp_path):
     )
     snapshots.commit(table_dir, adds=[rel])
     store = eng.store
+    # on the driver: only the boundary file is read, and no job runs
+    asked = []
+    local_files = store.local_files
+
+    def spy_local(table, keys, rels=None, **hints):
+        asked.append(rels)
+        return local_files(table, keys, rels, **hints)
+
+    store.local_files = spy_local
+    got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/since/{_DAY_MS}/max"))
+    assert (got, jobs) == ('{"result": 9.5}', 0)
+    assert asked == [[rel]]
+    del store.local_files
+    # over the driver budget: one Spark scan of exactly that file
     frames = []
     read_files = store._read_files
 
@@ -781,7 +796,8 @@ def test_covered_stat_reads_start_no_spark_job(spark, tmp_path):
         return df
 
     store._read_files = spy
-    got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/since/{_DAY_MS}/max"))
+    with spark_executor():
+        got, jobs = _jobs_of(spark, lambda: eng.get(f"/ts/s/since/{_DAY_MS}/max"))
     assert got == '{"result": 9.5}' and jobs >= 1
     (df,) = frames
     assert [os.path.basename(f) for f in df.inputFiles()] == ["part-nostats.parquet"]
@@ -810,3 +826,241 @@ def test_driver_batch_with_nan_keeps_no_value_bounds(spark, tmp_path):
     snap = eng.store._snapshot("ts_numeric")
     (rel,) = [r for r in snap.files if r.startswith("series_id=m/")]
     assert snap.stats[rel]["max"]["value"] == 4.0
+
+
+# ------------------------------------------------ driver-side executor
+
+_WINDOWS = (
+    "latest",
+    "earliest",
+    "last/3",
+    "first/3",
+    "since/0",
+    f"range/250/{_DAY_MS + 300}",
+    "range/20000/30000",  # empty window
+)
+_FILTERS = ("", "/filter/k/equals/x", "/filter/k/contains/x")
+_FNS = ("",) + tuple(f"/{a}" for a in ("sum", "count", "min", "max", "mean", "median", "sd"))
+
+
+def _mk_matrix_engine(spark, root):
+    """``_mk_stat_engine``'s edges (ties on file edges, null timestamps
+    and values, NaN from both writers, ±0.0, a stat-less file) plus a
+    NaN and a tagged value tied at one timestamp of b."""
+    eng = _mk_stat_engine(spark, root)
+    eng.post("/ts/b/at/15", {"value": 2.0, "k": "xy"})
+    eng.post("/ts/b/at/15", {"value": float("nan"), "k": "x"})
+    return eng
+
+
+def _fallback_spy(monkeypatch):
+    """Plans the driver read within its budget but could not answer
+    identically (``Fallback``), so Spark ran them."""
+    from zestdb_spark.plans import driver
+
+    fell = []
+    real = driver.answer
+
+    def spy(plan, parts):
+        try:
+            return real(plan, parts)
+        except driver.Fallback:
+            fell.append(plan)
+            raise
+
+    monkeypatch.setattr(driver, "answer", spy)
+    return fell
+
+
+def test_driver_matrix_matches_unhinted_plan(spark, tmp_path, monkeypatch):
+    """Every window op x {no filter, equals, contains} x every aggregate,
+    over ties, null timestamps and values, NaN at a tied timestamp,
+    stat-less files and a missing series: the driver's JSON equals the
+    Spark plan's, byte for byte, and so does the Spark executor's.
+    Only ``sd`` may fall back (a NaN input, or a deviation whose Spark
+    rounding could floor either way)."""
+    from zestdb_spark.plans import compile_path
+
+    eng = _mk_matrix_engine(spark, str(tmp_path / "s"))
+    fell = _fallback_spy(monkeypatch)
+    paths = [f"/ts/a,b,n,ghost/{w}{f}{a}" for w in _WINDOWS for f in _FILTERS for a in _FNS]
+    assert_engine_parity(eng, paths)
+    fell_back = {p for p in paths if compile_path(p) in fell}
+    assert fell_back and all(p.endswith("/sd") for p in fell_back), sorted(fell_back)
+
+
+def test_driver_signed_zeros_duplicates_and_restore(spark, tmp_path, monkeypatch):
+    """-0.0 alone is answered on the driver with its sign; a -0.0 beside
+    a +0.0, whose order Spark leaves to its input, falls back. Duplicate
+    ids read once. Delete then restore keeps both executors equal."""
+    from zestdb_spark.plans import compile_path
+
+    eng = _mk_matrix_engine(spark, str(tmp_path / "s"))
+    fell = _fallback_spy(monkeypatch)
+    zeros = [f"/ts/zn/{w}{a}" for w in _WINDOWS for a in _FNS]
+    assert_engine_parity(eng, zeros)
+    assert eng.get("/ts/zn/latest") == '[{"timestamp": 20, "data": {"value": -3.0}}]'
+    assert eng.get("/ts/zn/since/0/median") == '{"result": -1.5}'
+    assert not fell
+    mixed = ["/ts/zn,zp/since/0", "/ts/zn,zp/since/0/median", "/ts/zn,zp/first/3"]
+    assert_engine_parity(eng, mixed)
+    assert {compile_path(p) for p in mixed} <= set(fell)
+    dup = ["/ts/a,a/latest", "/ts/a,a/since/0/sum", "/ts/b,b,ghost/last/2", "/ts/a,a/length"]
+    assert_engine_parity(eng, dup)
+    assert eng.get("/ts/a,a/last/2") == eng.get("/ts/a/last/2")
+
+    pre = eng.store.history("ts_numeric")[0].version
+    eng.delete("/ts/a/range/300/1100")
+    eng.delete(f"/ts/b/since/{_DAY_MS}")
+    subset = [f"/ts/a,b/{w}{a}" for w in _WINDOWS for a in ("", "/sum", "/mean", "/median", "/max")]
+    assert_engine_parity(eng, subset)
+    eng.store.restore("ts_numeric", pre)
+    assert_engine_parity(eng, subset)
+
+
+def test_driver_blob_matrix_matches_unhinted_plan(spark, tmp_path, monkeypatch):
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for i in range(6):
+        eng.post(f"/ts/blob/bx/at/{1000 + (i // 2) * 10}", {"seq": i})
+    for i in range(3):
+        eng.post(f"/ts/blob/by/at/{i * _DAY_MS}", [i])
+    fell = _fallback_spy(monkeypatch)
+    paths = [f"/ts/blob/{ids}/{w}" for ids in ("bx", "bx,by,bx,ghost") for w in _WINDOWS]
+    paths += ["/ts/blob/ghost/latest", "/ts/blob/bx/last/5000", "/ts/blob/bx,by/length"]
+    assert_engine_parity(eng, paths)
+    assert not fell
+
+
+def test_driver_aggregates_pin_spark_semantics(spark, tmp_path):
+    """The Spark semantics the driver reproduces, as Spark answers them."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    eng.post("/ts/q/at/1", {"value": 0.1234565})
+    eng.post("/ts/nan/at/1", {"value": 1.0})
+    eng.post("/ts/nan/at/2", {"value": float("nan")})
+    for i, v in enumerate((1.0, 2.0, 4.0)):
+        eng.post(f"/ts/sd/at/{i}", {"value": v})
+    eng.post("/ts/one/at/1", {"value": 3.0})
+    want = {
+        # each double casts through its shortest repr to decimal(38,6),
+        # HALF_UP: Decimal(0.1234565) would quantize to 0.123456
+        "/ts/q/since/0/sum": '{"result": 0.123457}',
+        "/ts/q/since/0/mean": '{"result": 0.123457}',
+        # NaN drops out of sum but counts in mean's divisor
+        "/ts/nan/since/0/sum": '{"result": 1.0}',
+        "/ts/nan/since/0/mean": '{"result": 0.5}',
+        # percentile interpolation between 1.0 and NaN
+        "/ts/nan/since/0/median": "{}",
+        "/ts/nan/since/0/count": '{"result": 2.0}',
+        "/ts/nan/since/0/max": "{}",
+        "/ts/nan/since/0/min": '{"result": 1.0}',
+        # floor(stddev_samp * 1e6) / 1e6; n < 2 is empty
+        "/ts/sd/since/0/sd": '{"result": 1.527525}',
+        "/ts/sd/since/0/median": '{"result": 2.0}',
+        "/ts/sd/range/1/2/median": '{"result": 3.0}',
+        "/ts/one/since/0/sd": "{}",
+        "/ts/ghost/since/0/mean": "{}",
+    }
+    for path, answer in want.items():
+        assert unhinted_get(eng, path) == answer, path
+    assert_engine_parity(eng, list(want))
+
+
+def test_driver_reads_start_no_spark_job(spark, tmp_path):
+    """Driver-served GETs run no Spark job: latest, last/50/filter,
+    since/…/mean, range/…/median, a since max with a boundary file, and
+    KV keys/count/point reads."""
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for d in range(3):
+        for i in range(3):
+            eng.post(
+                f"/ts/s/at/{d * _DAY_MS + i * 10}",
+                {"value": float(d * 3 + i) + 0.25, "k": str(i)},
+            )
+    # a two-row file straddling the since bound below: a boundary file
+    eng.store._append_ts_local(
+        "ts_numeric", [("s", _DAY_MS + 1, 7.5, None, None), ("s", _DAY_MS + 9, 8.5, None, None)], 2
+    )
+    eng.post("/kv/ns/b", {"v": 2})
+    eng.post("/kv/ns/a", {"v": 1})
+    eng.get("/ts/s/latest")
+    paths = (
+        "/ts/s/latest",
+        "/ts/s/last/50/filter/k/equals/1",
+        f"/ts/s/since/{_DAY_MS}/mean",
+        f"/ts/s/range/0/{2 * _DAY_MS}/median",
+        f"/ts/s/since/{_DAY_MS + 5}/max",  # bucket 1 straddles the bound
+        "/kv/ns/keys",
+        "/kv/ns/count",
+        "/kv/ns/a",
+        "/kv/ghost/keys",
+    )
+    for path in paths:
+        got, jobs = _jobs_of(spark, lambda: eng.get(path))
+        assert jobs == 0, path
+        with spark_executor():
+            assert eng.get(path) == got, path
+    assert eng.get("/kv/ns/keys") == '["a", "b"]'
+    assert eng.get("/kv/ns/a") == '{"v": 1}'
+
+
+def test_driver_fallbacks_answer_as_spark(spark, tmp_path, monkeypatch):
+    """Over the budget, a file vacuumed between snapshot resolution and
+    the read, KV keys over two files, and a sum outside decimal(38,6):
+    each read runs its Spark plan and answers exactly as Spark does."""
+    from pyspark.errors import ArithmeticException
+
+    from zestdb_spark.storage import ZestStore
+
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    for i in range(4):
+        eng.post(f"/ts/s/at/{1000 + i}", {"value": float(i)})
+    eng.get("/ts/s/latest")
+    path = "/ts/s/since/0/mean"
+
+    monkeypatch.setattr(ZestStore, "_DRIVER_MAX_BYTES", 0)
+    got, jobs = _jobs_of(spark, lambda: eng.get(path))
+    assert got == unhinted_get(eng, path) == '{"result": 1.5}' and jobs >= 1
+    monkeypatch.undo()
+
+    # a racing rewrite + vacuum reclaims a file of the resolved snapshot
+    store = eng.store
+    local_files = store.local_files
+
+    def racing(table, keys, rels=None, **hints):
+        out = local_files(table, keys, rels, **hints)
+        if table == "ts_numeric":
+            eng.delete("/ts/s/range/1003/1003")
+            store.vacuum("ts_numeric", retention_s=0)
+        return out
+
+    monkeypatch.setattr(store, "local_files", racing)
+    got, jobs = _jobs_of(spark, lambda: eng.get(path))
+    monkeypatch.undo()
+    assert got == unhinted_get(eng, path) == '{"result": 1.0}' and jobs >= 1
+
+    # KV keys keep the Spark read's order: a namespace of two files
+    # stays on Spark
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    eng.post("/kv/ns/b", {"v": 2})
+    rel = "id=ns/part-extra.parquet"
+    pq.write_table(
+        pa.table({"key": pa.array(["a"]), "value": pa.array(['{"v": 1}'])}),
+        os.path.join(store._path("kv_json"), rel),
+    )
+    store._commit("kv_json", adds=[rel], op="append")
+    got, jobs = _jobs_of(spark, lambda: eng.get("/kv/ns/keys"))
+    assert sorted(json.loads(got)) == ["a", "b"] and jobs >= 1
+    assert eng.get("/kv/ns/count") == '{"count": 2}'
+
+    eng.post("/ts/big/at/1", {"value": 1e33})
+    eng.post("/ts/big/at/2", {"value": 1.0})
+    for agg in ("sum", "mean"):
+        errors = []
+        for ctx in (contextlib.nullcontext(), spark_executor()):
+            with ctx, pytest.raises(ArithmeticException) as exc:
+                eng.get(f"/ts/big/since/0/{agg}")
+            errors.append(exc.value.getCondition())
+        assert errors[0] == errors[1]
+        assert errors[0].startswith("NUMERIC_VALUE_OUT_OF_RANGE")

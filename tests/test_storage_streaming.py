@@ -1,13 +1,10 @@
 """Engine-storage ↔ streaming integration: writes through ZestStore are
-immediately consumable as a Structured Stream (ST1 at scale), and the
-salted top-k equals the plain top-k."""
+immediately consumable as a Structured Stream (ST1 at scale)."""
 
 from __future__ import annotations
 
-import pytest
 import pyspark.sql.functions as F
 
-from zestdb_spark.operators import ts_read
 from zestdb_spark.storage import ZestStore
 
 
@@ -44,17 +41,3 @@ def test_store_dir_is_streaming_source(spark, tmp_path):
     finally:
         q.stop()
 
-
-def test_salted_topk_equals_plain_topk(ts):
-    plain = sorted(tuple(r) for r in ts_read.read_last(ts, ["sensor1", "sensor2"], 3).collect())
-    salted = sorted(
-        tuple(r) for r in ts_read.read_last_salted(ts, ["sensor1", "sensor2"], 3, salt_buckets=4).collect()
-    )
-    assert salted == plain
-
-
-@pytest.mark.parametrize("n", [1, 2, 100])
-def test_salted_topk_overcount_and_latest(ts, n):
-    plain = sorted(tuple(r) for r in ts_read.read_last(ts, ["pair"], n).collect())
-    salted = sorted(tuple(r) for r in ts_read.read_last_salted(ts, ["pair"], n).collect())
-    assert salted == plain

@@ -4,6 +4,8 @@ layout (SURVEY §7.3). Must return exactly the canonical last/n row set
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -12,7 +14,7 @@ from zestdb_spark.api import ZestEngine
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.sources import register
 from zestdb_spark.sources.tail_source import ZestTailReader, _series_dirs
-from tests.engine_reference import unhinted_get
+from tests.engine_reference import assert_engine_parity, spark_executor
 
 
 @pytest.fixture(scope="module")
@@ -121,10 +123,11 @@ def test_duplicate_series_not_doubled(spark, store):
 
 
 def test_engine_last_family_matches_unhinted_plan(spark, tmp_path):
-    """ZestEngine serves the last/first family through the canonical
-    scan with the manifest tail hint; its reference-shaped JSON must
-    equal the plan over the unhinted scan, incl. composed filter/agg
-    pipelines."""
+    """ZestEngine serves the last/first family from the files the
+    manifest tail hint keeps, on the driver (read_tail/top_n, the
+    source's reader) or in one Spark scan; its reference-shaped JSON
+    must equal the plan over the unhinted scan on both, incl. composed
+    filter/agg pipelines."""
     eng = ZestEngine(spark, str(tmp_path / "s"))
     day = 86_400_000
     for d in range(3):
@@ -142,15 +145,14 @@ def test_engine_last_family_matches_unhinted_plan(spark, tmp_path):
         "/ts/s1/last/1000/sum",
         "/ts/ghost/last/3",
     ):
-        assert eng.get(path) == unhinted_get(eng, path), path
+        assert_engine_parity(eng, [path])
 
 
 def test_engine_blob_last_family_matches_unhinted_plan(spark, tmp_path):
     eng = ZestEngine(spark, str(tmp_path / "s"))
     for i in range(6):
         eng.post(f"/ts/blob/bx/at/{i * 40_000_000}", {"seq": i, "tags": [i, i + 1]})
-    for path in ("/ts/blob/bx/latest", "/ts/blob/bx/last/4", "/ts/blob/bx/first/2"):
-        assert eng.get(path) == unhinted_get(eng, path), path
+    assert_engine_parity(eng, ["/ts/blob/bx/latest", "/ts/blob/bx/last/4", "/ts/blob/bx/first/2"])
 
 
 def test_statless_row_groups_always_read(spark, tmp_path):
@@ -210,3 +212,83 @@ def test_reader_skips_old_row_groups(spark, store):
     # 5 buckets exist for the series; at most 2 groups may be read
     # (the newest, plus one tie-check neighbour)
     assert len(read_calls) <= 2
+
+
+def test_nan_at_a_tied_timestamp_orders_as_canonical(spark, tmp_path):
+    """Spark orders NaN above +inf (``_order_cols``); pyarrow's sort puts
+    it beside the nulls. The shared top-n (``plans.driver.top_n``) must
+    order as Spark does, for the source and the engine alike."""
+    import json
+
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    eng.post("/ts/s/at/1000", {"value": 1.0})
+    eng.post("/ts/s/at/1000", {"value": float("nan")})
+    eng.post("/ts/s/at/500", {"value": 2.0})
+    register(spark)
+
+    def values(df):
+        rows = sorted(df.collect(), key=lambda r: r.timestamp)
+        return [r.value for r in rows]
+
+    def source(n, mode):
+        return (
+            spark.read.format("zest_tail")
+            .option("root", eng.store._path("ts_numeric"))
+            .option("series", "s")
+            .option("n", n)
+            .option("mode", mode)
+            .load()
+        )
+
+    (latest,) = values(source(1, "last"))
+    assert latest != latest  # NaN
+    assert values(source(2, "first")) == [2.0, 1.0]
+    for executor in (contextlib.nullcontext(), spark_executor()):
+        with executor:
+            got = json.loads(eng.get("/ts/s/latest"))
+            assert len(got) == 1 and got[0]["data"]["value"] != got[0]["data"]["value"]
+            got = json.loads(eng.get("/ts/s/first/2"))
+            assert [r["data"]["value"] for r in got] == [2.0, 1.0]
+    assert_engine_parity(eng, ["/ts/s/latest", "/ts/s/first/2", "/ts/s/last/2", "/ts/s/earliest"])
+
+
+def test_first_mode_reads_null_timestamp_groups(spark, tmp_path):
+    """Null timestamps sort first in "first" order: a row group holding
+    one is read whatever its min-timestamp stat says, so the source
+    answers first/1 with the null row, as the canonical read does."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zestdb_spark.operators import ts_read
+
+    eng = ZestEngine(spark, str(tmp_path / "s"))
+    eng.post("/ts/s/at/100", {"value": 1.0})
+    eng.post("/ts/s/at/200", {"value": 2.0})
+    rel = "series_id=s/time_bucket=0/part-nulls.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "timestamp": pa.array([None, 3000], pa.int64()),
+                "value": pa.array([7.0, 8.0]),
+                "tag_name": pa.array([None, None], pa.string()),
+                "tag_value": pa.array([None, None], pa.string()),
+                "write_id": pa.array([None, None], pa.int64()),
+            }
+        ),
+        os.path.join(eng.store._path("ts_numeric"), rel),
+    )
+    eng.store._commit("ts_numeric", adds=[rel], op="append")
+    register(spark)
+    got = (
+        spark.read.format("zest_tail")
+        .option("root", eng.store._path("ts_numeric"))
+        .option("series", "s")
+        .option("n", 1)
+        .option("mode", "first")
+        .load()
+    )
+    want = ts_read.read_first(eng.store.load("ts_numeric"), ["s"], 1)
+    assert _key_set(got) == _key_set(want) == {("s", None, 7.0, None, None)}
+    assert_engine_parity(eng, ["/ts/s/earliest", "/ts/s/first/2", "/ts/s/latest"])

@@ -11,14 +11,22 @@ Results are reference-shaped JSON strings (serializers.py). ``length``
 and the unfiltered ``count``/``min``/``max`` over since/range windows
 are the manifest fold (``ZestStore.window_stat``): files whose stats
 put every row inside the window answer from those stats, and only the
-boundary files are scanned, so a read with none runs no Spark job.
-Every other TS read is one canonical scan: ``ZestStore.load`` with the
-compiled plan's scan hints (series, time window, and for
-last/first/latest/earliest the manifest ``tail`` hint), then
-``plan_to_dataframe``. For DataFrame
-access (the analytics path) use the plans/operators modules or the
-``zest_tail`` source directly; this facade is the compatibility layer a
-reference client would hit.
+boundary files are read. Every other TS read takes the files ONE
+snapshot keeps for the compiled plan's scan hints (series, time window,
+and for last/first/latest/earliest the manifest ``tail`` hint).
+
+Control-plane-sized reads run on the driver with the same contract,
+as control-plane-sized writes do: when those files total at most
+``ZestStore._DRIVER_MAX_BYTES`` (``ZestStore.local_files``),
+``plans.driver`` evaluates the compiled plan over them with pyarrow and
+no Spark job runs. That covers the TS reads, ``window_stat``'s
+boundary files, and one namespace's KV ``keys``/``count``/point reads.
+Above the budget, and for any input the driver cannot answer
+identically (``plans.driver.Fallback``), the read is one Spark scan:
+``ZestStore.load`` with the same hints, then ``plan_to_dataframe``.
+For DataFrame access (the analytics path) use the plans/operators
+modules or the ``zest_tail`` source directly; this facade is the
+compatibility layer a reference client would hit.
 """
 
 from __future__ import annotations
@@ -27,6 +35,9 @@ import json
 import socket
 from typing import Any, Optional
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from zestdb_spark import serializers
@@ -34,9 +45,15 @@ from zestdb_spark.errors import BadRequest, ZestError
 from zestdb_spark.operators import catalog as cat_ops
 from zestdb_spark.operators import kv as kv_ops
 from zestdb_spark.plans import compile_path, plan_to_dataframe, plan_to_path
+from zestdb_spark.plans import driver
 from zestdb_spark.plans import zestql as zql
 from zestdb_spark.storage import ZestStore, now_ms
 from zestdb_spark.streaming.observe import ObserverRegistry
+
+
+def _kv_value(value) -> str:
+    """A KV value as the GET answers it: binary values decode as latin-1."""
+    return bytes(value).decode("latin-1") if isinstance(value, (bytes, bytearray)) else value
 
 
 class ZestEngine:
@@ -58,8 +75,6 @@ class ZestEngine:
         #: reproduce the reference's delete-by-timestamp collateral
         #: quirk (SURVEY.md §2.7 D1) when True
         self.compat_collateral_delete = compat_collateral_delete
-        #: per-request content-format (set by get/post/delete)
-        self._format: Optional[str] = None
 
     # ----------------------------------------------------------- plumbing
 
@@ -131,8 +146,7 @@ class ZestEngine:
         src/prov.re:30-36); default json."""
         try:
             self.authorize("GET", path, token)
-            self._format = content_format
-            result = self._get(path)
+            result = self._get(path, content_format)
         except ZestError as e:
             self._audit("GET", path, e.code, client)
             raise
@@ -140,7 +154,7 @@ class ZestEngine:
         self.observers.publish_data(path, result)
         return result
 
-    def _get(self, path: str) -> str:
+    def _get(self, path: str, content_format: Optional[str]) -> str:
         parts = path.split("/")
         # M3 service endpoints (src/server.re:68-72,594-632)
         if path == "/uptime":
@@ -153,7 +167,7 @@ class ZestEngine:
             return cat_ops.render(self.store.load("catalog_items"))
 
         if len(parts) >= 3 and parts[1] == "kv":
-            return self._get_kv(self._format or "json", parts)
+            return self._get_kv(content_format or "json", parts)
         if len(parts) >= 3 and parts[1] == "ts":
             plan = compile_path(path)
             table = "ts_numeric" if plan.store == "numeric" else "ts_blob"
@@ -165,43 +179,61 @@ class ZestEngine:
             ):
                 return self._get_stat(plan, table)
             # scan hints from the compiled plan: the store's manifest
-            # stats prune non-matching files before Spark plans the
-            # read (superset contract — plan_to_dataframe still applies
-            # the exact series/window predicates). The last/first
-            # family reads only the files that can hold each series'
-            # top n — the reference's newest-shard walk
-            # (timeseries.re:250-283) on the one canonical scan.
+            # stats prune non-matching files before either executor
+            # reads (superset contract — both still apply the exact
+            # series/window predicates). The last/first family reads
+            # only the files that can hold each series' top n — the
+            # reference's newest-shard walk (timeseries.re:250-283).
             tail = None
             if w.op in ("last", "latest"):
                 tail = ("last", w.n if w.op == "last" else 1)
             elif w.op in ("first", "earliest"):
                 tail = ("first", w.n if w.op == "first" else 1)
-            df = plan_to_dataframe(
-                plan,
-                self.store.load(
-                    table,
-                    since_ms=w.from_ms if w.op in ("since", "range") else None,
-                    until_ms=w.to_ms if w.op == "range" else None,
-                    series=set(plan.ids),
-                    tail=tail,
-                ),
-                sort=plan.agg is None,
-            )
+            hints = {
+                "since_ms": w.from_ms if w.op in ("since", "range") else None,
+                "until_ms": w.to_ms if w.op == "range" else None,
+                "tail": tail,
+            }
+            try:
+                got = self._on_driver(plan, table, **hints)
+            except driver.Fallback:
+                df = plan_to_dataframe(
+                    plan,
+                    self.store.load(table, series=set(plan.ids), **hints),
+                    sort=plan.agg is None,
+                )
+                if plan.agg is not None:
+                    return serializers.aggregate_to_json(df)
+                return serializers.rows_to_json(df, blob=plan.store == "blob")
             if plan.agg is not None:
-                return serializers.aggregate_to_json(df)
-            return serializers.rows_to_json(df, blob=plan.store == "blob")
+                return serializers.result_to_json(got)
+            return serializers.records_to_json(got, blob=plan.store == "blob")
         raise BadRequest(f"unrecognized GET path {path!r}")
+
+    def _on_driver(self, plan, table: str, rels=None, **hints):
+        """``plan``'s answer (``plans.driver.answer``) over the files ONE
+        snapshot keeps for the read; raises ``driver.Fallback`` when the
+        store sends the read to Spark (``ZestStore.local_files``)."""
+        parts = self.store.local_files(table, set(plan.ids), rels, **hints)
+        if parts is None:
+            raise driver.Fallback(f"{table} read is not driver-sized")
+        return driver.answer(plan, parts)
 
     def _get_stat(self, plan, table: str) -> str:
         """``length`` and the bare since/range ``count``/``min``/``max``:
         folded from the manifest stats of the files wholly inside the
-        window, with only the boundary files scanned through the same
+        window, with only the boundary files read through the same
         plan (``ZestStore.window_stat``) — the reference answers length
         from its index the same way (timeseries.re:310-346)."""
         w = plan.window
 
-        def scan(df):
-            return plan_to_dataframe(plan, df).collect()[0][0]
+        def scan(rels, frame):
+            if rels is not None:
+                try:
+                    return self._on_driver(plan, table, rels)
+                except driver.Fallback:
+                    pass
+            return plan_to_dataframe(plan, frame()).collect()[0][0]
 
         value = self.store.window_stat(
             table,
@@ -216,18 +248,56 @@ class ZestEngine:
         return serializers.result_to_json(value)
 
     def _get_kv(self, kind: str, parts: list[str]) -> str:
-        kv = self.store.load(f"kv_{kind}")
+        table = f"kv_{kind}"
+        if len(parts) == 4 and kind in ("json", "text", "binary"):
+            try:
+                return self._get_kv_local(table, parts[2], parts[3])
+            except driver.Fallback:
+                pass
+        kv = self.store.load(table)
         if len(parts) == 4 and parts[3] == "keys":
             return serializers.keys_to_json(kv_ops.keys(kv, parts[2]))
         if len(parts) == 4 and parts[3] == "count":
             return serializers.count_to_json(kv_ops.count(kv, parts[2]))
         if len(parts) == 4:
             rows = kv_ops.read(kv, parts[2], parts[3]).collect()
-            if not rows:
-                return ""
-            value = rows[0]["value"]
-            return bytes(value).decode("latin-1") if isinstance(value, (bytes, bytearray)) else value
+            return _kv_value(rows[0]["value"]) if rows else ""
         raise BadRequest(f"unrecognized KV path {'/'.join(parts)!r}")
+
+    def _get_kv_local(self, table: str, ns: str, op: str) -> str:
+        """One namespace's ``keys``/``count``/point read on the driver.
+        ``keys`` keeps the Spark read's order, the file's row order, so
+        a namespace of several files or row groups (several scan
+        splits) stays on Spark; so does a point read that matches more
+        than one row."""
+        parts = self.store.local_files(table, {ns})
+        if parts is None:
+            raise driver.Fallback(f"{table} namespace is not driver-sized")
+        paths = parts.get(ns, [])
+        try:
+            if op == "count":
+                rows = 0
+                for path in paths:
+                    with pq.ParquetFile(path) as f:
+                        rows += f.metadata.num_rows
+                return json.dumps({"count": rows})
+            col = "key" if op == "keys" else "value"
+            got = []
+            for path in paths:
+                with pq.ParquetFile(path) as f:
+                    if op == "keys" and (len(paths) > 1 or f.num_row_groups > 1):
+                        raise driver.Fallback("keys over several scan splits")
+                    t = f.read(columns=["key", "value"])
+                if op != "keys":
+                    t = t.filter(pc.equal(t["key"], op))
+                got += t[col].to_pylist()
+        except (OSError, KeyError, ValueError, pa.ArrowException) as e:
+            raise driver.Fallback(f"unreadable namespace: {e}") from e
+        if op == "keys":
+            return json.dumps(got)
+        if len(got) > 1:
+            raise driver.Fallback("several rows for one key")
+        return _kv_value(got[0]) if got else ""
 
     # --------------------------------------------------------------- POST
 
@@ -243,16 +313,15 @@ class ZestEngine:
         payload type: bytes→binary, str→text, JSON values→json."""
         try:
             self.authorize("POST", path, token)
-            self._format = content_format
             self.store.set_request_context("POST", path, client, content_format)
-            self._post(path, payload)
+            self._post(path, payload, content_format)
         except ZestError as e:
             self._audit("POST", path, e.code, client)
             raise
         self._audit("POST", path, 65, client)  # 65 = Created
         self.observers.publish_data(path, payload)
 
-    def _post(self, path: str, payload: Any) -> None:
+    def _post(self, path: str, payload: Any, content_format: Optional[str]) -> None:
         parts = path.split("/")
         if path == "/cat":
             self.store.catalog_upsert(payload)
@@ -273,7 +342,7 @@ class ZestEngine:
                 raise BadRequest(f"unrecognized ts write path {path!r}")
             return
         if len(parts) == 4 and parts[1] == "kv":
-            kind = self._format
+            kind = content_format
             if kind is None:
                 kind = (
                     "binary"
@@ -301,15 +370,14 @@ class ZestEngine:
     ) -> None:
         try:
             self.authorize("DELETE", path, token)
-            self._format = content_format
             self.store.set_request_context("DELETE", path, client, content_format)
-            self._delete(path)
+            self._delete(path, content_format)
         except ZestError as e:
             self._audit("DELETE", path, e.code, client)
             raise
         self._audit("DELETE", path, 66, client)  # 66 = Deleted
 
-    def _delete(self, path: str) -> None:
+    def _delete(self, path: str, content_format: Optional[str]) -> None:
         parts = path.split("/")
         if len(parts) >= 3 and parts[1] == "kv":
             if len(parts) > 4:
@@ -317,7 +385,7 @@ class ZestEngine:
                 # reads: /kv/ns/key/typo must error, not delete 'key'
                 raise BadRequest(f"unrecognized KV path {path!r}")
             self.store.kv_delete(
-                self._format or "json", parts[2], parts[3] if len(parts) > 3 else None
+                content_format or "json", parts[2], parts[3] if len(parts) > 3 else None
             )
             return
         if len(parts) >= 3 and parts[1] == "ts":

@@ -82,8 +82,7 @@ def read_last(df: DataFrame, ids: Sequence[str], n: int) -> DataFrame:
     partition and the shuffle carries ≤ n·series·partitions rows — the
     same protection the earlier salted two-phase variant bought with an
     extra shuffle (measured ~30% slower than this plan at sf0.1 once
-    WindowGroupLimit landed; `read_last_salted` remains for engines
-    without it).
+    WindowGroupLimit landed).
     """
     return _read_topk(df, ids, n, descending=True)
 
@@ -117,50 +116,6 @@ def _read_topk(df: DataFrame, ids: Sequence[str], n: int, descending: bool) -> D
         .filter(F.col("__rn") <= int(n))
         .drop("__rn")
     )
-
-
-def _read_topk_salted(
-    df: DataFrame, ids: Sequence[str], n: int, descending: bool, salt_buckets: int = 64
-) -> DataFrame:
-    """Two-phase per-series top-k for FEW/FAT series (T2/T3 under skew).
-
-    A single ranking window partitioned by series_id puts one giant
-    series on one task. Phase 1 ranks within (series_id, salt) — salt
-    derived deterministically from the row (xxhash64 of all columns) so
-    the hot series spreads over ``salt_buckets`` tasks; each bucket
-    keeps its local top-n. Phase 2 ranks the ≤ buckets·n survivors per
-    series — a tiny window. Same result set as the plain window (any
-    global top-n row is also top-n within its bucket); costs one extra
-    (small) shuffle — measured ~20% faster even on local[32] with 3 fat
-    series, and the gap grows with executor count.
-    """
-    sel = select_series(df, ids)
-    salt = (F.xxhash64(*[F.col(c) for c in sel.columns]) % salt_buckets).alias("__salt")
-    w1 = Window.partitionBy("series_id", "__salt").orderBy(*_order_cols(sel, descending))
-    local = (
-        sel.withColumn("__salt", salt)
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") <= int(n))
-        .drop("__rn", "__salt")
-    )
-    w2 = Window.partitionBy("series_id").orderBy(*_order_cols(sel, descending))
-    return (
-        local.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= int(n))
-        .drop("__rn")
-    )
-
-
-def read_last_salted(
-    df: DataFrame, ids: Sequence[str], n: int, salt_buckets: int = 64
-) -> DataFrame:
-    return _read_topk_salted(df, ids, n, True, salt_buckets)
-
-
-def read_first_salted(
-    df: DataFrame, ids: Sequence[str], n: int, salt_buckets: int = 64
-) -> DataFrame:
-    return _read_topk_salted(df, ids, n, False, salt_buckets)
 
 
 def read_latest(df: DataFrame, ids: Sequence[str]) -> DataFrame:

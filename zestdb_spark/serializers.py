@@ -10,19 +10,20 @@ reference's wire shapes (docs/README.md:118):
 - KV count   → ``{"count": <int>}``; KV keys → array of strings
   (src/keyvalue/keyvalue.re:35-36, keys.re:32-45)
 
-The ``iter_*`` generators stream with ``toLocalIterator``;
 ``rows_to_json`` necessarily buffers the rendered rows (one JSON array
 string has to exist in full before it can be returned), so it is for
 API-SIZED results only — top-k reads and aggregates, the shapes the
 reference's wire protocol actually returns. A full-corpus result
-belongs in a DataFrame write, never in this module.
+belongs in a DataFrame write, never in this module. A read answered
+on the driver (plans/driver.py) renders its row dicts through
+``records_to_json`` and its aggregate through ``result_to_json``, the
+same shaping.
 """
 
 from __future__ import annotations
 
 import json
 import math
-from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -56,23 +57,19 @@ def _shape_blob(d: dict[str, Any]) -> dict[str, Any]:
     return {"timestamp": d["timestamp"], "data": json.loads(d["data"])}
 
 
-def iter_ts_rows(df: DataFrame) -> Iterator[dict[str, Any]]:
-    """Numeric-TS result rows → reference row dicts, streamed."""
-    return (_shape_ts(row.asDict()) for row in _stream(df))
-
-
-def iter_blob_rows(df: DataFrame) -> Iterator[dict[str, Any]]:
-    return (_shape_blob(row.asDict()) for row in _stream(df))
-
-
 def rows_to_json(df: DataFrame, blob: bool = False) -> str:
     """API-sized by contract (see module docstring) — the JSON array
     must exist in full anyway, so ``collect()`` beats the local
     iterator's per-batch protocol round trips (~0.3 s on a top-k
-    read). The ``iter_*`` generators share the same row shaping for
-    callers that truly stream."""
+    read)."""
+    return records_to_json([r.asDict() for r in df.collect()], blob)
+
+
+def records_to_json(records: "list[dict[str, Any]]", blob: bool = False) -> str:
+    """Result rows as column-name dicts, in presentation order → the
+    reference's row array."""
     shape = _shape_blob if blob else _shape_ts
-    return json.dumps([shape(r.asDict()) for r in df.collect()])
+    return json.dumps([shape(r) for r in records])
 
 
 def aggregate_to_json(df: DataFrame) -> str:

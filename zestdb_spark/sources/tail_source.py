@@ -25,11 +25,14 @@ restores the reference's access pattern at cluster scale:
   max-stat falls strictly below the running n-th-largest timestamp
   (``<`` not ``≤``, so timestamp ties are still collected and the
   total-order tie-break stays exact). Everything older is never
-  decompressed, never even read beyond its footer.
+  decompressed, never even read beyond its footer. The reader is
+  ``plans.driver.read_tail``, the one the engine's driver-side GETs
+  use.
 - **returning**: Arrow RecordBatches (zero-copy into Spark's vectorized
-  pipeline), already trimmed to the per-series top n under the same
-  total order as operators/ts_read.py (timestamp DESC, value DESC,
-  tag_name DESC, tag_value DESC), so downstream needs no re-window.
+  pipeline), already trimmed to the per-series top n under the total
+  order of operators/ts_read.py ``_order_cols`` (``plans.driver.top_n``:
+  NaN above every number, nulls last for "last", first for "first"),
+  so downstream needs no re-window.
 
 At 100 TB this turns "scan a year, keep 100 rows" into "read ~1 row
 group per series" — I/O proportional to the ANSWER, not the table.
@@ -153,93 +156,16 @@ class ZestTailReader(DataSourceReader):
         if partition is None:  # empty partitions() → one None-partition call
             return iter(())
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        newest = partition.mode == "last"
-        order = "descending" if newest else "ascending"
-        nulls = "at_end" if newest else "at_start"
+        from zestdb_spark.plans.driver import read_tail, top_n
 
-        # canonical (nullable) arrow schema for the data columns: files
-        # written by different jobs may disagree on NULLABILITY alone
-        # (a rewrite's survivor files come out non-null after a filter),
-        # and concat_tables is strict about it — cast unifies
-        _types = {
-            "timestamp": pa.int64(),
-            "value": pa.float64(),
-            "tag_name": pa.string(),
-            "tag_value": pa.string(),
-            "data": pa.string(),
-        }
-        canonical = pa.schema([pa.field(c, _types[c]) for c in partition.cols])
-
-        # footer pass: (boundary stat, file, row-group index) in read
-        # order — newest-max first for 'last', oldest-min first for
-        # 'first'. Footers are KB-sized reads; no data pages yet. One
-        # handle per file, shared with the data pass below and closed
-        # on exit — reopening per pass doubled footer I/O and leaked
-        # descriptors to GC on long-lived executors.
-        open_files: dict[str, pq.ParquetFile] = {
-            path: pq.ParquetFile(path) for path in partition.files
-        }
-        groups: list[tuple[int | None, str, int]] = []
-        for path in partition.files:
-            md = open_files[path].metadata
-            ts_idx = md.schema.names.index("timestamp")
-            for g in range(md.num_row_groups):
-                stats = md.row_group(g).column(ts_idx).statistics
-                # stats can be absent on exotic writers — treat as
-                # always-read rather than silently skipping data
-                if stats is not None and stats.has_min_max:
-                    bound = stats.max if newest else stats.min
-                else:
-                    bound = None
-                groups.append((bound, path, g))
-        # groups WITHOUT stats sort FIRST in both modes: they must be
-        # read unconditionally (their contents are unknown), and the
-        # early-exit break only fires on groups read after the cutoff
-        # is established — sorting them last would let the break skip
-        # them entirely
-        if newest:
-            groups.sort(key=lambda t: (t[0] is not None, -t[0] if t[0] is not None else 0))
-        else:
-            groups.sort(key=lambda t: (t[0] is not None, t[0] if t[0] is not None else 0))
-
-        def past_cutoff(bound: int | None, cutoff: int) -> bool:
-            """True when a group provably holds no top-n row (strict —
-            equality means possible timestamp ties, which the total-order
-            tie-break still needs to see)."""
-            if bound is None:
-                return False
-            return bound < cutoff if newest else bound > cutoff
-
-        batches: list[pa.Table] = []
-        count = 0
-        cutoff = None  # running n-th best timestamp
-        try:
-            for bound, path, g in groups:
-                if count >= partition.n and cutoff is not None and past_cutoff(bound, cutoff):
-                    break
-                t = open_files[path].read_row_group(g, columns=list(partition.cols))
-                batches.append(t.cast(canonical))
-                count += t.num_rows
-                if count >= partition.n:
-                    all_ts = pa.concat_tables(batches)["timestamp"]
-                    topn = pc.sort_indices(all_ts, sort_keys=[("", order)])[: partition.n]
-                    cutoff = pc.take(all_ts.combine_chunks(), topn)[-1].as_py()
-        finally:
-            for f in open_files.values():
-                f.close()
-
-        if not batches:
+        table = top_n(
+            read_tail(partition.files, partition.cols, partition.n, partition.mode),
+            partition.n,
+            partition.mode == "last",
+        )
+        if table.num_rows == 0:
             return iter(())
-        table = pa.concat_tables(batches)
-        idx = pc.sort_indices(
-            table,
-            sort_keys=[(c, order) for c in partition.cols],
-            null_placement=nulls,
-        )[: partition.n]
-        table = table.take(idx)
         table = table.add_column(
             0, "series_id", pa.array([partition.series_id] * table.num_rows)
         )

@@ -427,6 +427,14 @@ class ZestStore:
 
     _READER_CACHE_MAX = 64
 
+    #: driver budget of the control-plane fast paths: a KV namespace or
+    #: catalog rewrite (``_local_fold_rewrite``) and a GET's read
+    #: (``local_files``) run on the driver with pyarrow when the live
+    #: bytes they touch total at most this; larger inputs take the
+    #: Spark path (namespaces and serving reads are api-sized and
+    #: usually KB; bulk-ingested giants keep Spark)
+    _DRIVER_MAX_BYTES = 64 * 1024 * 1024
+
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
@@ -1234,6 +1242,76 @@ class ZestStore:
             )
         return snap
 
+    def _scan_files(
+        self, table: str, snap, since_ms, until_ms, series, tail
+    ) -> "tuple[list[str], int | None]":
+        """The files of ``snap`` a hinted read keeps, and the tail bound
+        (see ``load``). Manifest-level data skipping (Delta/Iceberg file
+        stats) drops files the hint provably cannot match BEFORE Spark
+        ever lists or plans them: at 100 TB a job's planning cost becomes
+        O(matching files), not O(table files), and Spark's own partition
+        pruning and row-group skipping still run on whatever survives.
+        The kept files hold a SUPERSET of the matching rows; callers
+        apply exact filters. The last/first family then keeps only the
+        files that can hold each series' top n (the reference's
+        newest-shard walk)."""
+        files = snap.files
+        if since_ms is not None or until_ms is not None or series is not None:
+            files = [
+                f
+                for f in files
+                if self._file_may_match(f, snap.stats.get(f), since_ms, until_ms, series)
+            ]
+        if tail is not None and table in ("ts_numeric", "ts_blob"):
+            return snapshots.tail_files(files, snap.stats, *tail)
+        return files, None
+
+    def local_files(
+        self,
+        table: str,
+        keys,
+        rels=None,
+        *,
+        since_ms: Optional[int] = None,
+        until_ms: Optional[int] = None,
+        tail: "tuple[str, int] | None" = None,
+    ) -> "dict[str, list[str]] | None":
+        """The files a driver-side read takes, as absolute paths grouped
+        by partition value (``series_id`` for the TS tables, ``id`` for
+        the KV tables) for each of ``keys``: the relpaths ``rels`` of
+        the current snapshot, or else the files ONE snapshot keeps for
+        the scan hints (``_scan_files``, the decision ``load`` makes).
+
+        None — read with Spark — when the files total more than
+        ``_DRIVER_MAX_BYTES``, one vanished, a file lies outside a
+        partition of the key column, or the table has a column mapping
+        or a pre-manifest layout. A table never written is ``{}``."""
+        snap = self._snapshot(table)
+        if snap is None:
+            return None if self._exists(table) else {}
+        if self._column_mapping(table):
+            return None
+        col = "id" if table.startswith("kv_") else "series_id"
+        if rels is None:
+            series = set(keys) if col == "series_id" else None
+            rels, _ = self._scan_files(table, snap, since_ms, until_ms, series, tail)
+        out: "dict[str, list[str]]" = {}
+        total = 0
+        real = self._path(table)
+        for rel in rels:
+            key = snapshots.rel_parts(rel).get(col)
+            if key is None:
+                return None
+            if key not in keys:
+                continue
+            path = os.path.join(real, rel)
+            try:
+                total += os.path.getsize(path)
+            except OSError:
+                return None
+            out.setdefault(key, []).append(path)
+        return out if total <= self._DRIVER_MAX_BYTES else None
+
     def _read_table(
         self,
         table: str,
@@ -1262,28 +1340,9 @@ class ZestStore:
         else:
             snap = self._snapshot(table)
         if snap is not None:
-            files = snap.files
-            bound = None
-            if since_ms is not None or until_ms is not None or series is not None:
-                # manifest-level data skipping (Delta/Iceberg file
-                # stats): drop files the hint provably cannot match
-                # BEFORE Spark ever lists or plans them. At 100 TB the
-                # job's planning cost becomes O(matching files), not
-                # O(table files) — Spark's own partition pruning and
-                # row-group skipping still run on whatever survives.
-                # Contract: the result is a SUPERSET of matching rows
-                # (whole surviving files); callers apply exact filters.
-                files = [
-                    f
-                    for f in files
-                    if self._file_may_match(
-                        f, snap.stats.get(f), since_ms, until_ms, series
-                    )
-                ]
-            if tail is not None and table in ("ts_numeric", "ts_blob"):
-                # last/first-family reads: only the files that can hold
-                # each series' top n (the reference's newest-shard walk)
-                files, bound = snapshots.tail_files(files, snap.stats, *tail)
+            files, bound = self._scan_files(
+                table, snap, since_ms, until_ms, series, tail
+            )
             if not files:
                 return _empty_df(self.spark, schema)
             # only HEAD reads are cacheable: a pinned past version must
@@ -1384,8 +1443,11 @@ class ZestStore:
         stats prove every row matches (``snapshots.window_files``) fold
         those stats: ``length`` is Σrows, ``count`` Σ(rows − null
         values), ``min``/``max`` the fold of the value bounds. Only the
-        boundary files are read (``_read_files``), and ``scan(frame)``
-        is the read's answer over them. No boundary file, no Spark job.
+        boundary files are read: ``scan(rels, frame)`` is the read's
+        answer over the snapshot's relpaths ``rels`` (None for a
+        pre-manifest table: every file), where ``frame()`` builds the
+        Spark frame over them for a caller that does not answer on the
+        driver. No boundary file, no read.
 
         Returns an int (length), a float (count), or a float or None
         (min/max over no value); a NaN is Spark's answer (NaN orders
@@ -1394,7 +1456,7 @@ class ZestStore:
         records 0.0 for a -0.0, and Spark's min/max keep the sign."""
         snap = self._snapshot(table)
         if snap is None:
-            return scan(self._read_table(table))
+            return scan(None, lambda: self._read_table(table))
         candidates = [
             f
             for f in snap.files
@@ -1419,7 +1481,7 @@ class ZestStore:
             else:
                 parts.append(v)
         if boundary:
-            got = scan(self._read_files(table, boundary))
+            got = scan(boundary, lambda: self._read_files(table, boundary))
             if got is not None:
                 parts.append(got)
         if agg == "length":
@@ -2456,12 +2518,6 @@ class ZestStore:
         removes = [rel for rel in live if snapshots.rel_parts(rel).get("id") in ids]
         self._commit(table, adds=adds, removes=removes, op=op)
 
-    #: driver budget for the KV namespace fast path — a namespace whose
-    #: live bytes exceed this is rewritten by the distributed path
-    #: (namespaces are api-written and usually KB-sized; bulk-ingested
-    #: giants keep the Spark rewrite)
-    _KV_LOCAL_MAX_BYTES = 64 * 1024 * 1024
-
     def _kv_local_rewrite(self, table: str, id_: str, mutate, op: str) -> bool:
         """Driver-side fast path for ONE namespace's read-modify-write
         (kv_upsert / kv_delete): the namespace's live files resolve
@@ -2523,7 +2579,7 @@ class ZestStore:
                 total += os.path.getsize(os.path.join(real, rel))
             except OSError:
                 return False
-        if total > self._KV_LOCAL_MAX_BYTES:
+        if total > self._DRIVER_MAX_BYTES:
             return False
         import pyarrow as pa
         import pyarrow.parquet as pq
