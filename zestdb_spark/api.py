@@ -20,7 +20,7 @@ as control-plane-sized writes do: when those files total at most
 ``ZestStore._DRIVER_MAX_BYTES`` (``ZestStore.local_files``),
 ``plans.driver`` evaluates the compiled plan over them with pyarrow and
 no Spark job runs. That covers the TS reads, ``window_stat``'s
-boundary files, and one namespace's KV ``keys``/``count``/point reads.
+boundary files, and one namespace's KV ``keys``.
 Above the budget, and for any input the driver cannot answer
 identically (``plans.driver.Fallback``), the read is one Spark scan:
 ``ZestStore.load`` with the same hints, then ``plan_to_dataframe``.
@@ -35,9 +35,6 @@ import json
 import socket
 from typing import Any, Optional
 
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from zestdb_spark import serializers
@@ -49,11 +46,6 @@ from zestdb_spark.plans import driver
 from zestdb_spark.plans import zestql as zql
 from zestdb_spark.storage import ZestStore, now_ms
 from zestdb_spark.streaming.observe import ObserverRegistry
-
-
-def _kv_value(value) -> str:
-    """A KV value as the GET answers it: binary values decode as latin-1."""
-    return bytes(value).decode("latin-1") if isinstance(value, (bytes, bytearray)) else value
 
 
 class ZestEngine:
@@ -249,9 +241,12 @@ class ZestEngine:
 
     def _get_kv(self, kind: str, parts: list[str]) -> str:
         table = f"kv_{kind}"
-        if len(parts) == 4 and kind in ("json", "text", "binary"):
+        if len(parts) == 4 and parts[3] == "keys" and kind in ("json", "text", "binary"):
+            # one driver-sized namespace's keys are read on the driver
+            files = self.store.local_files(table, {parts[2]})
             try:
-                return self._get_kv_local(table, parts[2], parts[3])
+                if files is not None:
+                    return json.dumps(driver.kv_keys(files.get(parts[2], [])))
             except driver.Fallback:
                 pass
         kv = self.store.load(table)
@@ -261,43 +256,11 @@ class ZestEngine:
             return serializers.count_to_json(kv_ops.count(kv, parts[2]))
         if len(parts) == 4:
             rows = kv_ops.read(kv, parts[2], parts[3]).collect()
-            return _kv_value(rows[0]["value"]) if rows else ""
+            if not rows:
+                return ""
+            value = rows[0]["value"]
+            return bytes(value).decode("latin-1") if isinstance(value, (bytes, bytearray)) else value
         raise BadRequest(f"unrecognized KV path {'/'.join(parts)!r}")
-
-    def _get_kv_local(self, table: str, ns: str, op: str) -> str:
-        """One namespace's ``keys``/``count``/point read on the driver.
-        ``keys`` keeps the Spark read's order, the file's row order, so
-        a namespace of several files or row groups (several scan
-        splits) stays on Spark; so does a point read that matches more
-        than one row."""
-        parts = self.store.local_files(table, {ns})
-        if parts is None:
-            raise driver.Fallback(f"{table} namespace is not driver-sized")
-        paths = parts.get(ns, [])
-        try:
-            if op == "count":
-                rows = 0
-                for path in paths:
-                    with pq.ParquetFile(path) as f:
-                        rows += f.metadata.num_rows
-                return json.dumps({"count": rows})
-            col = "key" if op == "keys" else "value"
-            got = []
-            for path in paths:
-                with pq.ParquetFile(path) as f:
-                    if op == "keys" and (len(paths) > 1 or f.num_row_groups > 1):
-                        raise driver.Fallback("keys over several scan splits")
-                    t = f.read(columns=["key", "value"])
-                if op != "keys":
-                    t = t.filter(pc.equal(t["key"], op))
-                got += t[col].to_pylist()
-        except (OSError, KeyError, ValueError, pa.ArrowException) as e:
-            raise driver.Fallback(f"unreadable namespace: {e}") from e
-        if op == "keys":
-            return json.dumps(got)
-        if len(got) > 1:
-            raise driver.Fallback("several rows for one key")
-        return _kv_value(got[0]) if got else ""
 
     # --------------------------------------------------------------- POST
 

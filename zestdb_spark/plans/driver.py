@@ -15,16 +15,15 @@ depend on are reproduced here:
   ``decimal(38,6)``, rounding HALF_UP; NaN and ±inf cast to NULL and
   drop out. ``mean`` divides that sum by the count of non-null values,
   NaN included;
-- ``median`` is Spark's ``percentile`` interpolation;
-- ``sd`` is ``ts_agg``'s floor-quantized sample deviation. It is
-  answered only when every value Spark's one-pass algorithm can
-  produce within its error bound floors to the same 6-dp result.
+- ``median`` is Spark's ``percentile`` interpolation.
 
 Whatever the driver cannot answer identically raises ``Fallback``, and
 the caller runs the Spark plan. That covers a vanished or unreadable
 file, a sum outside ``decimal(38,6)`` (Spark raises
-NUMERIC_VALUE_OUT_OF_RANGE), a non-finite ``sd`` input, and a -0.0
-beside a +0.0, whose order Spark leaves to its input order.
+NUMERIC_VALUE_OUT_OF_RANGE), a -0.0 beside a +0.0, whose order Spark
+leaves to its input order, and every ``sd``: Spark's one-pass variance
+rounds in ways an exact driver answer would not reproduce at the 6th
+decimal.
 
 ``read_tail`` and ``top_n`` are also the ``zest_tail`` source's reader
 (sources/tail_source.py): the pyarrow read logic exists once.
@@ -61,7 +60,6 @@ _TYPES = {
 _DEC_LIMIT = 10**38
 _DEC_CTX = Context(prec=80, rounding=ROUND_HALF_UP)
 _MICRO = Decimal("0.000001")
-_EPS = 2.0**-53
 
 
 class Fallback(Exception):
@@ -174,6 +172,24 @@ def read_window(paths, cols, since=None, until=None) -> pa.Table:
     return pa.concat_tables(tables) if tables else canonical.empty_table()
 
 
+def kv_keys(paths) -> list:
+    """One KV namespace's keys (``paths``: its files) in the Spark
+    read's order, the file's row order. A namespace of several files or
+    row groups is several scan splits, whose order Spark leaves to its
+    tasks: ``Fallback``."""
+    if not paths:
+        return []
+    if len(paths) > 1:
+        raise Fallback("keys over several scan splits")
+    try:
+        with pq.ParquetFile(paths[0]) as f:
+            if f.num_row_groups > 1:
+                raise Fallback("keys over several scan splits")
+            return f.read(columns=["key"])["key"].to_pylist()
+    except (OSError, KeyError, ValueError, pa.ArrowException) as e:
+        raise Fallback(f"unreadable namespace: {e}") from e
+
+
 def _mixed_zeros(values) -> bool:
     """Does ``values`` hold both a -0.0 and a +0.0? Spark compares them
     equal, so which one it orders, keeps or returns first depends on
@@ -195,6 +211,8 @@ def answer(plan, parts: "dict[str, list[str]]"):
     n = 1 if w.op in ("latest", "earliest") else w.n
     if tail and n < 1:
         raise Fallback("non-positive top-n")
+    if plan.agg == "sd":
+        raise Fallback("sd runs on Spark")
     pieces = []
     try:
         for sid in dict.fromkeys(plan.ids):
@@ -230,8 +248,8 @@ def answer(plan, parts: "dict[str, list[str]]"):
 
 
 def aggregate(values, agg: str):
-    """``ts_agg.AGGREGATES[agg]`` over a double column; None is the
-    NULL that renders as ``{}``."""
+    """``ts_agg.AGGREGATES[agg]`` over a double column, for every
+    aggregate but ``sd``; None is the NULL that renders as ``{}``."""
     v = pc.drop_null(values).to_numpy()
     if agg == "count":
         return float(v.size)
@@ -242,8 +260,6 @@ def aggregate(values, agg: str):
         return total / float(v.size)
     if v.size == 0:
         return None
-    if agg == "sd":
-        return _sd(v)
     nan = np.isnan(v)
     if agg == "min":
         got = float(v[~nan].min()) if not nan.all() else math.nan
@@ -299,27 +315,3 @@ def _median(s: np.ndarray) -> float:
     if hi == lo or (math.isnan(hi) and math.isnan(lo)):
         return lo
     return (higher - position) * lo + (position - lower) * hi
-
-
-def _sd(v: np.ndarray):
-    """``floor(stddev_samp * 1e6) / 1e6`` for n ≥ 2, else None. The
-    variance is exact; Spark's one-pass update carries an error below
-    16·n·eps·Σx² in m2, and the answer stands only when every
-    deviation within that bound floors alike."""
-    n = v.size
-    if n < 2:
-        return None
-    if not np.isfinite(v).all():
-        raise Fallback("non-finite sd input")
-    ratios = [float(x).as_integer_ratio() for x in v]
-    den = max(d for _, d in ratios)
-    xs = [num * (den // d) for num, d in ratios]
-    s1 = sum(xs)
-    s2 = sum(x * x for x in xs)
-    var = (n * s2 - s1 * s1) / (n * (n - 1) * den * den)
-    err = 16 * n * _EPS * (s2 / (den * den)) / (n - 1) + 4 * _EPS * var
-    lo = math.sqrt(max(0.0, var - err)) * (1 - 4 * _EPS)
-    hi = math.sqrt(var + err) * (1 + 4 * _EPS)
-    if hi * 1e6 >= 2.0**53 or math.floor(lo * 1e6) != math.floor(hi * 1e6):
-        raise Fallback("sd within its error bound of a 6-dp step")
-    return math.floor(hi * 1e6) / 1e6

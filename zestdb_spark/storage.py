@@ -1295,22 +1295,34 @@ class ZestStore:
         if rels is None:
             series = set(keys) if col == "series_id" else None
             rels, _ = self._scan_files(table, snap, since_ms, until_ms, series, tail)
-        out: "dict[str, list[str]]" = {}
-        total = 0
-        real = self._path(table)
+        picked = []
         for rel in rels:
             key = snapshots.rel_parts(rel).get(col)
             if key is None:
                 return None
-            if key not in keys:
-                continue
-            path = os.path.join(real, rel)
+            if key in keys:
+                picked.append((key, rel))
+        paths = self._driver_paths(table, [rel for _, rel in picked])
+        if paths is None:
+            return None
+        out: "dict[str, list[str]]" = {}
+        for (key, _), path in zip(picked, paths):
+            out.setdefault(key, []).append(path)
+        return out
+
+    def _driver_paths(self, table: str, rels) -> "list[str] | None":
+        """The absolute paths of ``table``'s relpaths ``rels``, or None
+        when they total more than ``_DRIVER_MAX_BYTES`` or one vanished
+        (racing maintenance): the caller takes its Spark path."""
+        real = self._path(table)
+        paths = [os.path.join(real, rel) for rel in rels]
+        total = 0
+        for path in paths:
             try:
                 total += os.path.getsize(path)
             except OSError:
                 return None
-            out.setdefault(key, []).append(path)
-        return out if total <= self._DRIVER_MAX_BYTES else None
+        return paths if total <= self._DRIVER_MAX_BYTES else None
 
     def _read_table(
         self,
@@ -2572,22 +2584,17 @@ class ZestStore:
         Returns False, touching nothing, when ``files`` exceed the
         driver budget or one vanished (racing maintenance): the caller
         takes its distributed rewrite instead."""
-        real = self._path(table)
-        total = 0
-        for rel in files:
-            try:
-                total += os.path.getsize(os.path.join(real, rel))
-            except OSError:
-                return False
-        if total > self._DRIVER_MAX_BYTES:
+        paths = self._driver_paths(table, files)
+        if paths is None:
             return False
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        real = self._path(table)
         key, value = schema.names
         current: dict = {}
-        for rel in files:
-            t = pq.read_table(os.path.join(real, rel), columns=[key, value])
+        for path in paths:
+            t = pq.read_table(path, columns=[key, value])
             current.update(
                 zip(t.column(key).to_pylist(), t.column(value).to_pylist())
             )
