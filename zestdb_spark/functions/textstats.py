@@ -164,14 +164,6 @@ def lang_pred_from_hits(hits: "dict[str, Column]") -> Column:
     )
 
 
-def lang_pred_expr() -> Column:
-    """Single-expression form of the argmax (hit counts inlined) —
-    for contexts that cannot stage a projection; prefer
-    ``lang_hit_cols`` + ``lang_pred_from_hits`` on hot paths (see
-    ``lang_hit_cols`` for the measured cost of inlining)."""
-    return lang_pred_from_hits(lang_hit_cols())
-
-
 def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang): stopword-hit argmax with fixed precedence
     (en > es > de > fr), 'und' (undetermined) when no list hits.

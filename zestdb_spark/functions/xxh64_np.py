@@ -143,8 +143,3 @@ def xxh64_slices(
                 mat[:, length:] = 0
             out[sel] = _hash_fixed_len(mat, length, seed)
     return out
-
-
-def xxh64_spark_long(h: np.ndarray) -> np.ndarray:
-    """Reinterpret the uint64 hashes as Spark's signed long result."""
-    return h.view(np.int64)

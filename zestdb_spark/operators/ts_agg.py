@@ -42,8 +42,15 @@ def _exact_sum() -> Column:
 
 def _quant6(c: Column) -> Column:
     """Floor-quantization to 6 dp (the q6 rule): floor-via-double-math
-    agrees across engines, unlike round()'s .5×10⁻⁷ tie handling."""
-    return F.floor(c * F.lit(1_000_000.0)) / F.lit(1_000_000.0)
+    agrees across engines, unlike round()'s .5×10⁻⁷ tie handling.
+
+    The floor stays a double, as in the oracle's ``floor(x * 1e6) / 1e6``:
+    Spark's ``floor`` returns a bigint, which saturates past ~9.22e18 and
+    reads NaN as 0. A double of magnitude ≥ 2⁵² (and ±inf, NaN) is its
+    own floor, so only smaller ones go through the bigint."""
+    scaled = c * F.lit(1_000_000.0)
+    floored = F.when(F.abs(scaled) < F.lit(float(2**52)), F.floor(scaled).cast("double")).otherwise(scaled)
+    return floored / F.lit(1_000_000.0)
 
 
 AGGREGATES: dict[str, Callable[[], Column]] = {

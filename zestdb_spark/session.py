@@ -13,6 +13,10 @@ re-read of the zip archives on the worker path, and talk to the JVM over
 a Unix socket where the host has a short enough private directory for
 one; otherwise they stay on TCP loopback, whose delayed-ACK stall cost
 ~42 ms before every task's first input byte.
+
+A new driver JVM maps the Spark classes from a class-data-sharing
+archive built on this host when it can (``zestdb_spark.cds``); the first
+session of a JDK and Spark install records that archive when it stops.
 """
 
 from __future__ import annotations
@@ -22,9 +26,13 @@ import os
 import shutil
 import socket
 import tempfile
+from contextlib import contextmanager, nullcontext
 
 from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from zestdb_spark import cds
 
 #: pyspark.daemon binds ``<dir>/.<uuid4>.sock``: 43 bytes after the dir,
 #: inside the 107 usable bytes of ``sockaddr_un.sun_path``
@@ -54,18 +62,59 @@ def _worker_socket_dir(bases) -> str | None:
     return None
 
 
-def _remove_on_stop(sc: SparkContext, path: str) -> None:
-    """Delete ``path`` when ``sc`` stops, or at exit if it never does."""
+def _after_stop(sc: SparkContext, fn) -> None:
+    """Call ``fn()`` each time ``sc`` has stopped."""
     stop = sc.stop
 
-    def stop_and_remove() -> None:
+    def stop_then() -> None:
         try:
             stop()
         finally:
-            shutil.rmtree(path, ignore_errors=True)
+            fn()
 
-    sc.stop = stop_and_remove
+    sc.stop = stop_then
+
+
+def _remove_on_stop(sc: SparkContext, path: str) -> None:
+    """Delete ``path`` when ``sc`` stops, or at exit if it never does."""
+    _after_stop(sc, lambda: shutil.rmtree(path, ignore_errors=True))
     atexit.register(shutil.rmtree, path, True)
+
+
+def _dump_on_stop(sc: SparkContext, plan: cds.Plan) -> None:
+    """Record ``plan``'s archive from the driver JVM once ``sc`` has
+    stopped. The JDK prints "Dynamic dump to file ..." on the JVM's
+    ``System.out``, the caller's stdout, so the dump runs with it
+    pointed at ``System.err``."""
+    system = sc._jvm.java.lang.System
+    pid = sc._jvm.java.lang.ProcessHandle.current().pid()
+
+    def dump() -> None:
+        if not plan.recording:
+            return
+        out = system.out
+        system.setOut(system.err)
+        try:
+            plan.dump(pid)
+        finally:
+            system.setOut(out)
+
+    _after_stop(sc, dump)
+
+
+@contextmanager
+def _conf_dir_env(path: str):
+    """Point the launcher's ``SPARK_CONF_DIR`` at ``path`` while the
+    driver JVM starts."""
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if before is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = before
 
 
 def get_spark(app_name: str = "zestdb_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -134,8 +183,22 @@ def get_spark(app_name: str = "zestdb_spark", shuffle_partitions: int | None = N
         builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
             "spark.python.unix.domain.socket.dir", socket_dir
         )
-    spark = builder.getOrCreate()
+    # java options: only a new driver JVM reads them
+    jvm = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        jvm = cds.plan(_find_spark_home())
+    if jvm is not None:
+        builder = builder.config("spark.driver.extraJavaOptions", jvm.java_options)
+    try:
+        with _conf_dir_env(jvm.conf_dir) if jvm is not None else nullcontext():
+            spark = builder.getOrCreate()
+    except BaseException:
+        if jvm is not None:
+            jvm.release()
+        raise
     if socket_dir is not None:
         _remove_on_stop(spark.sparkContext, socket_dir)
+    if jvm is not None and jvm.recording:
+        _dump_on_stop(spark.sparkContext, jvm)
     spark.sparkContext.setLogLevel("WARN")
     return spark
