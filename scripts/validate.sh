@@ -2,6 +2,9 @@
 # One-shot validation: unit+property tests, full oracle selfcheck at two
 # scale factors, bench, and plan-audit regeneration.
 set -e
+# a failing selfcheck must fail the script even though its output is
+# piped through tail
+set -o pipefail
 cd "$(dirname "$0")/.."
 # size the session to this host, as ROADMAP's tier-1 verify line does;
 # unset, get_spark falls back to local[32]

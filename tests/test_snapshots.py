@@ -1,9 +1,10 @@
 """Snapshot manifest log (zestdb_spark/snapshots.py): the single-node
 table format that replaces the reference's git/Irmin transactional
 store (src/timeseries/shard.re:9-11). Pure-filesystem tests for the
-commit CAS, tombstone/vacuum lifecycle, bootstrap of pre-manifest
-layouts, and the orphan-age floor protecting lock-free appends; plus
-store-level tests for concurrent append merging and legacy upgrade."""
+commit CAS, the empty state of a table with no log, the
+tombstone/vacuum lifecycle, and the orphan-age floor protecting
+lock-free appends; plus store-level tests for concurrent append
+merging and crashed appends."""
 
 from __future__ import annotations
 
@@ -47,21 +48,26 @@ def test_removes_become_tombstones(tmp_path):
     assert os.path.exists(os.path.join(t, "f1.parquet"))
 
 
-def test_bootstrap_from_existing_layout(tmp_path):
-    """First commit on a pre-manifest table upgrades in place: the
-    directory listing becomes version 0's base."""
-    t = str(tmp_path / "legacy")
-    _touch(t, "series_id=a/time_bucket=0/part-1.parquet")
-    _touch(t, "series_id=a/time_bucket=1/part-2.parquet")
-    _touch(t, "series_id=a/time_bucket=1/.hidden.parquet")  # invisible
+def test_first_commit_starts_from_the_empty_set(tmp_path):
+    """A table with no log is the empty version -1, whatever its
+    directory holds; the first commit publishes exactly its own adds
+    as version 0, a full checkpoint."""
+    t = str(tmp_path / "t")
+    _touch(t, "series_id=a/time_bucket=0/part-1.parquet")  # staged, never committed
     _touch(t, "new.parquet")
+    empty = snapshots.latest(t)
+    assert (empty.version, empty.files, empty.tombstones) == (-1, [], {})
     snap = snapshots.commit(t, adds=["new.parquet"])
-    assert snap.version == 0
-    assert set(snap.files) == {
-        "series_id=a/time_bucket=0/part-1.parquet",
-        "series_id=a/time_bucket=1/part-2.parquet",
-        "new.parquet",
-    }
+    assert snap.version == 0 and snap.files == ["new.parquet"]
+    doc = json.load(open(os.path.join(t, "_zest_log", "v%012d.json" % 0)))
+    assert doc["files"] == ["new.parquet"] and not doc.get("delta")
+    # vacuum leaves a never-committed directory alone
+    u = str(tmp_path / "u")
+    _touch(u, "old.parquet")
+    past = time.time() - snapshots.ORPHAN_MIN_AGE_S - 10
+    os.utime(os.path.join(u, "old.parquet"), (past, past))
+    assert snapshots.vacuum(u, retention_s=0) == (0, 0)
+    assert os.path.exists(os.path.join(u, "old.parquet"))
 
 
 def test_commit_cas_merges_concurrent_adders(tmp_path):
@@ -216,38 +222,18 @@ def test_concurrent_store_appends_both_land(spark, tmp_path):
     assert rows == 7
 
 
-def test_legacy_store_upgrades_in_place(spark, tmp_path):
-    """A table written with plain parquet appends (no _zest_log — the
-    pre-manifest layout) reads via the directory fallback; its first
-    write through the store bootstraps the manifest WITHOUT losing the
-    legacy rows."""
-    import shutil
-
-    from zestdb_spark.storage import ZestStore
-
-    root = str(tmp_path / "upgrade")
-    st = ZestStore(spark, root)
-    st.write_numeric("a", {"value": 1.0}, 1000)
-    st.write_numeric("a", {"value": 2.0}, 2000)
-    # simulate the legacy layout: drop the log
-    shutil.rmtree(os.path.join(root, "ts_numeric", "_zest_log"))
-    assert snapshots.latest(os.path.join(root, "ts_numeric")) is None
-    assert st.load("ts_numeric").count() == 2  # directory fallback
-
-    st.write_numeric("a", {"value": 3.0}, 3000)  # bootstraps
-    snap = snapshots.latest(os.path.join(root, "ts_numeric"))
-    assert snap is not None and len(snap.files) == 3
-    assert sorted(r.value for r in st.load("ts_numeric").collect()) == [1.0, 2.0, 3.0]
-
-
-def test_append_crash_before_commit_is_invisible(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("first", [True, False], ids=["first_append", "later_append"])
+def test_append_crash_before_commit_is_invisible(spark, tmp_path, monkeypatch, first):
     """An append killed between staging its files and committing the
     manifest contributes NOTHING to reads (atomic multi-partition
-    appends — the plain-parquet layout could expose a partial batch)."""
+    appends — the plain-parquet layout could expose a partial batch),
+    also when it is the table's first append and no log exists yet."""
     from zestdb_spark.storage import ZestStore
 
     st = ZestStore(spark, str(tmp_path / "appcrash"))
-    st.write_numeric("a", {"value": 1.0}, 1000)
+    seed = [] if first else [1.0]
+    for v in seed:
+        st.write_numeric("a", {"value": v}, 1000)
 
     real_commit = ZestStore._commit
 
@@ -259,11 +245,11 @@ def test_append_crash_before_commit_is_invisible(spark, tmp_path, monkeypatch):
         st.write_numeric("a", {"value": 2.0}, 90_000_000)
     monkeypatch.setattr(ZestStore, "_commit", real_commit)
 
-    assert [r.value for r in st.load("ts_numeric").collect()] == [1.0]
+    assert [r.value for r in st.load("ts_numeric").collect()] == seed
     # the retried append converges; the orphaned staged file stays
     # invisible until vacuum reclaims it
     st.write_numeric("a", {"value": 2.0}, 90_000_000)
-    assert sorted(r.value for r in st.load("ts_numeric").collect()) == [1.0, 2.0]
+    assert sorted(r.value for r in st.load("ts_numeric").collect()) == seed + [2.0]
 
 
 def test_time_travel_and_restore(spark, tmp_path):
@@ -499,7 +485,7 @@ def _raw_doc(root, v):
 
 
 def test_delta_entries_between_checkpoints(tmp_path):
-    """The log is Delta-shaped: full snapshot at bootstrap and every
+    """The log is Delta-shaped: full snapshot at version 0 and every
     CHECKPOINT_EVERY versions, O(churn) delta entries between — and
     every version resolves to exactly the same state either way."""
     d = str(tmp_path / "t")

@@ -13,7 +13,7 @@ Contracts pinned here:
   series_id/time_bucket directory pruning);
 - stats survive the whole manifest life cycle: append CAS merge,
   delete rewrite, compaction, restore;
-- pruning is conservative: files without stats (pre-stats bootstrap)
+- pruning is conservative: files without stats (a pre-stats writer)
   are always kept.
 
 The reference walks a per-series interval index to skip shards
@@ -132,7 +132,7 @@ def test_stats_prune_within_one_partition_leaf(spark, tmp_path):
 
 
 def test_missing_stats_files_are_kept(spark, tmp_path):
-    """A manifest entry without stats (pre-stats writer, bootstrap)
+    """A manifest entry without stats (a pre-stats writer)
     must survive every time hint — pruning never guesses."""
     eng = ZestEngine(spark, str(tmp_path / "s"))
     eng.post("/ts/a/at/1000", {"value": 1.0})

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from zestdb_spark.api import ZestEngine
 from zestdb_spark.schema import TS_NUMERIC
 from zestdb_spark.sources import register
-from zestdb_spark.sources.tail_source import ZestTailReader, _series_dirs
+from zestdb_spark.sources.tail_source import ZestTailReader
 from tests.engine_reference import assert_engine_parity, spark_executor
 
 
@@ -161,6 +161,7 @@ def test_statless_row_groups_always_read(spark, tmp_path):
     read first and could establish a cutoff before it is reached."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from zestdb_spark import snapshots
     from zestdb_spark.sources.tail_source import ZestTailReader
 
     leaf = tmp_path / "nostats" / "series_id=s" / "time_bucket=0"
@@ -180,6 +181,12 @@ def test_statless_row_groups_always_read(spark, tmp_path):
     # old rows WITH stats; the NEWEST rows in a stats-less file
     pq.write_table(tbl(list(range(100))), leaf / "old.parquet")
     pq.write_table(tbl([10_000, 10_001]), leaf / "new.parquet", write_statistics=False)
+    # committed without manifest stats, so the planner keeps both files
+    # and only the footers decide what is read
+    snapshots.commit(
+        str(tmp_path / "nostats"),
+        adds=[f"series_id=s/time_bucket=0/{f}" for f in ("old.parquet", "new.parquet")],
+    )
 
     reader = ZestTailReader({"root": str(tmp_path / "nostats"), "series": "s", "n": "3"})
     (part,) = reader.partitions()

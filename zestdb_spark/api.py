@@ -220,12 +220,10 @@ class ZestEngine:
         w = plan.window
 
         def scan(rels, frame):
-            if rels is not None:
-                try:
-                    return self._on_driver(plan, table, rels)
-                except driver.Fallback:
-                    pass
-            return plan_to_dataframe(plan, frame()).collect()[0][0]
+            try:
+                return self._on_driver(plan, table, rels)
+            except driver.Fallback:
+                return plan_to_dataframe(plan, frame()).collect()[0][0]
 
         value = self.store.window_stat(
             table,
@@ -276,8 +274,8 @@ class ZestEngine:
         payload type: bytes→binary, str→text, JSON values→json."""
         try:
             self.authorize("POST", path, token)
-            self.store.set_request_context("POST", path, client, content_format)
-            self._post(path, payload, content_format)
+            with self.store._request("POST", path, client, content_format):
+                self._post(path, payload, content_format)
         except ZestError as e:
             self._audit("POST", path, e.code, client)
             raise
@@ -333,8 +331,8 @@ class ZestEngine:
     ) -> None:
         try:
             self.authorize("DELETE", path, token)
-            self.store.set_request_context("DELETE", path, client, content_format)
-            self._delete(path, content_format)
+            with self.store._request("DELETE", path, client, content_format):
+                self._delete(path, content_format)
         except ZestError as e:
             self._audit("DELETE", path, e.code, client)
             raise
@@ -375,8 +373,8 @@ class ZestEngine:
         store refuses is audited with its code like any other POST."""
         try:
             self.authorize("POST", path, token)
-            self.store.set_request_context("POST", path, client, None)
-            self.store.write_numeric_bulk(rows)
+            with self.store._request("POST", path, client):
+                self.store.write_numeric_bulk(rows)
         except ZestError as e:
             self._audit("POST", path, e.code, client)
             raise

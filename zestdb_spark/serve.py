@@ -139,12 +139,12 @@ def warm(spark) -> "dict[str, float]":
     try:
         eng = ZestEngine(spark, root)
         t0 = _time.monotonic()
-        eng.store.set_request_context("POST", "/kv/WARM/x", "warm", "json")
-        eng.store.kv_upsert("json", "WARM", "x", '"warm"')
+        with eng.store._request("POST", "/kv/WARM/x", "warm", "json"):
+            eng.store.kv_upsert("json", "WARM", "x", '"warm"')
         timings["first_write"] = _time.monotonic() - t0
         t0 = _time.monotonic()
-        eng.store.set_request_context("DELETE", "/kv/WARM/x", "warm", "json")
-        eng.store.kv_delete("json", "WARM", "x")  # the manifest REWRITE path
+        with eng.store._request("DELETE", "/kv/WARM/x", "warm", "json"):
+            eng.store.kv_delete("json", "WARM", "x")  # the manifest REWRITE path
         timings["first_rewrite"] = _time.monotonic() - t0
         t0 = _time.monotonic()
         eng.get("/kv/WARM/keys")  # read + serialize path
@@ -174,7 +174,7 @@ def start_maintenance(
     import threading as _threading
 
     from zestdb_spark import snapshots
-    from zestdb_spark.storage import _MANIFESTED, now_ms
+    from zestdb_spark.storage import _TABLES, now_ms
 
     ev = stop_event or _threading.Event()
     retention = (
@@ -204,7 +204,7 @@ def start_maintenance(
                 # a no-op manifest read)
                 for table in ("audit", "write_log"):
                     try:
-                        if store._exists(table) and len(store._live_files(table)) > 64:
+                        if len(store._live_files(table)) > 64:
                             store.compact_log(
                                 table, vacuum_retention_s=retention
                             )
@@ -213,7 +213,7 @@ def start_maintenance(
                             f"maintenance log-compact of {table} failed: {exc}",
                             flush=True,
                         )
-            for table in sorted(_MANIFESTED):
+            for table in sorted(_TABLES) + sorted(store._generic):
                 try:
                     store.vacuum(table, retention_s=retention)
                 except Exception as exc:  # noqa: BLE001 — keep serving

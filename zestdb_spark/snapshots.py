@@ -12,6 +12,7 @@ table-format recipe (Delta/Iceberg, simplified to a single node):
 - A table's live state is defined by a MANIFEST — a JSON file under
   ``<table>/_zest_log/`` listing every live data file (relative path).
   Readers resolve the highest version and read exactly those files;
+  a table with no log yet is empty, whatever its directory holds.
   Spark ignores the ``_zest_log`` dir in any directory-based scan
   (``_``-prefixed paths are invisible to it).
 - Writers stage new data files into the table tree first (unreferenced
@@ -38,7 +39,7 @@ table-format recipe (Delta/Iceberg, simplified to a single node):
 
 Version files are DELTA entries (this commit's adds/removes/stats —
 O(churn) metadata) with a FULL snapshot checkpointed every
-``CHECKPOINT_EVERY`` versions and at bootstrap (exactly Delta's JSON
+``CHECKPOINT_EVERY`` versions, version 0 included (exactly Delta's JSON
 log + checkpoint recipe): append cost is independent of the table's
 live file count, and resolution walks back at most one checkpoint
 interval then replays forward through the same ``_apply`` fold the
@@ -117,8 +118,8 @@ class Snapshot:
         # (Delta/Iceberg file stats): relpath -> {"rows": n,
         # "min": {col: v}, "max": {col: v}, "nulls": {col: k}}. Only
         # files whose writer collected stats appear; a reader must
-        # treat a MISSING entry as "could match anything" (pre-stats
-        # files, bootstrap).
+        # treat a MISSING entry as "could match anything" (files
+        # committed without stats).
         self.stats = stats or {}
         # per-application transaction watermarks (Delta's idempotent
         # writes: txn appId -> highest committed version). A writer
@@ -137,9 +138,11 @@ def _log_dir(table_dir: str) -> str:
 
 
 def list_data_files(table_dir: str) -> list[str]:
-    """Walk the table tree for data files (bootstrap listing for tables
-    written before the log existed). ``_``/``.`` names are skipped at
-    every level — the same visibility rule Spark applies."""
+    """Walk a directory tree for data files: the files a staged Spark
+    write produced (``ZestStore._stage_move``) and vacuum's orphan
+    sweep. Never a table's state — that is its manifest. ``_``/``.``
+    names are skipped at every level, the same visibility rule Spark
+    applies."""
     out = []
     for dirpath, dirs, names in os.walk(table_dir):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
@@ -307,11 +310,13 @@ def read_version(table_dir: str, version: int) -> "Snapshot | None":
     return snap
 
 
-def latest(table_dir: str) -> "Snapshot | None":
-    """Resolve the highest committed version, or None when the table
-    has no log (pre-manifest layout or never written)."""
+def latest(table_dir: str) -> Snapshot:
+    """Resolve the highest committed version. A table with no log has
+    never committed: it resolves to the empty version -1, whatever
+    files its directory holds, and its first commit publishes
+    version 0."""
     vs = _versions(table_dir)
-    return read_version(table_dir, vs[-1]) if vs else None
+    return read_version(table_dir, vs[-1]) if vs else Snapshot(-1, [], {})
 
 
 def history(table_dir: str) -> "list[Snapshot]":
@@ -497,8 +502,8 @@ def commit(
     """Publish the next version: live files = (current − removes) +
     adds; removed files join the tombstone map stamped now;
     ``drop_tombstones`` prunes records whose files vacuum physically
-    deleted. First commit on a pre-log table bootstraps from a tree
-    walk, so existing stores upgrade in place on their next write.
+    deleted. The first commit starts from the empty set: files in the
+    directory that no commit added stay unreferenced.
 
     ``stats`` carries per-file column statistics for the ADDED files
     (relpath -> {"rows", "min": {col: v}, "max": {col: v}}); surviving
@@ -530,15 +535,7 @@ def commit(
             time.sleep(min(0.2, 0.002 * attempt * (1 + os.getpid() % 7)))
         cur = latest(table_dir)
         add_set = set(adds)
-        if cur is None:
-            # the bootstrap listing must not claim files we are adding
-            # in this same commit (they are already on disk by now)
-            base_files = [f for f in list_data_files(table_dir) if f not in add_set]
-            base = (base_files, {}, {}, {})
-            version = 0
-        else:
-            base = (cur.files, cur.tombstones, cur.stats, cur.txns)
-            version = cur.version + 1
+        version = cur.version + 1
         now = int(time.time() * 1000)
         record = {
             "version": version,
@@ -556,12 +553,14 @@ def commit(
             record["op"] = op
         if txn is not None:
             record["txn"] = [str(txn[0]), int(txn[1])]
-        file_set, tombstones, merged_stats, merged_txns = _apply(*base, record)
+        file_set, tombstones, merged_stats, merged_txns = _apply(
+            cur.files, cur.tombstones, cur.stats, cur.txns, record
+        )
         files = sorted(file_set)
-        if cur is None or version % CHECKPOINT_EVERY == 0:
+        if version % CHECKPOINT_EVERY == 0:
             # FULL snapshot (checkpoint): one read resolves the table.
-            # The bootstrap commit must be one — its base state exists
-            # nowhere else. O(live files) metadata, amortized.
+            # Version 0 is one — no delta chain leads to it. O(live
+            # files) metadata, amortized.
             doc = {
                 "version": version,
                 "created_ms": now,
@@ -617,8 +616,10 @@ def vacuum(
     manifest references and whose mtime is older than ``retention_s``
     (a crashed writer staged them but never committed). Old manifest
     versions past retention are pruned too. Prunes emptied partition
-    dirs. Returns (files_deleted, orphans_deleted). No-op without a
-    log (nothing defines liveness, so nothing is provably dead).
+    dirs. Returns (files_deleted, orphans_deleted). No-op on a table
+    that never committed: nothing there was ever published, and its
+    directory may be a store from before the log existed, which an
+    older checkout still reads.
 
     ``dry_run=True`` computes the same counts and deletes NOTHING —
     Delta's ``VACUUM ... DRY RUN``, the look-before-you-reclaim an
@@ -633,7 +634,7 @@ def vacuum(
     table's rewrite lock (ZestStore.vacuum) pass False while it is
     held; orphans are reclaimed by the next uncontended vacuum."""
     snap = latest(table_dir)
-    if snap is None:
+    if snap.version < 0:
         return (0, 0)
     now = time.time()
     cutoff_ms = (now - retention_s) * 1000

@@ -176,10 +176,9 @@ class ZestChangesStreamReader(DataSourceStreamReader):
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        snap = snapshots.latest(self.root)
-        if snap is None:  # table not written yet — hold at the start
-            return {"version": self.starting}
-        head = snap.version
+        # a table not written yet (version -1), or still behind the
+        # starting version, holds at the start
+        head = max(snapshots.latest(self.root).version, self.starting)
         if self.max_versions is not None and self._cursor is not None:
             head = min(head, self._cursor + self.max_versions)
         return {"version": head}

@@ -11,13 +11,14 @@ axis, because "newest n rows" isn't a static predicate.
 This PySpark Python Data Source (Spark 4 ``pyspark.sql.datasource``)
 restores the reference's access pattern at cluster scale:
 
-- **planning**: one :class:`InputPartition` per requested series — the
-  series_id= dirs are pruned by listing, and Spark schedules each
-  series tail as an independent task (embarrassingly parallel across
-  series, like everything else in the engine). On a manifested store
-  each partition holds only the files whose manifest stats can hold
-  the series' top n (``snapshots.tail_files`` — the same decision the
-  engine's canonical scan makes for its ``tail`` hint).
+- **planning**: one :class:`InputPartition` per requested series that
+  the table's manifest names, and Spark schedules each series tail as
+  an independent task (embarrassingly parallel across series, like
+  everything else in the engine). Each partition holds only the
+  series' live files whose manifest stats can hold its top n
+  (``snapshots.tail_files`` — the same decision the engine's
+  canonical scan makes for its ``tail`` hint). A table with no log
+  plans no partitions.
 - **reading**: parquet FOOTERS first. Row groups across the series'
   files are ordered by their max(timestamp) statistic, newest first,
   and read one at a time until the accumulated rows provably contain
@@ -51,7 +52,6 @@ Usage::
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
@@ -80,24 +80,6 @@ class _SeriesTail(InputPartition):
         self.cols = cols  # data columns of the table layout
 
 
-def _series_dirs(root: str) -> dict[str, str]:
-    out = {}
-    for name in sorted(os.listdir(root)):
-        full = os.path.join(root, name)
-        if name.startswith("series_id=") and os.path.isdir(full):
-            out[unquote(name[len("series_id="):])] = full
-    return out
-
-
-def _parquet_files(series_dir: str) -> list[str]:
-    files = []
-    for dirpath, _dirs, names in os.walk(series_dir):
-        for f in sorted(names):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                files.append(os.path.join(dirpath, f))
-    return files
-
-
 class ZestTailReader(DataSourceReader):
     def __init__(self, options):
         self.root = options["root"]
@@ -115,41 +97,32 @@ class ZestTailReader(DataSourceReader):
 
     def partitions(self):
         cols = _LAYOUTS[self.table][0]
-        # snapshot-manifest stores (the normal case): plan the
-        # manifest's live files — a dir walk would resurrect tombstoned
-        # files a delete already committed away — narrowed to those
-        # whose stats can hold the series' top n, the same decision
-        # the engine's scan makes (snapshots.tail_files), so the
-        # footer pass below opens only candidate files. The legacy
-        # walk remains only for pre-manifest layouts.
+        # plan the manifest's live files — a dir walk would resurrect
+        # tombstoned files a delete already committed away, and files
+        # a failed append staged — narrowed to those whose stats can
+        # hold the series' top n, the same decision the engine's scan
+        # makes (snapshots.tail_files), so the footer pass below opens
+        # only candidate files
         from zestdb_spark import snapshots
 
         snap = snapshots.latest(self.root)
-        if snap is not None:
-            by_series: dict[str, list[str]] = {}
-            for rel in snap.files:
-                sid = snapshots.rel_parts(rel).get("series_id")
-                if sid is not None:
-                    by_series.setdefault(sid, []).append(rel)
-            wanted = self.series if self.series is not None else sorted(by_series)
+        by_series: dict[str, list[str]] = {}
+        for rel in snap.files:
+            sid = snapshots.rel_parts(rel).get("series_id")
+            if sid is not None:
+                by_series.setdefault(sid, []).append(rel)
+        wanted = self.series if self.series is not None else sorted(by_series)
 
-            def candidates(s: str) -> list[str]:
-                rels, _ = snapshots.tail_files(by_series[s], snap.stats, self.mode, self.n)
-                return [os.path.join(self.root, rel) for rel in rels]
+        def candidates(s: str) -> list[str]:
+            rels, _ = snapshots.tail_files(by_series[s], snap.stats, self.mode, self.n)
+            return [os.path.join(self.root, rel) for rel in rels]
 
-            return [
-                _SeriesTail(s, candidates(s), self.n, self.mode, cols)
-                for s in wanted
-                if s in by_series
-            ]
-        dirs = _series_dirs(self.root)
-        wanted = self.series if self.series is not None else sorted(dirs)
         # missing series plan to zero partitions — empty result, like the
         # reference's empty-shard read (not an error)
         return [
-            _SeriesTail(s, _parquet_files(dirs[s]), self.n, self.mode, cols)
+            _SeriesTail(s, candidates(s), self.n, self.mode, cols)
             for s in wanted
-            if s in dirs
+            if s in by_series
         ]
 
     def read(self, partition: _SeriesTail):

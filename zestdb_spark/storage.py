@@ -19,7 +19,10 @@ table tree (invisible), then publishes an atomic snapshot manifest
 variant). Readers resolve one manifest and see a CONSISTENT
 cross-partition snapshot; rewrites tombstone replaced files instead
 of deleting them, so overlapping readers keep their pinned file set
-(``vacuum`` reclaims past a retention window). The API is
+(``vacuum`` reclaims past a retention window). A table is exactly
+its manifest: one with no log reads empty, and no path adopts files
+no manifest names, so a write that fails before its commit — the
+table's first included — never reaches a table read. The API is
 format-agnostic — swap the stage/commit seam for table-format calls
 without touching callers.
 
@@ -118,6 +121,15 @@ def _type_has_map(dt) -> bool:
         return any(_type_has_map(f.dataType) for f in dt.fields)
     return False
 
+#: the built-in tables. Every table — these and every ``create_table``
+#: table — is exactly its snapshot manifest (snapshots.py): the data
+#: tables need it for cross-partition rewrite atomicity, and the two
+#: append-only logs (audit, write_log) so a crashed append never leaves
+#: a torn half-visible batch (their appends are lock-free CAS merges
+#: like any other append). The audit observer stream
+#: (streaming/observe.py) still watches the DIRECTORY: data files land
+#: in place, and the log lives under the _-prefixed dir Spark's file
+#: index treats as hidden.
 _TABLES = {
     "ts_numeric": S.TS_NUMERIC,
     "ts_blob": S.TS_BLOB,
@@ -132,28 +144,6 @@ _TABLES = {
 #: tables whose stored rows carry a hidden ``write_id`` provenance stamp
 #: (pruned from canonical ``load()``; see ``load_with_provenance``)
 _STAMPED = ("ts_numeric", "ts_blob")
-
-#: tables under snapshot-manifest control (snapshots.py) — as of round
-#: 8, EVERY table, one format for everything. The data tables need it
-#: for cross-partition rewrite atomicity; the two append-only logs
-#: (audit, write_log) gained it so a crashed append can never leave a
-#: torn half-visible batch to a directory-listing read (their appends
-#: are lock-free CAS merges like any other append). The audit
-#: observer stream (streaming/observe.py) still watches the DIRECTORY
-#: — manifest files live under the _-prefixed log dir Spark's file
-#: index treats as hidden, and data files land in place as before.
-_MANIFESTED = frozenset(
-    (
-        "ts_numeric",
-        "ts_blob",
-        "kv_json",
-        "kv_text",
-        "kv_binary",
-        "catalog_items",
-        "audit",
-        "write_log",
-    )
-)
 
 #: columns whose per-file min/max are recorded in the manifest at
 #: commit time (Delta/Iceberg file statistics). ``timestamp`` is the
@@ -546,7 +536,7 @@ class ZestStore:
         return m.get(col, col) if m else col
 
     def _is_manifested(self, table: str) -> bool:
-        return table in _MANIFESTED or self._generic_entry(table) is not None
+        return table in _TABLES or self._generic_entry(table) is not None
 
     def _schema_of(self, table: str):
         base = _TABLES.get(table)
@@ -1162,21 +1152,14 @@ class ZestStore:
         ):
             yield
 
-    def _snapshot(self, table: str) -> "snapshots.Snapshot | None":
-        """Current manifest of a manifested table (None = no log yet —
-        a pre-manifest layout or a never-written table)."""
-        if not self._is_manifested(table):
-            return None
+    def _snapshot(self, table: str) -> "snapshots.Snapshot":
+        """Current manifest of ``table`` — the table's whole state. A
+        table with no log yet is the empty version -1 (never written;
+        files no manifest names are never read)."""
         return snapshots.latest(self._path(table))
 
     def _exists(self, table: str) -> bool:
-        snap = self._snapshot(table)
-        if snap is not None:
-            return bool(snap.files)
-        p = self._path(table)
-        return os.path.isdir(p) and any(
-            not f.startswith((".", "_")) for f in os.listdir(p)
-        )
+        return bool(self._snapshot(table).files)
 
     @staticmethod
     def _file_may_match(
@@ -1284,11 +1267,9 @@ class ZestStore:
 
         None — read with Spark — when the files total more than
         ``_DRIVER_MAX_BYTES``, one vanished, a file lies outside a
-        partition of the key column, or the table has a column mapping
-        or a pre-manifest layout. A table never written is ``{}``."""
+        partition of the key column, or the table has a column mapping.
+        A table never written is ``{}``."""
         snap = self._snapshot(table)
-        if snap is None:
-            return None if self._exists(table) else {}
         if self._column_mapping(table):
             return None
         col = "id" if table.startswith("kv_") else "series_id"
@@ -1333,67 +1314,57 @@ class ZestStore:
         series=None,
         tail: "tuple[str, int] | None" = None,
     ) -> DataFrame:
-        """Full-read-schema frame of a table. Manifested tables read
-        EXACTLY the manifest's file set (one consistent snapshot,
-        pinned at DataFrame creation — a rewrite committing later
-        cannot tear this read because its replaced files are
-        tombstoned, not deleted, until vacuum); unmanifested tables
-        fall back to the directory scan. ``version`` pins a PAST
+        """Full-read-schema frame of a table: EXACTLY the manifest's
+        file set (one consistent snapshot, pinned at DataFrame
+        creation — a rewrite committing later cannot tear this read
+        because its replaced files are tombstoned, not deleted, until
+        vacuum); a table with no log reads empty. ``version`` pins a PAST
         manifest (time travel — Delta's VERSION AS OF; the reference's
         store is a git repo where every write is a commit, so reading
         an old tree is native there, shard.re:9-11). Past versions are
         readable while their manifests and tombstoned files survive
         vacuum's retention; a reclaimed version fails loudly here, not
         deep in a scan."""
-        path = self._path(table)
-        schema = self._read_schema(table)
         if version is not None:
             snap = self._pinned(table, version, "readable")
         else:
             snap = self._snapshot(table)
-        if snap is not None:
-            files, bound = self._scan_files(
-                table, snap, since_ms, until_ms, series, tail
+        files, bound = self._scan_files(table, snap, since_ms, until_ms, series, tail)
+        if not files:
+            return _empty_df(self.spark, self._read_schema(table))
+        # only HEAD reads are cacheable: a pinned past version must
+        # re-run the reclaimed-files check above every time (its
+        # tombstoned files may vacuum away while an entry idles)
+        key = None
+        if version is None:
+            key = (
+                table,
+                snap.version,
+                since_ms,
+                until_ms,
+                None if series is None else frozenset(series),
+                tail,
             )
-            if not files:
-                return _empty_df(self.spark, schema)
-            # only HEAD reads are cacheable: a pinned past version must
-            # re-run the reclaimed-files check above every time (its
-            # tombstoned files may vacuum away while an entry idles)
-            key = None
-            if version is None:
-                key = (
-                    table,
-                    snap.version,
-                    since_ms,
-                    until_ms,
-                    None if series is None else frozenset(series),
-                    tail,
-                )
-                with self._reader_lock:
-                    cached = self._reader_cache.get(key)
-                    if cached is not None:
-                        self._reader_cache.move_to_end(key)
-                        return cached
-            df = self._read_files(table, files)
-            if bound is not None:
-                # the tail bound reaches parquet as a pushed filter, so
-                # row groups inside a large surviving file are skipped
-                # too; null timestamps sort first in "first" order
-                ts = F.col("timestamp")
-                df = df.filter(
-                    ts.isNull() | (ts >= bound if tail[0] == "last" else ts <= bound)
-                )
-            if key is not None:
-                with self._reader_lock:
-                    self._reader_cache[key] = df
-                    while len(self._reader_cache) > self._READER_CACHE_MAX:
-                        self._reader_cache.popitem(last=False)
-            return df
-        if not self._exists(table):
-            return _empty_df(self.spark, schema)
-        scan_schema, restore = self._scan_schema(table, schema)
-        return restore(self.spark.read.schema(scan_schema).parquet(path))
+            with self._reader_lock:
+                cached = self._reader_cache.get(key)
+                if cached is not None:
+                    self._reader_cache.move_to_end(key)
+                    return cached
+        df = self._read_files(table, files)
+        if bound is not None:
+            # the tail bound reaches parquet as a pushed filter, so row
+            # groups inside a large surviving file are skipped too;
+            # null timestamps sort first in "first" order
+            ts = F.col("timestamp")
+            df = df.filter(
+                ts.isNull() | (ts >= bound if tail[0] == "last" else ts <= bound)
+            )
+        if key is not None:
+            with self._reader_lock:
+                self._reader_cache[key] = df
+                while len(self._reader_cache) > self._READER_CACHE_MAX:
+                    self._reader_cache.popitem(last=False)
+        return df
 
     def load(
         self,
@@ -1456,10 +1427,10 @@ class ZestStore:
         those stats: ``length`` is Σrows, ``count`` Σ(rows − null
         values), ``min``/``max`` the fold of the value bounds. Only the
         boundary files are read: ``scan(rels, frame)`` is the read's
-        answer over the snapshot's relpaths ``rels`` (None for a
-        pre-manifest table: every file), where ``frame()`` builds the
-        Spark frame over them for a caller that does not answer on the
-        driver. No boundary file, no read.
+        answer over the snapshot's relpaths ``rels``, where ``frame()``
+        builds the Spark frame over them for a caller that does not
+        answer on the driver. No boundary file, no read; a table never
+        written folds nothing.
 
         Returns an int (length), a float (count), or a float or None
         (min/max over no value); a NaN is Spark's answer (NaN orders
@@ -1467,8 +1438,6 @@ class ZestStore:
         fold, or whose folded bound is 0.0, is read instead: pyarrow
         records 0.0 for a -0.0, and Spark's min/max keep the sign."""
         snap = self._snapshot(table)
-        if snap is None:
-            return scan(None, lambda: self._read_table(table))
         candidates = [
             f
             for f in snap.files
@@ -1617,10 +1586,25 @@ class ZestStore:
     def set_request_context(
         self, method: str, path: str, client: str, content_format: Optional[str] = None
     ) -> None:
-        """Record the request that the next mutation(s) execute under —
-        called by the engine facade at dispatch; direct store callers
-        that skip it get a DIRECT/<table> provenance row."""
+        """Record the request that later mutations execute under — for
+        a caller driving the store directly on behalf of one client —
+        until the next call or the end of the next engine request; a
+        mutation with no context gets a DIRECT/<table> provenance row."""
         self._ctx = (method, path, client, content_format)
+
+    @contextlib.contextmanager
+    def _request(
+        self, method: str, path: str, client: str, content_format: Optional[str] = None
+    ):
+        """The request context of the mutations inside the block only
+        (the engine facade's dispatch, streaming ingest's batches):
+        cleared on exit, so a later direct mutation is never logged
+        under a finished request."""
+        self._ctx = (method, path, client, content_format)
+        try:
+            yield
+        finally:
+            self._ctx = None
 
     def _next_write_id(self) -> int:
         """Monotonic batch id, seeded from the durable log (single-writer
@@ -1783,7 +1767,7 @@ class ZestStore:
         rels = list(rels)
         if len(rels) > 64:
             # footer reads are tiny I/O round trips — a bulk commit
-            # (bootstrap, big ingest) collects them concurrently
+            # (a big ingest, a restore) collects them concurrently
             # instead of serially (~0.14 ms/file serial; threads cut
             # wall time ~8×). Per-write commits skip the pool cost.
             from concurrent.futures import ThreadPoolExecutor
@@ -1824,10 +1808,8 @@ class ZestStore:
         number of files rewritten."""
         real = self._path(table)
         with self._rewrite_lock(table):
-            live = self._live_files(table)
             snap = self._snapshot(table)
-            stats = snap.stats if snap is not None else {}
-            candidates = [f for f in live if may(f, stats.get(f))]
+            candidates = [f for f in snap.files if may(f, snap.stats.get(f))]
             touched: list[str] = []
             if candidates:
                 scan = self._read_files(table, candidates).withColumn(
@@ -1900,14 +1882,10 @@ class ZestStore:
         self._commit(table, adds=[rel], op="append")
 
     def _live_files(self, table: str) -> list[str]:
-        """The table's live file set, bootstrapping the manifest from
-        the directory layout on first contact (pre-manifest stores
-        upgrade in place here) — called by REWRITES before computing
-        their removes, under the table lock."""
-        snap = self._snapshot(table)
-        if snap is None:
-            snap = self._commit(table, op="bootstrap")
-        return snap.files
+        """The current manifest's live file set (empty for a table
+        never written) — called by REWRITES before computing their
+        removes, under the table lock. Reading it commits nothing."""
+        return self._snapshot(table).files
 
     def history(self, table: str) -> "list[snapshots.Snapshot]":
         """The table's retained commit log, newest first (version,
@@ -1992,9 +1970,8 @@ class ZestStore:
         if version is not None:
             snap = self._pinned(table, version, "clonable")
         else:
-            self._live_files(table)  # bootstrap pre-manifest layouts
             snap = self._snapshot(table)
-        files = list(snap.files) if snap is not None else []
+        files = list(snap.files)
         dst_dir = dest._path(table)
         if self._generic_entry(table) is not None:
             # the clone must be self-describing too: carry the meta
@@ -2009,11 +1986,7 @@ class ZestStore:
                 os.link(src, dst)
             except OSError:  # cross-device (EXDEV) or FS without links
                 shutil.copy2(src, dst)
-        stats = (
-            {rel: snap.stats[rel] for rel in files if rel in snap.stats}
-            if snap is not None
-            else {}
-        )
+        stats = {rel: snap.stats[rel] for rel in files if rel in snap.stats}
         return snapshots.commit(
             dst_dir, adds=files, op="clone", stats=stats or None
         )
@@ -2063,8 +2036,6 @@ class ZestStore:
         for v in (from_version, to_version):
             if v is None:
                 snap = self._snapshot(table)
-                if snap is None:
-                    raise BadRequest(f"{table!r} has no snapshot log yet")
             else:
                 snap = snapshots.read_version(path, v)
                 if snap is None:
@@ -2219,7 +2190,6 @@ class ZestStore:
         without a scan — never guessed)."""
         if not self._is_manifested(table):
             raise KeyError(f"{table!r} is not under snapshot control")
-        self._live_files(table)  # bootstrap pre-manifest layouts
         snap = self._snapshot(table)
         root = self._path(table)
         n_bytes = 0
@@ -2345,10 +2315,7 @@ class ZestStore:
         schema = _arrow_ts_local_schema(table)
         groups: dict[tuple, list[tuple]] = {}
         for r in rows:
-            sid = r[0]
-            ts = int(r[1])
-            bucket = ts // _DAY_MS if ts >= 0 else -((-ts) // _DAY_MS)
-            groups.setdefault((sid, bucket), []).append(r)
+            groups.setdefault((r[0], _bucket_of(r[1])), []).append(r)
         adds = []
         for (sid, bucket), grp in sorted(groups.items()):
             rel_dir = f"series_id={_escape_part(sid)}/time_bucket={bucket}"
@@ -2401,8 +2368,7 @@ class ZestStore:
         record, which is the whole exactly-once argument."""
         if not self._is_manifested(table):
             raise KeyError(f"{table!r} is not under snapshot control")
-        snap = self._snapshot(table)
-        return None if snap is None else snap.txns.get(app_id)
+        return self._snapshot(table).txns.get(app_id)
 
     def write_blob(
         self, series_id: str, payload: Any, timestamp: Optional[int] = None
@@ -2541,9 +2507,7 @@ class ZestStore:
         the append glob). Runs under the caller's rewrite lock.
 
         Returns False — caller falls back to the Spark rewrite — when
-        the namespace exceeds the driver budget or any live file
-        predates id-partitioning (a pre-manifest layout the fast path's
-        partition-scoped file listing would misread).
+        the namespace exceeds the driver budget.
 
         Why it exists: a per-request Spark namespace rewrite pays
         ~1-2 s of job overhead to move a handful of KB (measured round
@@ -2551,13 +2515,11 @@ class ZestStore:
         the semantics are MERGE INTO — this fast path is the
         single-row MERGE special case every table format special-cases
         the same way (Delta's low-shuffle merge)."""
-        old = []
-        for rel in self._live_files(table):
-            parts = snapshots.rel_parts(rel)
-            if "id" not in parts:
-                return False  # legacy un-partitioned file: Spark path reads it
-            if parts["id"] == id_:
-                old.append(rel)
+        old = [
+            rel
+            for rel in self._live_files(table)
+            if snapshots.rel_parts(rel).get("id") == id_
+        ]
         return self._local_fold_rewrite(
             table,
             f"id={_escape_part(id_)}",

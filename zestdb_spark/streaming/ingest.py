@@ -121,8 +121,8 @@ def start_ingest(
             return  # redelivered batch — its marker is in the manifest
         if not batch_df.head(1):
             return
-        store.set_request_context("POST", f"{path}/ck/{ck_digest}/batch/{batch_id}", client, None)
-        store.write_numeric_bulk(batch_df, txn=(app_id, batch_id))
+        with store._request("POST", f"{path}/ck/{ck_digest}/batch/{batch_id}", client):
+            store.write_numeric_bulk(batch_df, txn=(app_id, batch_id))
         last = batch_id
 
     writer = good.writeStream.foreachBatch(sink).option(
